@@ -323,10 +323,7 @@ object Bench {
       // rules counts once, so this number always agrees with the
       // detailed record's two lists (ADVICE r13)
       (sentinelFlagged ++ loadFlagged).distinct.length, verdict))
-    graft.queries.OperatorQueries.reset(spark)
-    graft.queries.TextQueries.reset(spark)
-    graft.queries.SimilarityQueries.reset(spark)
-    graft.queries.RelationalQueries.reset(spark)
+    Shared.reset(spark)
     spark.stop()
   }
 

@@ -211,16 +211,8 @@ object BenchConcurrent {
       System.err.println(s"[bench-conc] could not write $outPath: ${e.getMessage}")
     }
     println(line.take(1900))
-    graft.queries.OperatorQueries.reset(spark)
-    graft.queries.TextQueries.reset(spark)
-    graft.queries.SimilarityQueries.reset(spark)
-    graft.queries.RelationalQueries.reset(spark)
-    sessions.foreach { s =>
-      graft.queries.OperatorQueries.reset(s)
-      graft.queries.TextQueries.reset(s)
-      graft.queries.SimilarityQueries.reset(s)
-      graft.queries.RelationalQueries.reset(s)
-    }
+    Shared.reset(spark)
+    sessions.foreach(Shared.reset)
     spark.stop()
     if (mismatches.nonEmpty || bleed.nonEmpty) sys.exit(1)
   }

@@ -68,10 +68,7 @@ object DebugLoopCost {
         f"jobs=${best._3}%3d jobSec=${best._4}%6.2f gapSec=${best._5}%6.2f " +
         f"codegen=$codegen (min of 3)")
     }
-    graft.queries.OperatorQueries.reset(spark)
-    graft.queries.TextQueries.reset(spark)
-    graft.queries.SimilarityQueries.reset(spark)
-    graft.queries.RelationalQueries.reset(spark)
+    Shared.reset(spark)
     spark.stop()
   }
 }

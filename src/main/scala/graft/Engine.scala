@@ -24,64 +24,23 @@ object Tables {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings")
 
-  /** Per-session reader cache: (dir, name) → analyzed DataFrame.
-    *
-    * `spark.read.parquet` pays a driver-side file listing plus a footer
-    * schema read on EVERY call (~60–120 ms warm per table on this box).
-    * The registry builds each table reference fresh inside every query
-    * function, so one bench pass re-did that metadata work thousands of
-    * times (Catalog.registerAll alone is 10 reads ≈ 0.75 s, paid by each
-    * TPC-H-shape entry per pass — measured in DebugBuildCost). Caching
-    * the ANALYZED PLAN (never data: no .persist here, every action still
-    * scans parquet) is the file-listing remedy of guide §6, applied at
-    * the driver.
-    *
-    * Contract: one data generation per (session, dir). The probe/test
-    * tooling that rewrites a dir (GenScaleProbe, warehouse specs) runs
-    * in its own JVM or reads via fresh `spark.read` calls; anything else
-    * can call [[invalidate]] after an in-session rewrite.
-    *
-    * Lifecycle (r15, ADVICE r14): the r14 version keyed a WeakHashMap by
-    * session, but the cached DataFrames strongly reference their session
-    * through Dataset.queryExecution, so the weak keys could never be
-    * collected and every short-lived test session leaked for the JVM
-    * lifetime. The map is now plainly strong, and every access sweeps
-    * entries whose session has been STOPPED (sparkContext.isStopped —
-    * the observable end of a session's life), bounding retention to live
-    * sessions plus at most one stopped epoch. */
-  private val readerCache =
-    scala.collection.mutable.Map.empty[SparkSession,
-      scala.collection.mutable.Map[(String, String), DataFrame]]
-
-  private def cached(spark: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame = readerCache.synchronized {
-    readerCache.filterInPlace((s, _) =>
-      try !s.sparkContext.isStopped
-      catch { case scala.util.control.NonFatal(_) => false })
-    readerCache
-      .getOrElseUpdate(spark,
-        scala.collection.mutable.Map.empty[(String, String), DataFrame])
-      .getOrElseUpdate((dir, name), build)
-  }
-
-  /** Drop cached readers (all sessions) for `dir` — call after rewriting
-    * a directory that was already read through [[table]] in a live
-    * session. Wired into the write paths that can target a table dir
-    * (WarehouseWriter) and into Catalog.registerAll (r15, ADVICE r14 —
-    * the lever existed but had zero callers). */
-  def invalidate(dir: String): Unit = readerCache.synchronized {
-    readerCache.values.foreach(m =>
-      m.keys.filter(_._1 == dir).toSeq.foreach(m.remove))
-  }
-
+  /** Reader entries of [[Shared]]: `spark.read.parquet` pays a
+    * driver-side file listing plus a footer schema read on every call
+    * (~60–120 ms warm per table), and the registry builds each table
+    * reference inside every query function. The memo keeps the analyzed
+    * plan (never data: no `.persist`, every action still scans parquet),
+    * so each (session, dir, table) pays that metadata work once. After
+    * rewriting a dir read here, call [[Shared.invalidate]] (the
+    * `WarehouseWriter` write paths do). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else cached(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
+    else Shared.frame(spark, dir, name)(
+      spark.read.parquet(s"$dir/$name.parquet"))
 
   /** Events stream table with `ts` as microsecond TIMESTAMP_NTZ
     * (DuckDB-equivalent) regardless of the file's physical encoding. */
   def events(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "events") {
+    Shared.frame(spark, dir, "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // timestamp_ntz keeps parquet output isAdjustedToUTC=false, the same
       // physical annotation DuckDB writes/reads — so oracle compares line up.
@@ -95,4 +54,53 @@ object Tables {
           raw.withColumn("ts", col("ts").cast("timestamp_ntz"))
       }
     }
+}
+
+/** The session-scoped memo of DataFrames: table readers ([[Tables]]) and
+  * the shared intermediate frames the registry reuses across the queries
+  * of one session (MinHash signatures, KNN graphs, cluster labelings, the
+  * ingest pipeline frame). One entry per (session, dir, name); `dir` is
+  * the table dir a frame is built over, `name` tells frames apart.
+  *
+  * The build runs outside any lock (`TrieMap.getOrElseUpdate`), so a
+  * build may run Spark jobs and call [[frame]] itself, and sessions build
+  * concurrently. Two callers racing on one key may both build; the first
+  * insert wins and both get it.
+  *
+  * Callers persist what they want kept; the memo only holds the frame,
+  * and every eviction unpersists it. Spark's cache is shared by all
+  * sessions of a context and matches frames by plan, so sibling
+  * sessions' frames with the same plan share one cache entry and
+  * evicting either drops it (the other recomputes).
+  *
+  * Entries live until one of: their session's context stops (swept on
+  * the next [[frame]] call), [[reset]] of their session, or
+  * [[invalidate]] of their dir. */
+object Shared {
+  private type Key = (SparkSession, String, String)
+  private val memo = scala.collection.concurrent.TrieMap.empty[Key, DataFrame]
+
+  /** The frame memoized under (spark, dir, name); `build` runs only when
+    * there is none. */
+  def frame(spark: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame = {
+    evict(k => stopped(k._1))
+    memo.getOrElseUpdate((spark, dir, name), build)
+  }
+
+  /** Evict every entry of `spark`: teardown of a bench or verify run. */
+  def reset(spark: SparkSession): Unit = evict(_._1 eq spark)
+
+  /** Evict, in every session, the entries built over `path` or over a
+    * dir containing it: call after rewriting `path`. */
+  def invalidate(path: String): Unit =
+    evict(k => k._2 == path || path.startsWith(k._2 + "/"))
+
+  private def stopped(s: SparkSession): Boolean = s.sparkContext.isStopped
+
+  /** A stopped context's storage is gone with it: those entries are only
+    * dropped. */
+  private def evict(p: Key => Boolean): Unit =
+    memo.keys.filter(p).foreach(k => memo.remove(k).foreach(df =>
+      if (!stopped(k._1)) df.unpersist(blocking = false)))
 }

@@ -111,10 +111,7 @@ object ProfileBench {
       sb.toString.getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[profile] could not write $outPath: ${e.getMessage}") }
-    graft.queries.OperatorQueries.reset(spark)
-    graft.queries.TextQueries.reset(spark)
-    graft.queries.SimilarityQueries.reset(spark)
-    graft.queries.RelationalQueries.reset(spark)
+    Shared.reset(spark)
     spark.stop()
   }
 }

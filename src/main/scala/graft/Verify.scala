@@ -69,10 +69,7 @@ object Verify {
         gates.map { case (n, sql) =>
           s"""{"name":${q(n)},"inline_sql":${q(sql)}}""" }
           .mkString("[", ",", "]"))
-    graft.queries.OperatorQueries.reset(spark)
-    graft.queries.TextQueries.reset(spark)
-    graft.queries.SimilarityQueries.reset(spark)
-    graft.queries.RelationalQueries.reset(spark)
+    Shared.reset(spark)
     spark.stop()
   }
 }

@@ -53,9 +53,9 @@ object WarehouseWriter {
       .partitionBy(partitionCol)
       .mode("append")
       .parquet(path)
-    // a live session may have read `path` through the Tables reader
-    // cache — its analyzed plan holds the pre-write file listing
-    graft.Tables.invalidate(path)
+    // a live session may have read `path` through the Shared memo — its
+    // analyzed plan holds the pre-write file listing
+    graft.Shared.invalidate(path)
   }
 
   /** Read back with partition pruning available on occurred_date. */
@@ -148,7 +148,7 @@ object WarehouseWriter {
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode("overwrite").parquet(path)
-    graft.Tables.invalidate(path) // drop any stale cached reader plan
+    graft.Shared.invalidate(path) // drop any stale cached reader plan
   }
 
   /** Small-file report for a partitioned warehouse directory: per
@@ -305,7 +305,7 @@ object WarehouseWriter {
       val nAfter = fs.listStatus(src).count(f => f.isFile &&
         !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
       (part, nBefore, nAfter)
-    } finally graft.Tables.invalidate(path)
+    } finally graft.Shared.invalidate(path)
   }
 
   /** Partition expiration (README.md:88 — 1-year default): drop partition
@@ -325,7 +325,7 @@ object WarehouseWriter {
           catch { case _: Exception => false })
       }
     expired.foreach(p => fs.delete(p, true))
-    if (expired.nonEmpty) graft.Tables.invalidate(path)
+    if (expired.nonEmpty) graft.Shared.invalidate(path)
     expired.map(_.getName)
   }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{Shared, Tables}
 import graft.ingest.{DlqReplay, IngestPipeline, SyntheticData}
 import graft.functions.CoreFunctions.{maskPhones, phoneCount, sha256PrefixLong}
 import graft.operators.Multimodal
@@ -51,22 +51,13 @@ object OperatorQueries {
     * consume the same prepared (decode→validate→sample) frame, persisted
     * so its fused expression tree is codegen-compiled and executed ONCE
     * per verify/bench run instead of once per query (~1/4 of round-2
-    * bench time was exactly this recompilation). */
-  private val shared =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (org.apache.spark.sql.DataFrame, IngestPipeline.IngestResult)]
+    * bench time was exactly this recompilation). The corpus is read from
+    * no table dir, so the memo entry's dir is a fixed label;
+    * [[Shared.reset]] evicts. */
   private def pipeline(s: SparkSession): IngestPipeline.IngestResult =
-    shared.getOrElseUpdate(s, {
-      val v = IngestPipeline.prepare(SyntheticData.envelopes(s, 2000), cfg)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (v, IngestPipeline.split(v, cfg))
-    })._2
-
-  /** Unpersist + evict the shared pipeline frame for a session (or all
-    * sessions). Verify/Bench call this when done so no persisted RDDs —
-    * or strong references to stopped sessions — outlive the run. */
-  def reset(s: SparkSession): Unit =
-    shared.remove(s).foreach { case (df, _) => df.unpersist(blocking = false) }
-  def resetAll(): Unit = shared.keys.foreach(reset)
+    IngestPipeline.split(Shared.frame(s, "synthetic", "ingestPrepared")(
+      IngestPipeline.prepare(SyntheticData.envelopes(s, 2000), cfg)
+        .persist(StorageLevel.MEMORY_AND_DISK)), cfg)
 
   /** Shared oracle front half: regenerate the synthetic corpus + envelope
     * JSON in DuckDB SQL (same sha256-derived fields as SyntheticData). */

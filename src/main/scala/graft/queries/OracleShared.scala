@@ -18,7 +18,7 @@ package graft.queries
   * before the sweep. Engine independence is unchanged: the frames are
   * built BY DUCKDB from the same raw tables with the byte-identical CTE
   * text the inline twins carry; only the per-query recompute is
-  * amortized — exactly what the engine's own sharedSigs/preparedShared
+  * amortized — exactly what the engine's own minhashSigs/preparedShared
   * persists do. With the env unset (the driver's sf0.01 gate), every
   * twin is byte-identical to round 12's.
   */

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import org.apache.spark.storage.StorageLevel
+import graft.{Shared, Tables}
 import graft.functions.CoreFunctions._
 
 /** Relational surface over the TPC-H-ish star schema (SURVEY §2C Q9–Q15,
@@ -27,11 +28,9 @@ object RelationalQueries {
     * top-100 parts by lineitem count — the bounded hub domain the
     * direction-sensitive suite (q306 SCC, q307 layering) runs on.
     * ≤ 9,900 distinct edges at ANY scale factor (the cap is the
-    * point); persisted, [[reset]] evicts. */
-  private val sharedPartEdges = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * point); persisted, [[Shared.reset]] evicts. */
   private def partEdgesShared(s: SparkSession, dir: String): DataFrame =
-    sharedPartEdges.getOrElseUpdate((s, dir), {
+    Shared.frame(s, dir, "partEdges") {
       val li = t(s, dir, "lineitem")
       val top = li.groupBy(col("l_partkey"))
         .agg(count(lit(1)).as("cnt"))
@@ -50,49 +49,43 @@ object RelationalQueries {
         .join(broadcast(top).withColumnRenamed("pk", "dst"),
           Seq("dst"), "left_semi")
         .select(col("src"), col("dst")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** One shared SCC map (scc_node, scc_id) over [[partEdgesShared]]
     * per (session, dir): q306's report and q307's condensation both
     * consume it, and the path-doubling closure behind it is the
-    * expensive part. [[reset]] evicts. */
-  private val sharedScc = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * expensive part. [[Shared.reset]] evicts. */
   private def sccShared(s: SparkSession, dir: String): DataFrame =
-    sharedScc.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "scc")(
       graft.operators.Closure.sccIds(partEdgesShared(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared DISTINCT (order, brand) basket frame per (session,
     * dir): the pair-lift report (q292) and the Apriori triple cascade
     * (q310) both start from it, and it is consumed 5× inside q310
     * alone — persisted so the lineitem ⋈ part distinct runs once.
-    * [[reset]] evicts. */
-  private val sharedOrderBrand = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * [[Shared.reset]] evicts. */
   private def orderBrandShared(s: SparkSession, dir: String): DataFrame =
-    sharedOrderBrand.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "orderBrand")(
       t(s, dir, "lineitem")
         .join(t(s, dir, "part")
             .select(col("p_partkey"), col("p_brand")),
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("okey"), col("p_brand").as("brand"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared per-order sorted BRAND BASKET frame per (session,
     * dir): q292's pair lift and q310's Apriori cascade both explode
     * combinations off the same |orders|-row array frame — one basket
     * shuffle for the whole market-basket battery, no okey self-joins
-    * anywhere. [[reset]] evicts. */
-  private val sharedBaskets = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * anywhere. [[Shared.reset]] evicts. */
   private def basketsShared(s: SparkSession, dir: String): DataFrame =
-    sharedBaskets.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "baskets")(
       orderBrandShared(s, dir).groupBy("okey")
         .agg(sort_array(collect_set("brand")).as("bs"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Per-basket pair combinations (ba < bb), codegen'd array lambdas
     * — C(n,2) rows per basket, no join. */
@@ -104,19 +97,6 @@ object RelationalQueries {
           |    struct(bs[i] AS ba, bs[j] AS bb))))""".stripMargin))
         .as("p"))
       .select(col("p.ba").as("ba"), col("p.bb").as("bb"))
-
-  /** Unpersist + evict the shared graph frames for a session (the
-    * SimilarityQueries.reset teardown contract). */
-  def reset(s: SparkSession): Unit = {
-    sharedBaskets.keys.filter(_._1 eq s).foreach(k =>
-      sharedBaskets.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedScc.keys.filter(_._1 eq s).foreach(k =>
-      sharedScc.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedPartEdges.keys.filter(_._1 eq s).foreach(k =>
-      sharedPartEdges.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedOrderBrand.keys.filter(_._1 eq s).foreach(k =>
-      sharedOrderBrand.remove(k).foreach(_.unpersist(blocking = false)))
-  }
 
   /** The top-100 / edge CTEs shared verbatim by the q306 and q307
     * oracles so the twins cannot drift. */

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import org.apache.spark.storage.StorageLevel
+import graft.{Shared, Tables}
 import graft.operators.Similarity
 
 /** Similarity search over the `embeddings` table (SURVEY §2C Q27 + EXT):
@@ -27,11 +28,6 @@ object SimilarityQueries {
     Similarity.projectionSigns(outDims, inDims)
       .map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
 
-  /** One shared [[Similarity.prepared]] frame per (session, table dir):
-    * q27/q40/q48/q79 all start from the same cast + norm + spread of the
-    * embeddings table, and rebuilding it per query re-runs Catalyst over
-    * the identical subplan four times — the `sharedSigs` pattern from
-    * TextQueries. |vectors| rows, persisted; [[reset]] evicts. */
   /** sf1-probe knob (r10 VERDICT ask #3): multiplies the graph/market
     * id gates of the fold queries (q316/q324/q332) so the 10x-amplified
     * probe tables - whose copies shift vec_id by 1e8 - can land INSIDE
@@ -41,133 +37,99 @@ object SimilarityQueries {
   private val gateScale: Long =
     sys.env.getOrElse("SPARK_GRAFT_GATE_SCALE", "1").toLong
 
-  private val sharedPrepared = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  /** One shared [[Similarity.prepared]] frame per (session, table dir):
+    * q27/q40/q48/q79 all start from the same cast + norm + spread of the
+    * embeddings table, and rebuilding it per query re-runs Catalyst over
+    * the identical subplan four times — the `TextQueries.minhashSigs`
+    * pattern. |vectors| rows, persisted; [[Shared.reset]] evicts. */
   private def preparedShared(s: SparkSession, dir: String): DataFrame =
-    sharedPrepared.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "similarityPrepared")(
       Similarity.prepared(Tables.table(s, dir, "embeddings"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared k-means-refined centroid frame per (session, dir):
     * q83's assignment report and q84's refined search both consume the
     * same 2-iteration Lloyd output (16 rows, but the iterative jobs
-    * behind them would otherwise run twice). [[reset]] evicts. */
-  private val sharedKmeans = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * behind them would otherwise run twice). [[Shared.reset]] evicts. */
   private def kmeansShared(s: SparkSession, dir: String): DataFrame =
-    sharedKmeans.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "kmeans")(
       Similarity.kmeansCentroids(preparedShared(s, dir),
           nCentroids = 16, nIter = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared KNN-graph frame per (session, dir): the graph report
     * (q103) and its PageRank centrality (q104) consume the same
     * IVF-blocked top-5 edges, and the within-list pairwise scoring
-    * behind them is the expensive part. |V|·k rows; [[reset]] evicts. */
-  private val sharedKnn = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * behind them is the expensive part. |V|·k rows; [[Shared.reset]]
+    * evicts. */
   private def knnShared(s: SparkSession, dir: String): DataFrame =
-    sharedKnn.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "knn")(
       Similarity.knnGraphIvf(preparedShared(s, dir), k = 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared RECIPROCATED-edge frame per (session, dir): the
     * directed mutual-KNN edge set (u→v kept iff v→u also ranks) —
     * symmetric by construction, |V|·k rows max. Consumed by the
     * cluster labeling (q108) and the triangle census (q114);
-    * [[reset]] evicts. */
-  private val sharedMutual = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * [[Shared.reset]] evicts. */
   private def mutualShared(s: SparkSession, dir: String): DataFrame =
-    sharedMutual.getOrElseUpdate((s, dir), {
+    Shared.frame(s, dir, "mutualKnn") {
       val knn = knnShared(s, dir).select(col("vec_id"), col("nbr_id"))
       knn.join(
           knn.select(col("nbr_id").as("vec_id"), col("vec_id").as("nbr_id")),
           Seq("vec_id", "nbr_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** One shared mutual-KNN cluster labeling per (session, dir) — the
-    * TextQueries.sharedLabels precedent: the ConnectedComponents loop's
+    * TextQueries.dupClusterLabels precedent: the ConnectedComponents loop's
     * per-round fixed cost (3 shuffles + 1 action per round) dwarfs its
     * data at test SF and a real run labels ONCE and fans out. |V| rows;
-    * [[reset]] evicts. */
-  private val sharedMutualClusters = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * [[Shared.reset]] evicts. */
   private def mutualClustersShared(s: SparkSession, dir: String): DataFrame =
-    sharedMutualClusters.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "mutualClusters")(
       graft.operators.ConnectedComponents.dupClusters(
           preparedShared(s, dir).select("vec_id"), mutualShared(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared LPA-community frame per (session, dir): the 20-round
     * label-propagation labeling feeds both the modularity report
     * (q289) and the clustering-agreement audit (q327) — the loop's
     * per-round fixed cost (a vote join + argmax per round) dwarfs its
     * data at test SF and a real run labels ONCE and fans out (the
-    * mutualClustersShared precedent). |V| rows; [[reset]] evicts. */
-  private val sharedLpa = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * mutualClustersShared precedent). |V| rows; [[Shared.reset]]
+    * evicts. */
   private def lpaShared(s: SparkSession, dir: String): DataFrame =
-    sharedLpa.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "lpa")(
       graft.operators.LabelPropagation
         .communities(mutualShared(s, dir)
             .select(col("vec_id").as("src"), col("nbr_id").as("dst")),
           preparedShared(s, dir).select("vec_id"), maxIter = 20)
         .select(col("vec_id"), col("community_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared 3-core node frame per (session, dir): the KCore peel
     * loop's per-round fixed cost (1 agg + 2 semi-joins + 1 action)
     * dwarfs its data at test SF and a real run peels ONCE and fans
     * out — the mutualClustersShared precedent. |core| rows;
-    * [[reset]] evicts. */
-  private val sharedKCore = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * [[Shared.reset]] evicts. */
   private def kCoreShared(s: SparkSession, dir: String): DataFrame =
-    sharedKCore.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "kCore")(
       graft.operators.KCore.coreNodes(
           mutualShared(s, dir).select(col("vec_id").as("src"),
             col("nbr_id").as("dst")), k = 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared PQ subspace-distance frame per (session, dir): the
     * encode report (q125), ADC search (q140), its recall eval (q141)
     * and rank fusion (q142) all start from the same exact
     * |vectors|·nCents·m distance frame — built and persisted once
-    * (the preparedShared pattern); [[reset]] evicts. */
-  private val sharedPqDists = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * (the preparedShared pattern); [[Shared.reset]] evicts. */
   private def pqDistsShared(s: SparkSession, dir: String): DataFrame =
-    sharedPqDists.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "pqDists")(
       Similarity.pqSubspaceDists(Tables.table(s, dir, "embeddings"),
           m = 4, nCents = 16, inDims = 64)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Unpersist + evict the shared prepared frames for a session (the
-    * TextQueries.reset / OperatorQueries.reset teardown contract). */
-  def reset(s: SparkSession): Unit = {
-    sharedPqDists.keys.filter(_._1 eq s).foreach(k =>
-      sharedPqDists.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedPrepared.keys.filter(_._1 eq s).foreach(k =>
-      sharedPrepared.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedKmeans.keys.filter(_._1 eq s).foreach(k =>
-      sharedKmeans.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedKnn.keys.filter(_._1 eq s).foreach(k =>
-      sharedKnn.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedMutual.keys.filter(_._1 eq s).foreach(k =>
-      sharedMutual.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedMutualClusters.keys.filter(_._1 eq s).foreach(k =>
-      sharedMutualClusters.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedKCore.keys.filter(_._1 eq s).foreach(k =>
-      sharedKCore.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedLpa.keys.filter(_._1 eq s).foreach(k =>
-      sharedLpa.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedPower.keys.filter(_._1 eq s).foreach(k =>
-      sharedPower.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedProj.keys.filter(_._1 eq s).foreach(k =>
-      sharedProj.remove(k).foreach(_.unpersist(blocking = false)))
-  }
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Shared oracle CTEs (double-cast vectors + norms), consumed by
     * q27/q40/q48/q79 so the twins cannot drift. */
@@ -451,24 +413,20 @@ object SimilarityQueries {
   /** One shared power-iteration direction per (session, dir): q181,
     * q185 and q186 all consume the same 64-row (pos, wq) frame, and the
     * chain behind it runs four scan+agg jobs — the preparedShared
-    * pattern. [[reset]] evicts. */
-  private val sharedPower = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * pattern. [[Shared.reset]] evicts. */
   private def powerShared(s: SparkSession, dir: String): DataFrame =
-    sharedPower.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "powerDirection")(
       powerDirection(powerComps(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared per-vector projection frame (vec_id, proj) per
-    * (session, dir) — q185 bins it, q186 squares it. [[reset]]
+    * (session, dir) — q185 bins it, q186 squares it. [[Shared.reset]]
     * evicts. */
-  private val sharedProj = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   private def projShared(s: SparkSession, dir: String): DataFrame =
-    sharedProj.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "powerProjection")(
       powerComps(s, dir).join(broadcast(powerShared(s, dir)), "pos")
         .groupBy("vec_id").agg(sum(col("x") * col("wq")).as("proj"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Oracle twin of [[powerComps]]+[[powerDirection]] as a CTE chain
     * ending in `wq (pos, wq)` — BIGINT `//` truncates exactly like

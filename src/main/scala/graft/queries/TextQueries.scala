@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import org.apache.spark.storage.StorageLevel
+import graft.{Shared, Tables}
 import graft.functions.CoreFunctions._
 import graft.operators.{ConnectedComponents, TextDedup}
 
@@ -68,14 +69,12 @@ object TextQueries {
     * fanned out, so the gram explode + sha256 pipeline executes once per
     * verify/bench run here too (the q41–q43 shared-ingest-cache pattern,
     * `OperatorQueries.pipeline`). The frame is |docs|×bands rows — tiny
-    * relative to what it derives from. Verify/Bench call [[reset]] on
-    * teardown. */
-  private val sharedSigs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * relative to what it derives from. Verify/Bench call
+    * [[Shared.reset]] on teardown. */
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    sharedSigs.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "minhashSigs")(
       TextDedup.minhashSignatures(gramsDf(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared cluster-edge frame per (session, table dir): the
     * band-floored candidate pairs that seed BOTH transitive-clustering
@@ -87,30 +86,26 @@ object TextQueries {
     * consumer would double-charge the bench for evidence q335 already
     * pays for deliberately (its double CC fold IS the incremental ≡
     * full proof — the redundant part was only this upstream scan).
-    * |edges| rows of two longs, persisted; [[reset]] evicts. */
-  private val sharedClusterEdges = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * |edges| rows of two longs, persisted; [[Shared.reset]] evicts. */
   private[graft] def clusterEdges(s: SparkSession, dir: String): DataFrame =
-    sharedClusterEdges.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "clusterEdges")(
       TextDedup.candidatePairs(minhashSigs(s, dir))
         .filter(col("n_shared_bands") >= ClusterMinBands)
         .select("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared duplicate-cluster labeling per (session, table dir),
     * like [[minhashSigs]]: the propagation loop is a multi-job iteration
     * whose per-round overhead dwarfs its data at test SF, and a real
     * curation run computes cluster labels ONCE and fans them out to
     * every consumer (q75's census and q76's keep-best here). |docs|
-    * rows, persisted; [[reset]] evicts. */
-  private val sharedLabels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * rows, persisted; [[Shared.reset]] evicts. */
   private def dupClusterLabels(s: SparkSession, dir: String): DataFrame =
-    sharedLabels.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "dupClusterLabels")(
       ConnectedComponents.labels(
           clusterEdges(s, dir),
           docs(s, dir).select("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared exact-Jaccard frame per (session, table dir), like
     * [[minhashSigs]]: verification (q31) and band calibration (q82) both
@@ -118,15 +113,13 @@ object TextQueries {
     * + sorted-array build + pair joins behind them are the single most
     * expensive subplan in the engine — a real curation run scores each
     * candidate pair ONCE and derives every report from the scored table.
-    * |candidate pairs| rows (6 small columns), persisted; [[reset]]
-    * evicts. */
-  private val sharedJaccard = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * |candidate pairs| rows (6 small columns), persisted;
+    * [[Shared.reset]] evicts. */
   private def jaccardScores(s: SparkSession, dir: String): DataFrame =
-    sharedJaccard.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "jaccardScores")(
       TextDedup.jaccard(gramsDf(s, dir),
           TextDedup.candidatePairs(minhashSigs(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared SimHash fingerprint frame per (session, table dir), like
     * [[minhashSigs]]: the fingerprint report (q29), near-dup pairing
@@ -137,51 +130,29 @@ object TextQueries {
     * checkpointed table) and fans it out. Fingerprints are a pure
     * per-document function, so consumers over a doc SUBSET (q61 after
     * exact dedup) reuse the frame via a semi-join instead of refolding
-    * their own. |docs| rows of (doc_id, long); [[reset]] evicts. */
-  private val sharedFps = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * their own. |docs| rows of (doc_id, long); [[Shared.reset]]
+    * evicts. */
   private def simhashFps(s: SparkSession, dir: String): DataFrame =
-    sharedFps.getOrElseUpdate((s, dir),
+    Shared.frame(s, dir, "simhashFps")(
       TextDedup.simhashFingerprints(tokens(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One shared EXACT Jaccard-≥3/5 pair frame per (session, dir): the
     * AllPairs truth set (prefix-filter candidates + codegen'd verify)
     * feeds both the exact self-join report (q309) and the LSH-recall
     * QA (q334) — the verify pass over the candidate join is the
     * heaviest text subplan after the signature builds, and a real
-    * curation run computes the truth set ONCE. [[reset]] evicts. */
-  private val sharedExactPairs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * curation run computes the truth set ONCE. [[Shared.reset]] evicts. */
   private def exactPairsShared(s: SparkSession, dir: String): DataFrame =
-    sharedExactPairs.getOrElseUpdate((s, dir), {
+    Shared.frame(s, dir, "exactPairs") {
       val grams = gramsDf(s, dir)
       TextDedup.jaccard(grams,
           TextDedup.prefixFilterCandidates(grams, tauNum = 3L,
             tauDen = 5L))
         .filter(col("n_inter") * 5L >=
           lit(3L) * (col("na") + col("nb") - col("n_inter")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  /** Unpersist + evict the shared signature frames for a session, as
-    * OperatorQueries.reset does for the ingest pipeline frame. */
-  def reset(s: SparkSession): Unit = {
-    sharedClusterEdges.keys.filter(_._1 eq s).foreach(k =>
-      sharedClusterEdges.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedExactPairs.keys.filter(_._1 eq s).foreach(k =>
-      sharedExactPairs.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedSigs.keys.filter(_._1 eq s).foreach(k =>
-      sharedSigs.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedLabels.keys.filter(_._1 eq s).foreach(k =>
-      sharedLabels.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedJaccard.keys.filter(_._1 eq s).foreach(k =>
-      sharedJaccard.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedFps.keys.filter(_._1 eq s).foreach(k =>
-      sharedFps.remove(k).foreach(_.unpersist(blocking = false)))
-    sharedEntityLabels.keys.filter(_._1 eq s).foreach(k =>
-      sharedEntityLabels.remove(k).foreach(_.unpersist(blocking = false)))
-  }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   private val sigsPartSql = {
     val mins = (0 until 8).map(b =>
@@ -302,7 +273,7 @@ object TextQueries {
 
   /** Materialization-only build of the exact Jaccard-≥3/5 pair frame
     * (doc_a, doc_b, n_inter, na, nb) over ALL doc pairs sharing ≥1
-    * gram — the oracle twin of the engine's `sharedExactPairs`
+    * gram — the oracle twin of the engine's `exactPairsShared`
     * (q309/q334). The one-shot form is intractable at sf1: the gram
     * equijoin feeds ~14e9 matched rows (a hot gram is shared by 38,590
     * docs) into a billions-of-groups aggregate — OOM at any spill cap
@@ -440,16 +411,14 @@ object TextQueries {
   }
 
   /** One shared entity-resolution labeling per (session, dir) — the
-    * sharedLabels precedent applied to the q148 fuzzy-match closure:
+    * dupClusterLabels precedent applied to the q148 fuzzy-match closure:
     * the pointer-jumping loop's per-round fixed cost dominates at test
     * SF and a real run resolves entities ONCE. |customers| rows;
-    * [[reset]] evicts. */
-  private val sharedEntityLabels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * [[Shared.reset]] evicts. */
   private def entityLabelsShared(s: SparkSession, dir: String,
       build: => DataFrame): DataFrame =
-    sharedEntityLabels.getOrElseUpdate((s, dir),
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Shared.frame(s, dir, "entityLabels")(
+      build.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** The q33 quality scorer (bounded blend of token-count, non-stopword
     * ratio, token-length), shared by the per-doc report (q33) and the

@@ -34,22 +34,20 @@ object StreamingIngest {
     * evicts, which is unbounded state on an infinite stream. */
   def eventsStream(raw: DataFrame, cfg: IngestPipeline.Config,
       watermark: String = "10 minutes"): DataFrame = {
-    val v = IngestPipeline.sampled(
-      IngestPipeline.validated(IngestPipeline.decoded(raw)), cfg)
-    val valid = v.filter(col("is_valid") && col("sampled"))
-    IngestPipeline.projected(IngestPipeline.phoneNormalized(valid), cfg)
+    val valid = IngestPipeline.prepare(raw, cfg)
+      .filter(col("is_valid") && col("sampled"))
+    IngestPipeline.projected(
+        IngestPipeline.phoneNormalized(valid, cfg.defaultRegion), cfg)
       .withWatermark("received_at", watermark)
       .dropDuplicatesWithinWatermark("idempotency_key")
   }
 
-  /** DLQ side output of the same stream (terminal errors only). */
-  def dlqStream(raw: DataFrame): DataFrame = {
-    import graft.functions.CoreFunctions.categorizeError
-    IngestPipeline.validated(IngestPipeline.decoded(raw))
-      .filter(!col("is_valid"))
-      .withColumn("http_status", categorizeError(col("error_type")))
-      .select("data", "error_type", "http_status")
-  }
+  /** DLQ side output of the same stream: the batch router's DLQ
+    * ([[IngestPipeline.split]]), so a streamed DLQ row carries the same
+    * transport attributes and `replay_attempts` that `DlqReplay.route`
+    * reads. */
+  def dlqStream(raw: DataFrame): DataFrame =
+    IngestPipeline.split(IngestPipeline.prepare(raw)).dlq
 
   /** Start the stream into a foreachBatch sink. `sink` receives each
     * micro-batch of warehouse rows (A11's flush) — per-batch dedup against
