@@ -10,24 +10,21 @@ object Catalog {
 
   val tableNames: Seq[String] = Tables.starTables :+ "events"
 
-  /** Last dir registered per session: re-registering the same dir is a
-    * no-op (the temp views would be replaced with identical plans —
-    * ~70 ms of catalog writes per call, paid by every SQL-entry query
-    * per bench pass). A DIFFERENT dir re-registers everything. Weak
-    * keys so short-lived test sessions do not accumulate. */
-  private val registeredDir =
-    new java.util.WeakHashMap[SparkSession, String]()
-
-  /** Register every table under `dir` as a temp view. */
+  /** Register every table under `dir` as a temp view. The registration
+    * is the session's one `catalog` entry of [[Shared]]: registering the
+    * same dir again is a no-op (the temp views would be replaced with
+    * identical plans — ~70 ms of catalog writes per call, paid by every
+    * SQL-entry query per bench pass), a different dir replaces it, and
+    * [[Shared.invalidate]] of the dir or of a table in it drops it, so
+    * the next call re-registers the views over fresh readers. */
   def registerAll(spark: SparkSession, dir: String): Unit =
-    registeredDir.synchronized {
-      if (registeredDir.get(spark) != dir) {
+    if (!Shared.contains(spark, dir, "catalog"))
+      Shared.replace(spark, dir, "catalog") {
         tableNames.foreach { t =>
           Tables.table(spark, dir, t).createOrReplaceTempView(t)
         }
-        registeredDir.put(spark, dir)
+        spark.emptyDataFrame
       }
-    }
 
   /** Convenience: register + run one SQL statement. */
   def sql(spark: SparkSession, dir: String, query: String): DataFrame = {

@@ -61,6 +61,9 @@ object Tables {
   * of one session (MinHash signatures, KNN graphs, cluster labelings, the
   * ingest pipeline frame). One entry per (session, dir, name); `dir` is
   * the table dir a frame is built over, `name` tells frames apart.
+  * [[replace]] keeps one entry per (session, name) instead: the latest
+  * ingest batch ([[graft.ingest.IngestPipeline.run]]) and the
+  * [[Catalog]] registration.
   *
   * The build runs outside any lock (`TrieMap.getOrElseUpdate`), so a
   * build may run Spark jobs and call [[frame]] itself, and sessions build
@@ -74,8 +77,9 @@ object Tables {
   * evicting either drops it (the other recomputes).
   *
   * Entries live until one of: their session's context stops (swept on
-  * the next [[frame]] call), [[reset]] of their session, or
-  * [[invalidate]] of their dir. */
+  * the next [[frame]] or [[replace]] call), [[reset]] of their session,
+  * [[invalidate]] of their dir, or a [[replace]] of their name in their
+  * session. */
 object Shared {
   private type Key = (SparkSession, String, String)
   private val memo = scala.collection.concurrent.TrieMap.empty[Key, DataFrame]
@@ -87,6 +91,26 @@ object Shared {
     evict(k => stopped(k._1))
     memo.getOrElseUpdate((spark, dir, name), build)
   }
+
+  /** Memoizes `build` as the session's one `name` entry: first evicts
+    * every `name` entry of `spark`, whatever its dir, then stores the
+    * new frame under (spark, dir, name). The eviction comes before the
+    * build because Spark's cache matches frames by plan: a frame
+    * persisted while an identical plan is still cached joins that cache
+    * entry, and evicting the old frame afterwards would drop both. */
+  def replace(spark: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame = {
+    evict(k => stopped(k._1) || (k._1 eq spark) && k._3 == name)
+    val df = build
+    // a concurrent replace in the same session may have stored first
+    memo.put((spark, dir, name), df).filter(_ ne df)
+      .foreach(_.unpersist(blocking = false))
+    df
+  }
+
+  /** Whether (spark, dir, name) has an entry. */
+  def contains(spark: SparkSession, dir: String, name: String): Boolean =
+    memo.contains((spark, dir, name))
 
   /** Evict every entry of `spark`: teardown of a bench or verify run. */
   def reset(spark: SparkSession): Unit = evict(_._1 eq spark)

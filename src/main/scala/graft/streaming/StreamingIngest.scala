@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 import graft.ingest.IngestPipeline
@@ -25,7 +24,8 @@ object StreamingIngest {
 
   /** Transform a streaming (message_id, data) frame into warehouse rows
     * with watermarked streaming dedup on the idempotency key (A12).
-    * The chain is identical to the batch pipeline — one codegen stage.
+    * The rows are the batch pipeline's ([[IngestPipeline.eventRows]]);
+    * only the dedup operator differs.
     *
     * Dedup state is BOUNDED: `dropDuplicatesWithinWatermark` evicts a
     * key's state once the watermark passes it, matching the reference
@@ -33,14 +33,10 @@ object StreamingIngest {
     * every key ever seen — plain `dropDuplicates` on a key subset never
     * evicts, which is unbounded state on an infinite stream. */
   def eventsStream(raw: DataFrame, cfg: IngestPipeline.Config,
-      watermark: String = "10 minutes"): DataFrame = {
-    val valid = IngestPipeline.prepare(raw, cfg)
-      .filter(col("is_valid") && col("sampled"))
-    IngestPipeline.projected(
-        IngestPipeline.phoneNormalized(valid, cfg.defaultRegion), cfg)
+      watermark: String = "10 minutes"): DataFrame =
+    IngestPipeline.eventRows(IngestPipeline.prepare(raw, cfg), cfg)
       .withWatermark("received_at", watermark)
       .dropDuplicatesWithinWatermark("idempotency_key")
-  }
 
   /** DLQ side output of the same stream: the batch router's DLQ
     * ([[IngestPipeline.split]]), so a streamed DLQ row carries the same

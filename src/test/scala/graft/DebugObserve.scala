@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.TextDedup
 
-/** Debug tool (kept, like DebugCodegen/DebugPlans): demonstrates WHY a
+/** Debug tool: demonstrates WHY a
   * zero-candidate corpus never delivers the LSH observed metrics under
   * AQE. Finding: when the pair-generation stage materializes empty, AQE's
   * empty-relation propagation replaces the downstream plan — including

@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.Files
 import java.util.Base64
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{DlqReplay, IngestPipeline, SyntheticData}
@@ -115,6 +120,99 @@ class IngestPipelineSpec extends AnyFunSuite {
         IngestPipeline.Config(auditRate = 0.8, receivedAt = Some(fixedTs)))
       assert(res.events.count() > 1400)
     } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** 500 synthetic envelopes written as parquet; returns the path. */
+  private def envelopeFile(seed: Long = 42L): String = {
+    val path = Files.createTempDirectory("graft-ingest").toString + "/in"
+    SyntheticData.envelopes(spark, 500, seed).write.parquet(path)
+    path
+  }
+
+  private val cfg80 =
+    IngestPipeline.Config(auditRate = 0.8, receivedAt = Some(fixedTs))
+
+  private def cacheScans(df: DataFrame): Seq[InMemoryTableScanExec] =
+    Plans.collect(df.queryExecution.executedPlan) {
+      case m: InMemoryTableScanExec => m
+    }
+
+  private def inputScans(df: DataFrame, input: String): Seq[FileSourceScanExec] =
+    Plans.collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains(input)) => f
+    }
+
+  /** The id of the cached RDD `df` reads; fails if it reads no cache. */
+  private def cacheId(df: DataFrame): Int = {
+    val mem = cacheScans(df)
+    assert(mem.size === 1, s"one cache scan expected in ${df.queryExecution.executedPlan}")
+    mem.head.relation.cacheBuilder.cachedColumnBuffers.id
+  }
+
+  private def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("run materializes the prepared batch once: the DLQ and sampled-out outputs read the cache, not the input") {
+    val input = envelopeFile()
+    val res = IngestPipeline.run(spark.read.parquet(input), cfg80)
+    assert(res.events.count() > 300)
+    for ((name, df) <- Seq("dlq" -> res.dlq, "sampledOut" -> res.sampledOut)) {
+      assert(cacheScans(df).nonEmpty, s"$name reads no cache")
+      assert(inputScans(df, input).isEmpty, s"$name scans the input")
+    }
+    assert(res.dlq.count() > 0 && res.sampledOut.count() > 0)
+  }
+
+  test("a re-run over the same input replaces the session's cached batch and still reads the cache") {
+    val s = spark.newSession()
+    val input = envelopeFile()
+    val before = persistedIds
+    val r1 = IngestPipeline.run(s.read.parquet(input), cfg80)
+    assert(r1.dlq.count() > 0)
+    val id1 = cacheId(r1.dlq)
+    assert(persistedIds -- before === Set(id1))
+    val r2 = IngestPipeline.run(s.read.parquet(input), cfg80)
+    assert(r2.events.count() > 300)
+    // evicting the first batch after persisting the second would drop
+    // the one cache entry both identical plans share
+    val id2 = cacheId(r2.dlq)
+    assert(persistedIds -- before === Set(id2))
+    assert(id2 !== id1)
+    for (df <- Seq(r2.dlq, r2.sampledOut)) {
+      assert(cacheId(df) === id2)
+      assert(inputScans(df, input).isEmpty)
+    }
+    Shared.reset(s)
+  }
+
+  test("an IngestResult used after a newer run returns the same rows") {
+    val s = spark.newSession()
+    val r1 = IngestPipeline.run(s.read.parquet(envelopeFile()), cfg80)
+    val rows1 = Seq(r1.events, r1.dlq, r1.sampledOut).map(sortedRows)
+    val r2 = IngestPipeline.run(s.read.parquet(envelopeFile(seed = 7L)), cfg80)
+    assert(r2.events.count() > 300)
+    assert(Seq(r1.events, r1.dlq, r1.sampledOut).map(sortedRows) === rows1)
+    assert(sortedRows(r2.events) !== rows1.head)
+    Shared.reset(s)
+  }
+
+  test("Shared.reset drops the session's cached ingest batch") {
+    val s = spark.newSession()
+    val res = IngestPipeline.run(s.read.parquet(envelopeFile()), cfg80)
+    assert(res.dlq.count() > 0)
+    val id = cacheId(res.dlq)
+    assert(persistedIds(id))
+    Shared.reset(s)
+    assert(!persistedIds(id))
+    // a fresh plan: res.dlq's own executed plan was fixed when first used
+    assert(cacheScans(res.dlq.select("*")).isEmpty,
+      "the evicted batch is no longer cached")
   }
 
   test("synthetic generator: deterministic, with planted invalid slices (load-test.js:22-55)") {

@@ -102,6 +102,28 @@ class SharedSpec extends AnyFunSuite {
     Shared.reset(s)
   }
 
+  test("Catalog views read a table rewritten and invalidated after registration") {
+    val s = spark.newSession()
+    val (dirA, dirB) = (tempDir(), tempDir())
+    import s.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-05-01 10:00:00")
+    for (d <- Seq(dirA, dirB); t <- Catalog.tableNames)
+      if (t == "events") Seq((1, ts)).toDF("x", "ts").write.parquet(s"$d/$t.parquet")
+      else Seq(1, 2, 3).toDF("x").write.parquet(s"$d/$t.parquet")
+    Seq(1, 2).toDF("x").write.mode("overwrite").parquet(s"$dirB/region.parquet")
+    def regions(dir: String) =
+      Catalog.sql(s, dir, "SELECT count(*) FROM region").as[Long].head()
+    assert(regions(dirA) === 3L)
+
+    Seq(1, 2, 3, 4, 5).toDF("x").write.mode("overwrite").parquet(s"$dirA/region.parquet")
+    Shared.invalidate(s"$dirA/region.parquet")
+    assert(regions(dirA) === 5L)
+    // another dir replaces the views; coming back re-registers the first
+    assert(regions(dirB) === 2L)
+    assert(regions(dirA) === 5L)
+    Shared.reset(s)
+  }
+
   test("a build that itself calls the memo memoizes both frames") {
     val s = spark.newSession()
     val dir = tempDir()
