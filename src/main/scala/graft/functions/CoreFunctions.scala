@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §2A) as pure Catalyst expressions — codegen'd, pushdown-
   * friendly, and each with a DuckDB-expressible twin for the oracle.
   *
-  * No UDFs in the hot path: everything here composes built-in functions
-  * so whole-stage codegen stays intact and the optimizer can reason about
-  * the expressions.
+  * No UDFs in the hot path: each function composes built-in functions or
+  * is one native codegen'd expression (the `*Expr` classes beside this
+  * file), so whole-stage codegen stays intact and the optimizer can
+  * reason about the expressions.
   */
 object CoreFunctions {
 
@@ -100,9 +101,14 @@ object CoreFunctions {
 
   /** E.164 phone normalization (reference phone.js:15-29 semantics,
     * engine-defined edge behavior — see SURVEY §7 "hard parts").
-    * Deterministic, pure-SQL-expressible rules parameterized by region
-    * (reference `normalizePhone(phoneInput, region)`):
-    *   - keep digits (and a leading '+') only
+    * Deterministic rules parameterized by region (reference
+    * `normalizePhone(phoneInput, region)`), evaluated by one native
+    * expression, [[NormalizePhoneExpr]]: a single scan of the string's
+    * bytes, then the region's rule. Every rule is also expressible in
+    * SQL as a `CASE` over `regexp_replace(s, '[^0-9+]', '')` and
+    * `regexp_replace(s, '[^0-9]', '')` — the form the DuckDB oracle twins
+    * use and CoreFunctionsSpec checks the kernel against:
+    *   - keep ASCII digits (and a '+' before the first digit) only
     *   - '+' prefixed and 8..15 digits → '+' ++ digits  (region-independent)
     *   - else region-specific national rules:
     *     US: bare 10 digits → '+1' ++ digits;
@@ -137,71 +143,11 @@ object CoreFunctions {
     * documented behavior over the stricter standard.)
     */
   def normalizePhone(phone: Column,
-      region: String = defaultPhoneRegion): Column = {
-    val cleaned = regexp_replace(phone, "[^0-9+]", "")
-    val hasPlus = startswith(cleaned, lit("+"))
-    val digits = regexp_replace(cleaned, "[^0-9]", "")
-    val n = length(digits)
-    val intl = when(phone.isNull, lit(null).cast("string"))
-      .when(hasPlus && n.between(8, 15), concat(lit("+"), digits))
-    val withNational = region.toUpperCase match {
-      case "US" => intl
-        .when(!hasPlus && n === 10, concat(lit("+1"), digits))
-        .when(!hasPlus && n === 11 && startswith(digits, lit("1")),
-          concat(lit("+"), digits))
-      case "GB" => intl
-        .when(!hasPlus && n.between(10, 11) && startswith(digits, lit("0")),
-          concat(lit("+44"), digits.substr(lit(2), lit(14))))
-        .when(!hasPlus && n.between(9, 10) && !startswith(digits, lit("0")),
-          concat(lit("+44"), digits))
-      case "DE" => intl
-        .when(!hasPlus && n.between(8, 12) && startswith(digits, lit("0")),
-          concat(lit("+49"), digits.substr(lit(2), lit(14))))
-      case "FR" => intl
-        .when(!hasPlus && n === 10 && startswith(digits, lit("0")),
-          concat(lit("+33"), digits.substr(lit(2), lit(14))))
-      case "IN" => intl
-        .when(!hasPlus && n === 10 && digits.substr(lit(1), lit(1))
-            .isin("6", "7", "8", "9"),
-          concat(lit("+91"), digits))
-        // trunk-0 form gets the SAME 6-9 mobile-prefix check on the
-        // post-trunk digits: '01234543210' must not normalize when
-        // '1234543210' would be rejected
-        .when(!hasPlus && n === 11 && startswith(digits, lit("0")) &&
-            digits.substr(lit(2), lit(1)).isin("6", "7", "8", "9"),
-          concat(lit("+91"), digits.substr(lit(2), lit(14))))
-      case "BR" => intl
-        // area code (2 digits, never 0-leading) + 8-digit landline or
-        // 9-digit mobile whose NSN starts with 9
-        .when(!hasPlus && n === 10 && !startswith(digits, lit("0")),
-          concat(lit("+55"), digits))
-        .when(!hasPlus && n === 11 && !startswith(digits, lit("0")) &&
-            digits.substr(lit(3), lit(1)) === "9",
-          concat(lit("+55"), digits))
-      case "AU" => intl
-        // national format is always trunk 0 + 9 digits
-        .when(!hasPlus && n === 10 && startswith(digits, lit("0")),
-          concat(lit("+61"), digits.substr(lit(2), lit(14))))
-      case "ES" => intl
-        // 9 digits, no trunk prefix; 6/7 mobile, 8/9 landline
-        .when(!hasPlus && n === 9 && digits.substr(lit(1), lit(1))
-            .isin("6", "7", "8", "9"),
-          concat(lit("+34"), digits))
-      case "IT" => intl
-        // leading 0 is PART of Italian landline numbers (no trunk drop);
-        // mobiles are 9-10 digits starting 3
-        .when(!hasPlus && n.between(9, 11) && startswith(digits, lit("0")),
-          concat(lit("+39"), digits))
-        .when(!hasPlus && n.between(9, 10) && startswith(digits, lit("3")),
-          concat(lit("+39"), digits))
-      case "JP" => intl
-        // national format is trunk 0 + 9-10 digits
-        .when(!hasPlus && n.between(10, 11) && startswith(digits, lit("0")),
-          concat(lit("+81"), digits.substr(lit(2), lit(14))))
-      case _ => intl // unknown region: international format only
-    }
-    withNational.otherwise(lit(null).cast("string"))
-  }
+      region: String = defaultPhoneRegion): Column =
+    // the cast keeps numeric inputs working as under the regex form (a
+    // no-op on strings, which the optimizer drops)
+    GraftColumnBridge.column(NormalizePhoneExpr(
+      GraftColumnBridge.expression(phone.cast("string")), region))
 
   /** E.164 phone occurrences: '+' then 8-15 digits — the shape every
     * number leaves [[normalizePhone]] in, matchable identically by Java

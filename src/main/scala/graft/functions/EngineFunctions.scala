@@ -13,8 +13,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *   morton_code(x, y)              — 16-bit Z-order interleave (layout keys)
   *   damerau_levenshtein(a, b)      — true DL edit distance (UTF-8 bytes)
   *
-  * All are pure Catalyst expression trees (no UDF barrier): the SQL form
-  * plans identically to the DataFrame form.
+  * All are Catalyst expressions, no UDF barrier: built-in compositions or
+  * the engine's native codegen'd expressions (normalize_phone,
+  * hex_prefix_long, morton_code, damerau_levenshtein). The SQL form plans
+  * identically to the DataFrame form.
   */
 object EngineFunctions {
 

@@ -95,12 +95,15 @@ object IngestPipeline {
       Seq("$.call_id", "$.message_id"), col("trace_id"))
     df.withColumn("idempotency_key", key)
       .withColumn("error_type",
+        // the regex test first: `&&` stops at it for every row that opens
+        // a JSON object, so only the rest parse the raw envelope again
         when(col("__raw_json").isNull ||
-            get_json_object(col("__raw_json"), "$.event_type").isNull &&
-            !col("__raw_json").rlike("^\\s*\\{"), lit("invalid_json"))
+            !col("__raw_json").rlike("^\\s*\\{") &&
+            get_json_object(col("__raw_json"), "$.event_type").isNull,
+            lit("invalid_json"))
           .when(!requiredOk, lit("missing_fields"))
           .when(!tsOk, lit("invalid_timestamp"))
-          .when(key.isNull, lit("no_idempotency_key"))
+          .when(col("idempotency_key").isNull, lit("no_idempotency_key"))
           .otherwise(lit(null).cast("string")))
       .withColumn("is_valid", col("error_type").isNull)
   }
@@ -117,7 +120,7 @@ object IngestPipeline {
       region: String = graft.functions.CoreFunctions.defaultPhoneRegion)
       : DataFrame = {
     // parse once, rebuild the struct flat: a withField fold over from_json
-    // re-embeds the parse (and the regex-heavy normalizer) per field and
+    // re-embeds the parse (and the normalizer) per field and
     // blows up the codegen'd expression tree
     val parsed = df.withColumn("payload_struct",
       from_json(col("payload"), payloadSchema))

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import graft.functions.CoreFunctions._
+import graft.functions.PhoneNormalizer
 
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -253,6 +254,125 @@ class CoreFunctionsSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  /** The phone rules as the regex `CASE` composition they were first
+    * written in (and the DuckDB twins still use): the spec that
+    * [[graft.functions.NormalizePhoneExpr]]'s byte kernel must equal. */
+  private def regexNormalizePhone(phone: Column, region: String): Column = {
+    val cleaned = regexp_replace(phone, "[^0-9+]", "")
+    val hasPlus = startswith(cleaned, lit("+"))
+    val digits = regexp_replace(cleaned, "[^0-9]", "")
+    val n = length(digits)
+    val intl = when(phone.isNull, lit(null).cast("string"))
+      .when(hasPlus && n.between(8, 15), concat(lit("+"), digits))
+    val withNational = region.toUpperCase match {
+      case "US" => intl
+        .when(!hasPlus && n === 10, concat(lit("+1"), digits))
+        .when(!hasPlus && n === 11 && startswith(digits, lit("1")),
+          concat(lit("+"), digits))
+      case "GB" => intl
+        .when(!hasPlus && n.between(10, 11) && startswith(digits, lit("0")),
+          concat(lit("+44"), digits.substr(lit(2), lit(14))))
+        .when(!hasPlus && n.between(9, 10) && !startswith(digits, lit("0")),
+          concat(lit("+44"), digits))
+      case "DE" => intl
+        .when(!hasPlus && n.between(8, 12) && startswith(digits, lit("0")),
+          concat(lit("+49"), digits.substr(lit(2), lit(14))))
+      case "FR" => intl
+        .when(!hasPlus && n === 10 && startswith(digits, lit("0")),
+          concat(lit("+33"), digits.substr(lit(2), lit(14))))
+      case "IN" => intl
+        .when(!hasPlus && n === 10 && digits.substr(lit(1), lit(1))
+            .isin("6", "7", "8", "9"),
+          concat(lit("+91"), digits))
+        .when(!hasPlus && n === 11 && startswith(digits, lit("0")) &&
+            digits.substr(lit(2), lit(1)).isin("6", "7", "8", "9"),
+          concat(lit("+91"), digits.substr(lit(2), lit(14))))
+      case "BR" => intl
+        .when(!hasPlus && n === 10 && !startswith(digits, lit("0")),
+          concat(lit("+55"), digits))
+        .when(!hasPlus && n === 11 && !startswith(digits, lit("0")) &&
+            digits.substr(lit(3), lit(1)) === "9",
+          concat(lit("+55"), digits))
+      case "AU" => intl
+        .when(!hasPlus && n === 10 && startswith(digits, lit("0")),
+          concat(lit("+61"), digits.substr(lit(2), lit(14))))
+      case "ES" => intl
+        .when(!hasPlus && n === 9 && digits.substr(lit(1), lit(1))
+            .isin("6", "7", "8", "9"),
+          concat(lit("+34"), digits))
+      case "IT" => intl
+        .when(!hasPlus && n.between(9, 11) && startswith(digits, lit("0")),
+          concat(lit("+39"), digits))
+        .when(!hasPlus && n.between(9, 10) && startswith(digits, lit("3")),
+          concat(lit("+39"), digits))
+      case "JP" => intl
+        .when(!hasPlus && n.between(10, 11) && startswith(digits, lit("0")),
+          concat(lit("+81"), digits.substr(lit(2), lit(14))))
+      case _ => intl
+    }
+    withNational.otherwise(lit(null).cast("string"))
+  }
+
+  /** Strings around every rule's edges: ASCII and non-ASCII noise,
+    * non-ASCII digits (Arabic-Indic, fullwidth), a '+' after digits, and
+    * digit runs of 6-17 led by each digit the rules test. */
+  private def phoneInputs(seed: Long, count: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    val noise = IndexedSeq(" ", "-", ".", "(", ")", "/", "x", "+", "\u00a0",
+      "\u0663", "\u0669", "\uff10", "\uff17", "\u00e9", "\ud83d\ude00", "\u4e2d")
+    def pick(xs: IndexedSeq[String]) = xs(rnd.nextInt(xs.size))
+    def digitRun(k: Int) = (1 to k).map(_ => ('0' + rnd.nextInt(10)).toChar)
+      .map(c => if (rnd.nextInt(5) == 0) pick(noise) + c else c.toString)
+      .mkString
+    val generated = (1 to count).map { _ =>
+      rnd.nextInt(5) match {
+        case 0 => (1 to rnd.nextInt(20)).map(_ => (32 + rnd.nextInt(95)).toChar)
+          .mkString
+        case 1 => (1 to rnd.nextInt(20)).map(_ => pick(noise ++
+          (0 to 9).map(_.toString))).mkString
+        case 2 => digitRun(rnd.nextInt(6)) + "+" + digitRun(4 + rnd.nextInt(10))
+        case _ =>
+          val lead = pick(IndexedSeq("", "", "", "+", "00", " +", "\u0663+"))
+          val first = pick(IndexedSeq("0", "1", "3", "6", "9", "2", "5"))
+          lead + first + digitRun(5 + rnd.nextInt(12))
+      }
+    }
+    generated ++ Seq("", "+", "++", "+44", "12345678+", null,
+      "+\u0664\u0661\u0665 555 0001")
+  }
+
+  test("normalizePhone kernel equals the regex CASE composition in every region, codegen'd and interpreted") {
+    import graft.functions.NormalizePhoneExpr
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val inputs = phoneInputs(seed = 1234L, count = 3000)
+    // an RDD-backed frame: a local Seq would be folded into a
+    // LocalRelation by the optimizer and never reach generated code
+    val df = spark.sparkContext.parallelize(inputs.map(Tuple1(_)), 4)
+      .toDF("raw")
+    for (region <- PhoneNormalizer.regions :+ "ZZ") {
+      val both = df.select(col("raw"),
+        normalizePhone(col("raw"), region).as("kernel"),
+        regexNormalizePhone(col("raw"), region).as("spec"))
+      assert(both.queryExecution.executedPlan.exists(
+        _.isInstanceOf[WholeStageCodegenExec]), "codegen'd")
+      val mismatches = both.filter(!(col("kernel") <=> col("spec"))).collect()
+      assert(mismatches.isEmpty,
+        s"region=$region codegen'd: ${mismatches.take(5).mkString("; ")}")
+      // interpreted: the expression evaluated directly, against the spec
+      val spec = both.select("raw", "spec").collect()
+      assert(spec.length === inputs.length)
+      spec.foreach { r =>
+        val raw = r.getString(0)
+        val got = NormalizePhoneExpr(Literal(raw), region).eval()
+        assert(Option(got).map(_.toString).orNull === r.getString(1),
+          s"region=$region interpreted raw='$raw'")
+      }
+    }
+    // the rules fire: the inputs are not all null under every region
+    assert(df.select(normalizePhone(col("raw"), "GB")).na.drop().count() > 100)
   }
 
   test("maskPhones: E.164 masked to +D***DD, non-phones untouched, count matches") {

@@ -28,6 +28,23 @@ class EngineFunctionsSpec extends AnyFunSuite {
       plan)
   }
 
+  test("SQL normalize_phone equals the DataFrame normalizePhone") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    EngineFunctions.registerAll(spark)
+    val raws = Seq("(415) 555-0001", "+44 20 7123 4567", "1-415-555-0001",
+      "555.123.4567", "+1", "", "junk", "\u0664\u0661\u0665 555 0001", null)
+    val df = spark.sparkContext.parallelize(raws.map(Tuple1(_)), 2).toDF("raw")
+      .select(expr("normalize_phone(raw)").as("sql"),
+        graft.functions.CoreFunctions.normalizePhone(col("raw")).as("df"))
+    val rows = df.collect()
+    assert(rows.count(!_.isNullAt(0)) >= 4)
+    rows.foreach(r => assert(r.get(0) === r.get(1), r.toString))
+    // a number is read as its decimal string
+    assert(spark.sql("SELECT normalize_phone(4155550001)").head()
+      .getString(0) === "+14155550001")
+  }
+
   test("dot_product expression is bit-identical to the HOF fold it replaces") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

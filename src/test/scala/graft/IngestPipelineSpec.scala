@@ -215,6 +215,23 @@ class IngestPipelineSpec extends AnyFunSuite {
       "the evicted batch is no longer cached")
   }
 
+  test("prepare parses each payload id once and the events path runs no regex replace") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GetJsonObject, RegExpReplace}
+    val in = spark.read.parquet(envelopeFile())
+    val v = IngestPipeline.prepare(in, cfg80)
+    def exprs(df: DataFrame) = Plans.collect(df.queryExecution.executedPlan) {
+      case p => p.expressions
+    }.flatten
+    val payloadParses = exprs(v).flatMap(_.collect {
+      case g @ GetJsonObject(a: AttributeReference, _) if a.name == "payload" => g
+    })
+    assert(payloadParses.size === 2, v.queryExecution.executedPlan.toString)
+    val events = IngestPipeline.eventRows(v, cfg80)
+    assert(exprs(events).forall(_.find(_.isInstanceOf[RegExpReplace]).isEmpty),
+      events.queryExecution.executedPlan.toString)
+    assert(events.count() > 300)
+  }
+
   test("synthetic generator: deterministic, with planted invalid slices (load-test.js:22-55)") {
     val a = SyntheticData.envelopes(spark, 500).collect()
     val b = SyntheticData.envelopes(spark, 500).collect()
