@@ -52,11 +52,9 @@ object Betweenness {
     *         dependency δ, for every node with a nonzero dependency;
     *         divide by 1e6·|seeds| for the per-seed average
     */
-  def dependencies(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def dependencies(edges: DataFrame, seeds: DataFrame,
+      maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be at least 1")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val Array(srcCol, dstCol, _*) = edges.columns
     val eRaw = edges.select(col(srcCol).as("bt_node"),
       col(dstCol).as("bt_next"))
@@ -75,7 +73,7 @@ object Betweenness {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // ---- forward sweep: layers of (bt_seed, bt_node, sigma) ----
-    val layer0 = cut(seeds
+    val layer0 = Frames.cut(seeds
       .select(col(seeds.columns.head).as("bt_seed")).distinct()
       .select(col("bt_seed"), col("bt_seed").as("bt_node"),
         lit(1L).as("sigma")))
@@ -91,7 +89,7 @@ object Betweenness {
       val visited = layers.map(_.select("bt_seed", "bt_node"))
         .reduce(_ union _)
       val obs = org.apache.spark.sql.Observation(s"bt_hop_$hop")
-      val next = cut(layers.head.join(e, "bt_node")
+      val next = Frames.cut(layers.head.join(e, "bt_node")
         .select(col("bt_seed"), col("bt_next").as("bt_node"),
           col("sigma"))
         .join(visited, Seq("bt_seed", "bt_node"), "left_anti")
@@ -122,7 +120,7 @@ object Betweenness {
             Seq("bt_seed", "bt_next"), "left")
           .select(col("bt_seed"), col("bt_next"), col("sigma_w"),
             coalesce(col("delta_w"), lit(0L)).as("delta_w"))
-      delta = cut(cur.join(e, "bt_node")
+      delta = Frames.cut(cur.join(e, "bt_node")
         .join(deeperDelta, Seq("bt_seed", "bt_next"))
         .select(col("bt_seed"), col("bt_node"),
           expr("(sigma * (1000000 + delta_w)) div sigma_w").as("term"))
@@ -132,16 +130,14 @@ object Betweenness {
       acc = if (acc == null) contrib else acc.union(contrib)
     }
     e.unpersist(blocking = false)
+    // the accumulated union ends here — materialize the |V|-row
+    // result INSIDE the loop conf so the deep two-sweep lineage
+    // (checkpointed leaves + unions) collapses before downstream
+    // consumers re-plan it under session conf
     if (acc == null)
       layer0.sparkSession.emptyDataFrame
         .select(lit(0L).as("bt_node"), lit(0L).as("bt_fp")).limit(0)
-    else acc.groupBy("bt_node")
-      .agg(sum("delta_fp").as("bt_fp"))
-      // the accumulated union ends here — materialize the |V|-row
-      // result INSIDE the loop conf so the deep two-sweep lineage
-      // (checkpointed leaves + unions) collapses before downstream
-      // consumers re-plan it under session conf
-      .localCheckpoint()
+    else Frames.cut(acc.groupBy("bt_node").agg(sum("delta_fp").as("bt_fp")))
     }
   }
 }

@@ -44,11 +44,9 @@ object Bfs {
     *         reached node) with the MINIMUM hop count, including
     *         (seed, seed, 0)
     */
-  def distances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def distances(edges: DataFrame, seeds: DataFrame,
+      maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be at least 1")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val Array(srcCol, dstCol, _*) = edges.columns
     // eRaw deliberately NOT persisted (r15, ADVICE r14: persisting both
     // eRaw and its repartitioned copy double-cached the full edge list
@@ -69,7 +67,7 @@ object Bfs {
     // keyed exchange the per-hop join shuffles only the frontier.
     val e = eRaw.repartition(col("bfs_node"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val seed = cut(seeds
+    val seed = Frames.cut(seeds
       .select(col(seeds.columns.head).as("bfs_seed")).distinct()
       .select(col("bfs_seed"), col("bfs_seed").as("bfs_node"),
         lit(0L).as("bfs_dist")))
@@ -94,7 +92,7 @@ object Bfs {
       // an observed metric instead of a second count() action — one
       // scheduler round-trip per hop, not two (LoopObs)
       val obs = org.apache.spark.sql.Observation(s"bfs_hop_$hop")
-      val next = cut(frontier.join(e, "bfs_node")
+      val next = Frames.cut(frontier.join(e, "bfs_node")
         .select(col("bfs_seed"), col("bfs_next").as("bfs_node"))
         .distinct()
         .join(visited, Seq("bfs_seed", "bfs_node"), "left_anti")

@@ -63,23 +63,10 @@ object BpeTrainer {
 
   /** Train `k` merges over a (token, freq) vocabulary. Returns the
     * merge table and the final segmentation frame (token, freq, syms).
-    * Stops early when no adjacent pair remains.
-    *
-    * @param durableCheckpoints cut each round's lineage with reliable
-    *                 `checkpoint()` (requires `setCheckpointDir`)
-    *                 instead of `localCheckpoint()` — opt in on
-    *                 clusters where an executor loss mid-train must
-    *                 cost one task retry, not the whole k-merge fold
-    *                 (localCheckpoint blocks die with their executor
-    *                 and the truncated lineage cannot recompute them).
-    *                 Cost-only lever: output is bit-identical either
-    *                 way (DurableCheckpointParitySpec). */
-  def train(tokenFreq: DataFrame, k: Int,
-      durableCheckpoints: Boolean = false): Trained = {
+    * Stops early when no adjacent pair remains. */
+  def train(tokenFreq: DataFrame, k: Int): Trained = {
     require(k >= 0, "merge count must be nonnegative")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
-    var segmented = cut(tokenFreq
+    var segmented = Frames.cut(tokenFreq
       .select(col("token"), col("freq"),
         expr("filter(split(token, ''), s -> s <> '')").as("syms"))
       ) // eager: O(1) plan per round (see scaladoc)
@@ -96,7 +83,7 @@ object BpeTrainer {
         val (l, r, n) = (top.head.getString(0), top.head.getString(1),
           top.head.getLong(2))
         merges += Merge(rank, l, r, n)
-        segmented = cut(segmented
+        segmented = Frames.cut(segmented
           .withColumn("syms", applyMerge(col("syms"), l, r)))
         rank += 1
       }

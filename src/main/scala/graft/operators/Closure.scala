@@ -37,9 +37,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Closure {
 
-  private def cutter(durable: Boolean): DataFrame => DataFrame =
-    df => if (durable) df.checkpoint() else df.localCheckpoint()
-
   /** Reflexive-free transitive closure: every (u, v) with a directed
     * path u⇝v of ≥ 1 edge. Input: first two columns are (from, to);
     * self-loops are dropped on entry (a self-loop adds no new
@@ -48,11 +45,9 @@ object Closure {
     * @throws IllegalStateException after `maxIter` doubling rounds
     *         without a fixpoint (never returns a partial closure)
     */
-  def transitiveClosure(edges: DataFrame, maxIter: Int = 20,
-      durableCheckpoints: Boolean = false): DataFrame = {
-    val cut = cutter(durableCheckpoints)
+  def transitiveClosure(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val Array(srcCol, dstCol, _*) = edges.columns
-    var reach = cut(edges
+    var reach = Frames.cut(edges
       .select(col(srcCol).as("tc_src"), col(dstCol).as("tc_dst"))
       .filter(col("tc_src") =!= col("tc_dst"))
       .distinct())
@@ -74,7 +69,7 @@ object Closure {
       // fixpoint row count folded into the checkpoint job (LoopObs):
       // one action per doubling round instead of two
       val obs = org.apache.spark.sql.Observation(s"tc_round_$iter")
-      val doubled = cut(reach
+      val doubled = Frames.cut(reach
         .union(reach.as("a")
           .join(reach.select(col("tc_src").as("tc_mid2"),
               col("tc_dst").as("tc_far")),
@@ -100,12 +95,11 @@ object Closure {
     * `edges`: scc_id(v) = the minimum node id in v's SCC (a node on
     * no cycle is its own singleton component). One closure + one
     * self-join + one keyed min. Output (scc_node, scc_id). */
-  def sccIds(edges: DataFrame, maxIter: Int = 20,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def sccIds(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val Array(srcCol, dstCol, _*) = edges.columns
     val nodes = edges.select(col(srcCol).as("scc_node"))
       .union(edges.select(col(dstCol).as("scc_node"))).distinct()
-    val reach = transitiveClosure(edges, maxIter, durableCheckpoints)
+    val reach = transitiveClosure(edges, maxIter)
     // u and v are mutually reachable ⇔ both (u,v) and (v,u) closed.
     val mutual = reach
       .join(reach.select(col("tc_dst").as("tc_src"),
@@ -132,9 +126,8 @@ object Closure {
     *         convergence — which for an input that is NOT a DAG is
     *         the cycle detector (layers on a cycle rise forever)
     */
-  def dagLayers(edges: DataFrame, nodes: DataFrame, maxIter: Int = 64,
-      durableCheckpoints: Boolean = false): DataFrame = {
-    val cut = cutter(durableCheckpoints)
+  def dagLayers(edges: DataFrame, nodes: DataFrame,
+      maxIter: Int = 64): DataFrame = {
     val Array(srcCol, dstCol, _*) = edges.columns
     val e = edges.select(col(srcCol).as("lay_src"),
         col(dstCol).as("lay_node"))
@@ -144,7 +137,7 @@ object Closure {
     // loop-sized shuffles + AQE off for the layer rounds (LoopTuning)
     val edgeRows = e.count()
     LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
-    var layer = cut(nodes
+    var layer = Frames.cut(nodes
       .select(col(nodes.columns.head).as("lay_node")).distinct()
       .select(col("lay_node"), lit(0L).as("lay_layer")))
     var iter = 0
@@ -159,7 +152,7 @@ object Closure {
       // observed metric — the old separate next⋈layer count job per
       // round is gone (LoopObs; 2 jobs + 1 join → 1 job per round)
       val obs = org.apache.spark.sql.Observation(s"lay_round_$iter")
-      val next = cut(layer
+      val next = Frames.cut(layer
         .join(layer.select(col("lay_node").as("lay_src"),
             col("lay_layer").as("src_layer"))
           .join(e, "lay_src")

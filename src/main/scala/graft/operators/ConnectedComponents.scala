@@ -39,14 +39,7 @@ import org.apache.spark.storage.StorageLevel
   *   - lineage is cut EVERY round at the pre-jump labeling: the jump
   *     joins that frame with itself, so without a leaf boundary the
   *     logical plan would DOUBLE per round — exponential driver-side
-  *     analysis cost. The cut is an eager `localCheckpoint`
-  *     (executor-local storage — fastest, fine for local/test and for
-  *     clusters with stable executors) unless the caller passes
-  *     `durableCheckpoints = true`, which swaps in reliable
-  *     `checkpoint()` against `spark.sparkContext.setCheckpointDir`
-  *     storage so an executor loss mid-loop recomputes from the
-  *     checkpoint instead of failing the job — no code fork needed for
-  *     cluster deployments.
+  *     analysis cost. The cut is an eager [[Frames.cut]].
   */
 object ConnectedComponents {
 
@@ -58,12 +51,6 @@ object ConnectedComponents {
     * @param nodes node universe; the FIRST column is the node id. Nodes
     *              with no edges become singleton clusters labeled with
     *              their own id.
-    * @param durableCheckpoints cut per-round lineage with reliable
-    *              `checkpoint()` (requires
-    *              `spark.sparkContext.setCheckpointDir` pointing at
-    *              durable storage) instead of the default eager
-    *              `localCheckpoint()` — opt in on clusters where an
-    *              executor loss mid-loop must not fail the job.
     * @return one row per distinct node id: (<nodes' id column>,
     *         cluster_id) where cluster_id = min node id in the component.
     *         The frame references executor-cached state (|V| rows — the
@@ -73,9 +60,9 @@ object ConnectedComponents {
     * @throws IllegalStateException if `maxIter` rounds pass without
     *         convergence (never silently returns a partial labeling)
     */
-  def labels(edges: DataFrame, nodes: DataFrame, maxIter: Int = 50,
-      durableCheckpoints: Boolean = false): DataFrame =
-    labelsWithHandle(edges, nodes, maxIter, durableCheckpoints)._1
+  def labels(edges: DataFrame, nodes: DataFrame,
+      maxIter: Int = 50): DataFrame =
+    labelsWithHandle(edges, nodes, maxIter)._1
 
   /** [[labels]] plus a RELEASE closure that frees the loop's residual
     * storage (the final round's persisted labeling + its lineage-cut
@@ -85,10 +72,7 @@ object ConnectedComponents {
     * once the copy is materialized, after which the returned frame
     * must never be read again. */
   private[graft] def labelsWithHandle(edges: DataFrame, nodes: DataFrame,
-      maxIter: Int = 50, durableCheckpoints: Boolean = false)
-      : (DataFrame, () => Unit) = {
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
+      maxIter: Int = 50): (DataFrame, () => Unit) = {
     val idCol = nodes.columns.head
     val Array(srcCol, dstCol, _*) = edges.columns
 
@@ -138,8 +122,8 @@ object ConnectedComponents {
       // plan analysis/rendering long before any data moves. Cutting
       // lineage to a leaf here makes every round's plan constant-size
       // (|V| rows per round, freed by the ContextCleaner as references
-      // drop; executor-local or durable per `durableCheckpoints`).
-      val cand = cut(labeled.join(nbrMin, Seq("cc_id"), "left")
+      // drop).
+      val cand = Frames.cut(labeled.join(nbrMin, Seq("cc_id"), "left")
         .select(col("cc_id"), col("cc_label").as("cc_old"),
           least(col("cc_label"), coalesce(col("cc_nbr_min"), col("cc_label")))
             .as("cc_mid")))
@@ -193,9 +177,8 @@ object ConnectedComponents {
     * (singletons get their own id and size 1). The canonical consumer
     * feeds [[TextDedup.candidatePairs]] (optionally Jaccard-filtered)
     * in as `pairs`. */
-  def dupClusters(docIds: DataFrame, pairs: DataFrame,
-      durableCheckpoints: Boolean = false): DataFrame = {
-    val lbl = labels(pairs, docIds, durableCheckpoints = durableCheckpoints)
+  def dupClusters(docIds: DataFrame, pairs: DataFrame): DataFrame = {
+    val lbl = labels(pairs, docIds)
     val sizes = lbl.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     lbl.join(sizes, "cluster_id")
       .select(col(docIds.columns.head), col("cluster_id"), col("cluster_size"))

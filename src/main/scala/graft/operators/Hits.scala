@@ -53,17 +53,10 @@ object Hits {
   /** Score every node of `nodes` (first column = node id) over
     * directed `edges` (first two columns = src, dst).
     *
-    * @param durableCheckpoints cut each half-step with reliable
-    *                `checkpoint()` (requires `setCheckpointDir`)
-    *                instead of the default eager `localCheckpoint()` —
-    *                on a cluster the durable cut bounds an executor
-    *                loss to one half-step. Cost-only lever: the
-    *                integer fixed-point scores are bit-identical
-    *                either way (DurableCheckpointParitySpec).
     * @return (<nodes' id column>, hub_fp, auth_fp) — ×1e9 longs.
     */
-  def scoresFp(edges: DataFrame, nodes: DataFrame, iterations: Int = 3,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def scoresFp(edges: DataFrame, nodes: DataFrame,
+      iterations: Int = 3): DataFrame = {
     require(iterations >= 1 && iterations <= 20,
       "fixed iteration count must stay oracle-unrollable")
     // r14: each half-step is EAGERLY lineage-cut. The lazy unrolled
@@ -83,8 +76,6 @@ object Hits {
     // shuffles, AQE off, codegen off below the row threshold).
     // Measured q284 (min-of-3, quiet box): 6.7 s lazy → 3.0 s eager,
     // identical integers (oracle-regated at sf0.01 + sf0.1).
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val idCol = nodes.columns.head
     val Array(srcCol, dstCol, _*) = edges.columns
     val e = edges.select(col(srcCol).as("ht_src"), col(dstCol).as("ht_dst"))
@@ -112,7 +103,7 @@ object Hits {
     // NULL/0 total (edge-free graph, Scale div |V| underflow) normalizes
     // to score 0 exactly as the old coalesce(x div NULL-or-0) did.
     val obsU = org.apache.spark.sql.Observation("hits_universe")
-    val uni = cut(nodes.select(col(idCol).as("ht_id")).distinct()
+    val uni = Frames.cut(nodes.select(col(idCol).as("ht_id")).distinct()
       .observe(obsU, count(lit(1)).as("n")))
     val nUniverse = LoopObs.count(obsU, uni)
     val eSrc = e.repartition(col("ht_src"))
@@ -130,7 +121,7 @@ object Hits {
     def halfStep(scores: DataFrame, joinKey: String, eKeyed: DataFrame,
         outKey: String, scoreCol: String, tag: String): DataFrame = {
       val obs = org.apache.spark.sql.Observation(tag)
-      val raw = cut(eKeyed
+      val raw = Frames.cut(eKeyed
         .join(scores.withColumnRenamed("ht_id", joinKey), joinKey)
         .groupBy(col(outKey).as("ht_id"))
         .agg(sum(scoreCol).as("ht_raw"))
@@ -139,9 +130,9 @@ object Hits {
         Option(raw.agg(sum("ht_raw")).first().get(0))
           .map(_.asInstanceOf[Long])
       }
-      cut(normalized(raw, tot, scoreCol))
+      Frames.cut(normalized(raw, tot, scoreCol))
     }
-    var hub = cut(uni.select(col("ht_id"),
+    var hub = Frames.cut(uni.select(col("ht_id"),
       lit(if (nUniverse > 0) Scale / nUniverse else 0L).as("ht_h")))
     var auth: DataFrame = null
     for (i <- 1 to iterations) {

@@ -40,25 +40,19 @@ object Isotonic {
     * @param yCol   BIGINT-castable response
     * @param maxRounds hard cap on merge rounds; throws if exceeded
     *                  (a series of length n can need at most n−1)
-    * @param durableCheckpoints cut round lineage with reliable
-    *                  `checkpoint()` (requires `setCheckpointDir`)
-    *                  instead of `localCheckpoint()` — the executor-
-    *                  loss-survival lever (Mst.forest discipline);
-    *                  cost-only, output bit-identical
     * @return (keyCol, xCol, yCol, fit_num, fit_den, fit) — fit_num/
     *         fit_den the pooled block's exact Σy and count, fit the
     *         single double division */
   def fit(df: DataFrame, keyCol: String, xCol: String, yCol: String,
-      maxRounds: Int = 64, durableCheckpoints: Boolean = false): DataFrame = {
-    def cut(d: DataFrame): DataFrame =
-      if (durableCheckpoints) d.checkpoint() else d.localCheckpoint()
+      maxRounds: Int = 64): DataFrame = {
     val pts = df.select(col(keyCol).as("iso_k"),
       col(xCol).cast("long").as("iso_x"),
       col(yCol).cast("long").as("iso_y"))
     val w = Window.partitionBy("iso_k").orderBy("iso_start")
     val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var blocks0 = cut(pts.select(col("iso_k"), col("iso_x").as("iso_start"),
-      col("iso_y").as("iso_s"), lit(1L).as("iso_c")))
+    var blocks0 = Frames.cut(pts.select(col("iso_k"),
+      col("iso_x").as("iso_start"), col("iso_y").as("iso_s"),
+      lit(1L).as("iso_c")))
     // loop-sized shuffles + AQE off for the merge rounds (LoopTuning);
     // the block table only shrinks from |points|
     LoopTuning.withLoopConf(df.sparkSession, blocks0.count()) {
@@ -93,7 +87,7 @@ object Isotonic {
       // the any-merge convergence test rides the checkpoint job as an
       // observed metric (LoopObs) — 3 jobs/round → 2
       val obs = org.apache.spark.sql.Observation(s"iso_round_$round")
-      val sel = cut(marked
+      val sel = Frames.cut(marked
         .withColumn("iso_rstart",
           min(when(col("iso_viol"), col("iso_rn"))).over(wRun))
         .withColumn("iso_merge", col("iso_viol") &&
@@ -103,7 +97,7 @@ object Isotonic {
       if (LoopObs.metric(obs) {
         sel.filter(col("iso_merge")).limit(1).count()
       } == 0L) done = true
-      else blocks = cut(sel
+      else blocks = Frames.cut(sel
         .withColumn("iso_nmerge",
           coalesce(lead("iso_merge", 1).over(w), lit(false)))
         .withColumn("iso_ns", lead("iso_s", 1).over(w))

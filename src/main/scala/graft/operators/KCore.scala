@@ -33,11 +33,9 @@ import org.apache.spark.sql.functions._
   *     degree 5) depth is small by construction; a pathological chain
   *     peels one layer per round, which maxIter guards against
   *     silently looping.
-  *   - lineage is cut EVERY round (eager localCheckpoint, or reliable
-  *     checkpoint() via `durableCheckpoints` on clusters where an
-  *     executor loss mid-loop must not fail the job — the
-  *     ConnectedComponents discipline), so the per-round plan is
-  *     constant-size however many rounds run.
+  *   - lineage is cut EVERY round (the ConnectedComponents
+  *     discipline), so the per-round plan is constant-size however
+  *     many rounds run.
   */
 object KCore {
 
@@ -55,13 +53,11 @@ object KCore {
     * @throws IllegalStateException after `maxIter` rounds without a
     *         fixpoint (never returns a partially peeled graph)
     */
-  def coreEdges(edges: DataFrame, k: Int, maxIter: Int = 100,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def coreEdges(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     require(k >= 1, "k must be at least 1")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val Array(srcCol, dstCol, _*) = edges.columns
-    var cur = cut(edges.select(col(srcCol).as("kc_a"), col(dstCol).as("kc_b")))
+    var cur = Frames.cut(
+      edges.select(col(srcCol).as("kc_a"), col(dstCol).as("kc_b")))
     var n = cur.count()
     // loop-sized shuffles + AQE off for the peel rounds (LoopTuning,
     // r14 — this was the one fixpoint operator still running its
@@ -76,7 +72,7 @@ object KCore {
       val good = cur.groupBy("kc_a").agg(count(lit(1)).as("kc_d"))
         .filter(col("kc_d") >= k).select("kc_a")
       val obs = org.apache.spark.sql.Observation(s"kcore_round_$round")
-      val nxt = cut(cur
+      val nxt = Frames.cut(cur
         .join(good, Seq("kc_a"), "left_semi")
         .join(good.withColumnRenamed("kc_a", "kc_b"), Seq("kc_b"), "left_semi")
         .select("kc_a", "kc_b")
@@ -95,10 +91,9 @@ object KCore {
 
   /** Nodes of the k-core with their within-core degree — the per-node
     * report form of [[coreEdges]]: (<src column name>, core_degree). */
-  def coreNodes(edges: DataFrame, k: Int, maxIter: Int = 100,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def coreNodes(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     val srcCol = edges.columns.head
-    coreEdges(edges, k, maxIter, durableCheckpoints)
+    coreEdges(edges, k, maxIter)
       .groupBy(col(srcCol))
       .agg(count(lit(1)).as("core_degree"))
   }

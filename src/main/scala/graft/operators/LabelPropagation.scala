@@ -39,23 +39,16 @@ object LabelPropagation {
   /** @param edges (src, dst) — undirected, deduped by caller if needed
     * @param nodes one column of node ids (isolated nodes keep their id)
     * @param maxIter hard round cap; LPA typically settles in < 10
-    * @param durableCheckpoints cut round lineage with reliable
-    *                `checkpoint()` (requires `setCheckpointDir`)
-    *                instead of `localCheckpoint()` — the executor-
-    *                loss-survival lever (Mst.forest discipline);
-    *                cost-only, output bit-identical
     * @return (<nodes' id column>, community_id) */
   def communities(edges: DataFrame, nodes: DataFrame,
-      maxIter: Int = 20, durableCheckpoints: Boolean = false): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
+      maxIter: Int = 20): DataFrame = {
     val idCol = nodes.columns.head
     val Array(srcCol, dstCol, _*) = edges.columns
     // loop-sized shuffles + AQE off for the vote rounds (LoopTuning,
     // r15 — LPA was the one observe()-based loop still running its
     // rounds under session width with AQE's per-round re-planning
     // barriers, ADVICE r14; AQE off is also the configuration whose
-    // observe-on-checkpoint delivery DebugObsCheckpoint verified).
+    // observe-on-checkpoint delivery DurableCheckpointParitySpec pins).
     // 2·|edges| bounds the symmetric edge count and reads off the
     // caller's upstream cache without materializing sym twice.
     val edgeRows = 2L * edges.count()
@@ -73,7 +66,7 @@ object LabelPropagation {
       .dropDuplicates(Seq("lp_id", "lp_nbr"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var labeled = cut(nodes.select(col(idCol).cast("long").as("lp_id"))
+    var labeled = Frames.cut(nodes.select(col(idCol).cast("long").as("lp_id"))
       .distinct()
       .withColumn("lp_label", col("lp_id")))
     var prev: DataFrame = null // round N−2 labeling, for 2-cycle detection
@@ -102,7 +95,7 @@ object LabelPropagation {
       // stopping the round convergence happens (or any round later)
       // yields identical communities.
       val obs = org.apache.spark.sql.Observation(s"lpa_round_$round")
-      val next = cut(labeled.join(voted, Seq("lp_id"), "left")
+      val next = Frames.cut(labeled.join(voted, Seq("lp_id"), "left")
         .select(col("lp_id"),
           coalesce(col("lp_vote"), col("lp_label")).as("lp_label"),
           col("lp_label").as("lp_prev_label"))
@@ -127,7 +120,7 @@ object LabelPropagation {
           .first().getLong(0)
         if (twoAgo == 0L) {
           // deterministic break keeps the smaller alternating label
-          labeled = cut(next.select(col("lp_id"),
+          labeled = Frames.cut(next.select(col("lp_id"),
             least(col("lp_label"), col("lp_prev_label")).as("lp_label")))
           settled = true
         }

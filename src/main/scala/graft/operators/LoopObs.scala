@@ -11,11 +11,12 @@ import org.apache.spark.sql.{DataFrame, Observation}
   *
   * `Dataset.localCheckpoint()`/`checkpoint()` run under `withAction`, so
   * the SQLExecutionEnd event fires and `Observation.get` returns the
-  * metric collected DURING the materialization (verified empirically,
-  * including the zero-row case with AQE off — DebugObsCheckpoint). The
-  * checkpoint truncates lineage to a leaf, so the CollectMetrics node
-  * never appears in downstream plans (no observed-name clashes, no
-  * DeduplicateRelations trap — the q332 round-11 lessons).
+  * metric collected DURING the materialization (pinned for both cut
+  * modes, including the zero-row case with AQE off, in
+  * DurableCheckpointParitySpec). The checkpoint truncates lineage to a
+  * leaf, so the CollectMetrics node never appears in downstream plans
+  * (no observed-name clashes, no DeduplicateRelations trap — the q332
+  * round-11 lessons).
   *
   * Robustness: the wait rides `Observation.future` — the listener-side
   * promise — under a bounded `Await`, so a dropped event (bus overload)

@@ -58,13 +58,10 @@ object Matching {
     *              one distinct-count job over the (cut) edge frame.
     * @return (m_u, m_v, m_w): the matched pairs, m_u < m_v
     */
-  def matching(edges: DataFrame, maxRounds: Int = 0,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def matching(edges: DataFrame, maxRounds: Int = 0): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0 (0 = derive from data)")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val Array(uCol, vCol, wCol, _*) = edges.columns
-    var alive = cut(edges.select(
+    var alive = Frames.cut(edges.select(
         least(col(uCol), col(vCol)).cast("long").as("m_u"),
         greatest(col(uCol), col(vCol)).cast("long").as("m_v"),
         col(wCol).cast("long").as("m_w"))
@@ -104,7 +101,7 @@ object Matching {
         .union(alive.select(col("m_v").as("node"), cand.as("c")))
         .groupBy("node").agg(min(col("c")).as("b"))
       // Dominant = best at BOTH endpoints.
-      val chosen = cut(alive
+      val chosen = Frames.cut(alive
         .join(best.select(col("node").as("m_u"), col("b").as("bu")),
           "m_u")
         .join(best.select(col("node").as("m_v"), col("b").as("bv")),
@@ -115,7 +112,7 @@ object Matching {
       val sat = chosen.select(col("m_u").as("node"))
         .union(chosen.select(col("m_v").as("node")))
       val obs = org.apache.spark.sql.Observation(s"match_round_$round")
-      alive = cut(alive
+      alive = Frames.cut(alive
         .join(sat.select(col("node").as("m_u")), Seq("m_u"), "left_anti")
         .join(sat.select(col("node").as("m_v")), Seq("m_v"), "left_anti")
         .select("m_u", "m_v", "m_w")

@@ -39,20 +39,13 @@ object Mmr {
     *                   same q_id (same 1e6 scale as rel_fp)
     * @param k          selections per query group (groups with fewer
     *                   candidates exhaust early and return them all)
-    * @param durableCheckpoints cut round lineage with reliable
-    *                   `checkpoint()` (requires `setCheckpointDir`)
-    *                   instead of `localCheckpoint()` — the executor-
-    *                   loss-survival lever (Mst.forest discipline);
-    *                   cost-only, output bit-identical
     * @return (q_id, step, vec_id, score_fp): step ∈ 1..k in selection
     *         order; score_fp = rel_fp − max sim_fp to the prior
     *         selections (step 1: plain rel_fp)
     */
-  def select(candidates: DataFrame, pairSims: DataFrame, k: Int,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def select(candidates: DataFrame, pairSims: DataFrame,
+      k: Int): DataFrame = {
     require(k >= 1, "k must be at least 1")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val w = Window.partitionBy("q_id")
       .orderBy(col("score_fp").desc, col("vec_id"))
     // pre-partition BOTH inputs on q_id: every per-round operator
@@ -62,9 +55,9 @@ object Mmr {
     // exchange-free off these two checkpointed layouts instead of
     // re-shuffling 4 times per round (at bench SF the rounds are pure
     // fixed cost, and exchanges are most of it)
-    val cand = cut(candidates.select("q_id", "vec_id", "rel_fp")
+    val cand = Frames.cut(candidates.select("q_id", "vec_id", "rel_fp")
       .repartition(col("q_id")))
-    val pairs = cut(pairSims.select("q_id", "a", "b", "sim_fp")
+    val pairs = Frames.cut(pairSims.select("q_id", "a", "b", "sim_fp")
       .repartition(col("q_id")))
     // loop-sized width + AQE off for the k per-round checkpoints
     // (LoopTuning): the q_id layouts above were built OUTSIDE the
@@ -101,7 +94,7 @@ object Mmr {
         .filter(col("rn") === 1)
         .select(col("q_id"), col("vec_id"), lit(step.toLong).as("step"),
           col("score_fp"))
-      parts ::= cut(pick)
+      parts ::= Frames.cut(pick)
     }
     parts.reduce(_ union _)
     }

@@ -46,10 +46,8 @@ import org.apache.spark.storage.StorageLevel
   *     doubles first — the q104 ×1e6 discipline), so min() is exact
   *     and the forest is bit-reproducible across cluster sizes and
   *     partitionings.
-  *   - lineage is cut EVERY round (`localCheckpoint`, or reliable
-  *     `checkpoint()` via `durableCheckpoints` where an executor loss
-  *     mid-loop must not fail the job), so the per-round plan stays
-  *     constant-size however many rounds run.
+  *   - lineage is cut EVERY round ([[Frames.cut]]), so the per-round
+  *     plan stays constant-size however many rounds run.
   */
 object Mst {
 
@@ -71,11 +69,8 @@ object Mst {
     *              judge nit #3) — while still bounding a runaway loop.
     * @return (mst_u, mst_v, mst_w): the forest's edges, mst_u < mst_v
     */
-  def forest(edges: DataFrame, maxRounds: Int = 0,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def forest(edges: DataFrame, maxRounds: Int = 0): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0 (0 = derive from data)")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val Array(uCol, vCol, wCol, _*) = edges.columns
     val e = edges.select(
         least(col(uCol), col(vCol)).cast("long").as("mst_u"),
@@ -97,7 +92,7 @@ object Mst {
       else 64 - java.lang.Long.numberOfLeadingZeros(
         math.max(2L, 2L * edgeRows) - 1L) + 4
     LoopTuning.withLoopConf(spark, edgeRows) {
-    var comp = cut(
+    var comp = Frames.cut(
       e.select(col("mst_u").as("node"))
         .union(e.select(col("mst_v").as("node")))
         .distinct()
@@ -139,7 +134,7 @@ object Mst {
           col("pick.ct").as("ct"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val obs = org.apache.spark.sql.Observation(s"mst_round_$round")
-      val roundEdges = cut(pick
+      val roundEdges = Frames.cut(pick
         .observe(obs, count(lit(1)).as("n"))
         .select("mst_w", "mst_u", "mst_v").distinct())
       if (LoopObs.count(obs, pick) == 0L) {
@@ -159,7 +154,7 @@ object Mst {
           .join(p.select(col("c").as("par"), col("par").as("gpar")),
             "par")
           .select(col("c"), col("gpar").as("par"))
-        var par = cut(sel.as("a")
+        var par = Frames.cut(sel.as("a")
           .join(sel.select(col("c").as("pc"), col("pc").as("ppc")), "pc")
           .select(col("c"),
             when(col("ppc") === col("c") && col("c") < col("pc"),
@@ -173,7 +168,7 @@ object Mst {
           val j1 = jump(par)
           // the convergence compare (j² vs j¹... conservatively vs the
           // PRE-jump table, as before) rides the checkpoint job
-          val j2 = cut(jump(j1)
+          val j2 = Frames.cut(jump(j1)
             .join(par.select(col("c"), col("par").as("jold")), "c")
             .observe(jObs, coalesce(sum(
                 when(col("par") =!= col("jold"), 1L).otherwise(0L)),
@@ -185,7 +180,7 @@ object Mst {
           } > 0L
           par = j2
         }
-        comp = cut(comp
+        comp = Frames.cut(comp
           .join(par.select(col("c").as("comp"), col("par")).distinct(),
             Seq("comp"), "left")
           .select(col("node"),

@@ -42,9 +42,8 @@ import org.apache.spark.storage.StorageLevel
   *     BEFORE calling — the q104 ×1e6 discipline), so min() is exact
   *     and the result is bit-reproducible across cluster sizes.
   *   - lineage is cut EVERY round (the [[ConnectedComponents]]
-  *     discipline; reliable `checkpoint()` via `durableCheckpoints`
-  *     where an executor loss mid-loop must not fail the job), so the
-  *     per-round plan is constant-size however many rounds run.
+  *     discipline), so the per-round plan is constant-size however
+  *     many rounds run.
   */
 object Sssp {
 
@@ -63,11 +62,9 @@ object Sssp {
     *         node) with the MINIMUM total weight over ≤ `maxRounds`
     *         edges, including (seed, seed, 0)
     */
-  def distances(edges: DataFrame, seeds: DataFrame, maxRounds: Int,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def distances(edges: DataFrame, seeds: DataFrame,
+      maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be at least 1")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val Array(srcCol, dstCol, wCol, _*) = edges.columns
     val e = edges.select(col(srcCol).as("sp_node"),
         col(dstCol).as("sp_next"), col(wCol).cast("long").as("sp_w"))
@@ -76,7 +73,7 @@ object Sssp {
     // (LoopTuning); the count also materializes the edge cache
     val edgeRows = e.count()
     LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
-    var dist = cut(seeds
+    var dist = Frames.cut(seeds
       .select(col(seeds.columns.head).as("sp_seed")).distinct()
       .select(col("sp_seed"), col("sp_seed").as("sp_node"),
         lit(0L).as("sp_cost")))
@@ -96,7 +93,7 @@ object Sssp {
       // improvement count is observed during materialization instead of
       // re-counted by a second action
       val obs = org.apache.spark.sql.Observation(s"sssp_round_$round")
-      val improved = cut(tentative
+      val improved = Frames.cut(tentative
         .join(dist.withColumnRenamed("sp_cost", "sp_old"),
           Seq("sp_seed", "sp_node"), "left")
         .filter(col("sp_old").isNull || col("sp_cost") < col("sp_old"))
@@ -104,7 +101,7 @@ object Sssp {
         .observe(obs, count(lit(1)).as("n")))
       settled = LoopObs.count(obs, improved) == 0L
       if (!settled) {
-        dist = cut(dist
+        dist = Frames.cut(dist
           .join(improved.select("sp_seed", "sp_node"),
             Seq("sp_seed", "sp_node"), "left_anti")
           .union(improved))

@@ -129,8 +129,8 @@ object StableMatching {
     *              throws if the bound is hit with proposals remaining).
     * @param compactEvery live-prefs compaction cadence in rounds
     *              (0 disables); only engages past `compactMinRows`
-    *              live rows. Env `SPARK_GRAFT_SM_COMPACT` overrides
-    *              (the A/B lever).
+    *              live rows. The default 8 is the measured best of
+    *              the none/4/8 A/B on a 36M-pref market (PLANS.md).
     * @param compactMinRows compaction engages only while the live
     *              frame exceeds this many rows (default
     *              [[CompactMinRows]]; specs set 0 to exercise the
@@ -138,12 +138,9 @@ object StableMatching {
     * @return (proposer, acceptor, rank_p, rank_a): the matched pairs
     */
   def matching(prefs: DataFrame, maxRounds: Int = 0,
-      durableCheckpoints: Boolean = false,
       compactEvery: Int = 8,
       compactMinRows: Long = CompactMinRows): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0 (0 = derive from data)")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val Array(pCol, aCol, rpCol, raCol, _*) = prefs.columns
     val pf = prefs.select(col(pCol).cast("long").as("sm_p"),
         col(aCol).cast("long").as("sm_a"),
@@ -162,8 +159,6 @@ object StableMatching {
     val cap =
       if (maxRounds > 0) maxRounds
       else math.min(prefRows + 1L, Int.MaxValue.toLong).toInt
-    val cadence = sys.env.get("SPARK_GRAFT_SM_COMPACT")
-      .map(_.toInt).getOrElse(compactEvery)
     LoopTuning.withLoopConf(spark, prefRows) {
       // held: current (acceptor, proposer) holds with both ranks.
       var held = spark.emptyDataset[(Long, Long, Long, Long)]
@@ -192,10 +187,8 @@ object StableMatching {
         .toDF("smr_p", "smr_a")
       var round = 0
       var done = false
-      val dbg = sys.env.contains("SPARK_GRAFT_SM_DEBUG")
       while (!done && round < cap) {
         round += 1
-        val t0 = System.nanoTime()
         // Each free proposer's best remaining acceptor. The row count
         // (the termination certificate) is observed off the same job
         // that materializes the round's new holds — no separate action.
@@ -215,7 +208,7 @@ object StableMatching {
         // new proposals) by (rank_a, proposer); the rest are covered
         // by the derived rejection set next round.
         val contenders = held.union(proposals)
-        val newHeld = cut(contenders
+        val newHeld = Frames.cut(contenders
           .groupBy("sm_a")
           .agg(min(struct(col("sm_ra"), col("sm_p"), col("sm_rp")))
             .as("bk"))
@@ -247,9 +240,6 @@ object StableMatching {
           if (observedCount >= 0L) observedCount
           else if (proposals.isEmpty) 0L
           else 1L // metric lost but rows exist: run the round normally
-        if (dbg) System.err.println(f"[sm] round $round%d " +
-          f"${(System.nanoTime() - t0) / 1e6}%.0f ms n=$proposalCount%d " +
-          f"live=$liveRows%d")
         if (proposalCount == 0L) {
           done = true
           // the termination round's fresh hold checkpoint duplicates
@@ -261,19 +251,16 @@ object StableMatching {
           rejected = rejectedFrom(livePf, newHeld)
           // Live-prefs compaction: rejections are monotone, so pairs
           // rejected once stay rejected — fold them OUT of the working
-          // frame every `cadence` rounds and derive all later ledgers
+          // frame every `compactEvery` rounds and derive all later ledgers
           // and proposals from the shrunken frame.
-          if (cadence > 0 && liveRows > compactMinRows &&
-              round % cadence == 0) {
-            val shrunk = cut(livePf.join(rejected,
+          if (compactEvery > 0 && liveRows > compactMinRows &&
+              round % compactEvery == 0) {
+            val shrunk = Frames.cut(livePf.join(rejected,
               col("sm_p") === col("smr_p") && col("sm_a") === col("smr_a"),
               "left_anti"))
-            val shrunkRows = shrunk.count()
-            if (dbg) System.err.println(
-              f"[sm] compact round $round%d: $liveRows%d -> $shrunkRows%d")
             if (livePf ne pf) Frames.freeCheckpoint(livePf) else releasePf()
             livePf = shrunk
-            liveRows = shrunkRows
+            liveRows = shrunk.count()
             rejected = rejectedFrom(livePf, newHeld)
           }
         }

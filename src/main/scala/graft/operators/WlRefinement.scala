@@ -45,17 +45,14 @@ object WlRefinement {
     * @return (wl_node, wl_label) after `rounds` rounds; nodes absent
     *         from `edges` keep re-hashing their own label alone
     */
-  def relabel(edges: DataFrame, labels: DataFrame, rounds: Int,
-      durableCheckpoints: Boolean = false): DataFrame = {
+  def relabel(edges: DataFrame, labels: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be at least 1")
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val Array(srcCol, dstCol, _*) = edges.columns
     val e = edges.select(col(srcCol).as("wl_node"),
         col(dstCol).as("wl_nbr"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val Array(nodeCol, labelCol, _*) = labels.columns
-    var lab = cut(labels.select(col(nodeCol).as("wl_node"),
+    var lab = Frames.cut(labels.select(col(nodeCol).as("wl_node"),
       col(labelCol).cast("long").as("wl_label")))
     var r = 0
     while (r < rounds) {
@@ -66,7 +63,7 @@ object WlRefinement {
           Seq("wl_nbr"))
         .groupBy("wl_node")
         .agg(sort_array(collect_list(col("nbr_label"))).as("nl"))
-      lab = cut(lab.join(neigh, Seq("wl_node"), "left")
+      lab = Frames.cut(lab.join(neigh, Seq("wl_node"), "left")
         .select(col("wl_node"),
           sha256PrefixLong15(concat(
             col("wl_label").cast("string"), lit("|"),

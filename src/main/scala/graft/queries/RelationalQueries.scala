@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.{Shared, Tables}
+import graft.operators.Frames
 import graft.functions.CoreFunctions._
 
 /** Relational surface over the TPC-H-ish star schema (SURVEY §2C Q9–Q15,
@@ -1428,12 +1429,11 @@ object RelationalQueries {
         //     instead of a fresh distinct over ob;
         //   - supp / freq2 are |brands| / |frequent pairs| rows.
         val baskets = basketsShared(s, dir)
-        val nOrders = baskets
+        val nOrders = Frames.cut(baskets
           .agg(count(lit(1)).as("n_orders"),
-            expr("count(1) div 300").as("min_supp"))
-          .localCheckpoint()
-        val supp = ob.groupBy("brand").agg(count(lit(1)).as("supp"))
-          .localCheckpoint()
+            expr("count(1) div 300").as("min_supp")))
+        val supp = Frames.cut(
+          ob.groupBy("brand").agg(count(lit(1)).as("supp")))
         // ONE shared basket shuffle replaces the okey self-joins:
         // per-order sorted brand sets generate their own pair/triple
         // combinations in codegen'd array lambdas (brands/order is
@@ -1448,12 +1448,11 @@ object RelationalQueries {
         // freq2 is referenced 3× by cand3 (self-join + closing semi-join);
         // as a lazy frame each reference re-ran the C(n,2) basket explode
         // + count — cut once, the joins read a ≤|brands|²-row leaf
-        val freq2 = basketPairs(baskets)
+        val freq2 = Frames.cut(basketPairs(baskets)
           .groupBy("ba", "bb").agg(count(lit(1)).as("supp2"))
           .crossJoin(broadcast(nOrders))
           .filter(col("supp2") >= col("min_supp"))
-          .select("ba", "bb")
-          .localCheckpoint()
+          .select("ba", "bb"))
         // Apriori candidate generation: join pairs on the leading
         // item, then require the (bb, bc) closing pair frequent too.
         val cand3 = freq2.join(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.{Shared, Tables}
-import graft.operators.Similarity
+import graft.operators.{Frames, Similarity}
 
 /** Similarity search over the `embeddings` table (SURVEY §2C Q27 + EXT):
   * brute-force top-k cosine as the correctness baseline, random-
@@ -1430,9 +1430,8 @@ object SimilarityQueries {
         // ivfTopK calls re-ran the |V|×16 argmin; 36 jobs / 59 exchanges
         // profiled at sf0.1)
         val cc = Similarity.seedCentroids(preparedShared(s, dir), 16)
-        val asg = Some(Similarity
-          .assignToLists(preparedShared(s, dir), cc).drop("cent_cos")
-          .localCheckpoint())
+        val asg = Some(Frames.cut(Similarity
+          .assignToLists(preparedShared(s, dir), cc).drop("cent_cos")))
         val runs = Seq(1, 2, 4).map { np =>
           Similarity.ivfTopK(emb, col("vec_id") < 10, k = 5, nProbe = np,
               prep = prep, assigned = asg)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.operators.Frames
 import graft.functions.CoreFunctions._
 
 /** Round-10 statistics + sketch battery.
@@ -3244,9 +3245,8 @@ object StatsQueries {
         // cumulative frame once and take all three service levels in a
         // single (part, level) window pass, exactly the oracle's own
         // `CROSS JOIN levels` formulation — same rows, one execution.
-        val cum = per.withColumn("cum", sum(col("c")).over(wCum))
-          .join(broadcast(top), Seq("l_partkey"))
-          .localCheckpoint()
+        val cum = Frames.cut(per.withColumn("cum", sum(col("c")).over(wCum))
+          .join(broadcast(top), Seq("l_partkey")))
         val levels = Seq(50L, 80L, 95L)
           .map(p => lit(p).as("service_pct"))
         val wPick = Window.partitionBy("l_partkey", "service_pct")
@@ -6010,24 +6010,18 @@ object StatsQueries {
     * aggregations; everything after is top-20/1-row broadcasts. */
   private[graft] def cardAuditFrame(s: SparkSession, dir: String,
       tblA: String, keyA: String, tblB: String, keyB: String,
-      label: String, durableCheckpoints: Boolean = false): DataFrame = {
-    // the cluster-safety lever the loop operators carry (r15, VERDICT
-    // r14 ask #8): reliable checkpoint() bounds an executor loss to a
-    // task retry instead of killing the audit mid-query; cost-only,
-    // parity-asserted in DurableCheckpointParitySpec
-    def cut(df: DataFrame): DataFrame =
-      if (durableCheckpoints) df.checkpoint() else df.localCheckpoint()
+      label: String): DataFrame = {
     // the per-key count frames feed FIVE consumers each (MCV top-20,
     // table totals, MCV totals, anti-join tails, exact join) — cut them
     // to leaves once so the base-table scan+aggregate runs once, not
     // once per scalar subframe (r14; at warehouse scale this is a ~4×
     // scan reduction for the audit, guide §1.2 "don't recompute")
-    val ca = cut(t(s, dir, tblA).groupBy(col(keyA).as("v"))
+    val ca = Frames.cut(t(s, dir, tblA).groupBy(col(keyA).as("v"))
       .agg(count(lit(1)).as("c")))
-    val cb = cut(t(s, dir, tblB).groupBy(col(keyB).as("v"))
+    val cb = Frames.cut(t(s, dir, tblB).groupBy(col(keyB).as("v"))
       .agg(count(lit(1)).as("c2")))
-    val ma = cut(ca.orderBy(col("c").desc, col("v")).limit(20))
-    val mb = cut(cb.orderBy(col("c2").desc, col("v")).limit(20))
+    val ma = Frames.cut(ca.orderBy(col("c").desc, col("v")).limit(20))
+    val mb = Frames.cut(cb.orderBy(col("c2").desc, col("v")).limit(20))
     val ta = ca.agg(sum("c").cast("long").as("rows_a"),
       count(lit(1)).as("ndv_a"))
     val tb = cb.agg(sum("c2").cast("long").as("rows_b"),

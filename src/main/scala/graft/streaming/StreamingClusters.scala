@@ -115,7 +115,7 @@ final class StreamingClusters(spark: SparkSession,
       val (lbl, release) =
         ConnectedComponents.labelsWithHandle(work, nodes)
       // INTRA-BATCH localCheckpoint is deliberate — the one exemption
-      // from the loop operators' durableCheckpoints lever: durability
+      // from the engine's cut policy (Frames.cut): durability
       // here comes from the STREAMING checkpoint (the parquet state
       // table + _committed_batch horizon written below), so an executor
       // loss that kills these blocks costs one batch replay from the

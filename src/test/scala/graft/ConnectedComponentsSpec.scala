@@ -57,21 +57,19 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("durable checkpoints survive a simulated executor-state loss") {
-    // The cluster-deployment seam: with durableCheckpoints=true each
-    // round's lineage cut goes to reliable checkpoint storage instead of
-    // executor-local blocks. Simulate losing ALL executor state after
-    // the loop (clearCache drops every persisted/localCheckpoint block)
-    // and assert the result is still recomputable — its lineage must
-    // bottom out in checkpoint FILES, not evicted cache. The default
-    // localCheckpoint path documents the opposite contract (non-
-    // recomputable after block loss), which is why the option exists.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    try {
+    // The cluster-deployment seam: with a checkpoint dir set, each
+    // round's lineage cut (Frames.cut) goes to reliable checkpoint
+    // storage instead of executor-local blocks. Simulate losing ALL
+    // executor state after the loop (clearCache drops every
+    // persisted/localCheckpoint block) and assert the result is still
+    // recomputable — its lineage must bottom out in checkpoint FILES,
+    // not evicted cache. Without a dir the cut is a localCheckpoint,
+    // whose blocks cannot be recomputed once lost — which is why
+    // clusters set the dir.
+    TestSpark.withCheckpointDir { dir =>
       val chain = (0L until 19L).map(i => (i, i + 1))
       val lbl = ConnectedComponents.labels(
-        chain.toDF("src", "dst"), (0L to 19L).toDF("id"),
-        durableCheckpoints = true)
+        chain.toDF("src", "dst"), (0L to 19L).toDF("id"))
       assert(lbl.as[(Long, Long)].collect().toMap.values.toSet === Set(0L))
       // reliable checkpoint files exist on disk
       import scala.jdk.CollectionConverters._
@@ -81,12 +79,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       // lose every executor-cached block, then recompute from lineage
       spark.catalog.clearCache()
       assert(lbl.as[(Long, Long)].collect().toMap.values.toSet === Set(0L))
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
     }
   }
 }

@@ -30,6 +30,26 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Run `body` with a fresh checkpoint dir set on the shared context,
+    * so every lineage cut inside it is reliable (`Frames.cut`). Every
+    * later suite shares this context, so the setting must not leak: it
+    * must be unset on entry, and is unset (and the dir deleted) on
+    * exit. */
+  def withCheckpointDir[T](body: java.nio.file.Path => T): T = {
+    val sc = spark.sparkContext
+    org.scalatest.Assertions.assert(sc.getCheckpointDir.isEmpty,
+      s"a checkpoint dir leaked from an earlier test: ${sc.getCheckpointDir}")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    sc.setCheckpointDir(dir.toString)
+    try body(dir)
+    finally {
+      sc.setCheckpointDir(null)
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+  }
 }
 
 class CoreFunctionsSpec extends AnyFunSuite {
