@@ -49,58 +49,26 @@ object BenchConcurrent {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val workers = sys.env.getOrElse("SPARK_GRAFT_BENCH_WORKERS", "3").toInt
     require(workers >= 2 && workers <= 16, "workers must be 2..16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.chunkBase64String.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    for (t <- Tables.starTables)
-      try Tables.table(spark, sfDir, t).count() catch { case _: Throwable => }
-    try Tables.events(spark, sfDir).count() catch { case _: Throwable => }
-
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
+    val spark = Session.local(32)
+    val cpus = spark.sparkContext.defaultParallelism
+    Bench.warmUp(spark, sfDir)
+    val ordered = Bench.entries()
 
     // Mechanical run acceptance (r13 VERDICT ask #5): the SAME
-    // sentinel probe + per-window loadavg + Bench.adjudicate rule the
-    // sequential bench enforces, so the wall-speedup claim carries a
-    // machine-adjudicated verdict instead of builder trust. Windows
-    // bracket the two passes — DURING the concurrent pass the box is
-    // loaded by our own workers by design, so no window is sampled
-    // mid-pass; what the rule rejects is EXTERNAL contention visible
-    // in any bracketing window.
-    val sentinelSamples =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val sentinelLoad =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var sentinelSink = 0L
-    def sentinel(tag: String): Unit = {
-      val t0 = System.nanoTime()
-      sentinelSink ^= Bench.sentinelWork()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val load = Bench.osLoadAvg()
-      sentinelSamples += tag -> sec
-      sentinelLoad += tag -> load
-      System.err.println(
-        f"[bench-conc] sentinel $tag: $sec%.3f s, loadavg $load%.1f")
-    }
-    sentinelSink ^= Bench.sentinelWork() // untimed JIT warm-up
+    // sentinel windows and Bench.adjudicate rule the sequential bench
+    // enforces, so the wall-speedup claim carries a machine-adjudicated
+    // verdict. Windows bracket the two passes —
+    // DURING the concurrent pass the box is loaded by our own workers by
+    // design, so no window is sampled mid-pass; what the rule rejects is
+    // EXTERNAL contention visible in any bracketing window.
+    val sentinel = new Bench.Sentinel("bench-conc")
 
     // pass 1 — sequential truth on the root session. This is also the
     // warm pass (JIT, codegen cache, page cache are JVM/OS-global), so
     // the wall-clock comparison below is warm-vs-warm.
-    sentinel("pre_sequential")
+    sentinel.window("pre_sequential")
     val seqT0 = System.nanoTime()
     val truth = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
@@ -112,7 +80,7 @@ object BenchConcurrent {
       name -> (r, (System.nanoTime() - t0) / 1e9)
     }.toMap
     val seqWall = (System.nanoTime() - seqT0) / 1e9
-    sentinel("between_passes")
+    sentinel.window("between_passes")
 
     // pass 2 — concurrent: N sessions, one per worker thread, draining
     // one shared queue. Each query runs EXACTLY once, on whichever
@@ -148,7 +116,7 @@ object BenchConcurrent {
     threads.foreach(_.start())
     threads.foreach(_.join())
     val concWall = (System.nanoTime() - concT0) / 1e9
-    sentinel("post_concurrent")
+    sentinel.window("post_concurrent")
     val confAfter = sessions.map(s => confKeys.map(k => s.conf.get(k)))
     val rootAfter = confKeys.map(k => spark.conf.get(k))
 
@@ -170,28 +138,13 @@ object BenchConcurrent {
         else None
       }
     } ++ confKeys.indices.flatMap { k =>
-      if (rootAfter(k) != (if (k == 0) cpus else "true"))
+      if (rootAfter(k) != (if (k == 0) cpus.toString else "true"))
         Some(s"root ${confKeys(k)} drifted to ${rootAfter(k)}")
       else None
     }
     val loadFlagThreshold = sys.env.get("SPARK_GRAFT_LOAD_FLAG")
       .map(_.toDouble).getOrElse(cpus.toDouble / 2)
-    val (sentinelMedian, stealFlagged, loadFlagged, verdict) =
-      Bench.adjudicate(sentinelSamples.toSeq, sentinelLoad.toSeq,
-        loadFlagThreshold)
-    System.err.println(f"[bench-conc] sentinel median=$sentinelMedian%.3f" +
-      s" s, flagged=${stealFlagged.mkString("[", ",", "]")}, " +
-      s"load_flagged=${loadFlagged.mkString("[", ",", "]")} " +
-      f"(threshold $loadFlagThreshold%.1f), verdict=$verdict" +
-      s" sink=${sentinelSink == 42L}")
-    val sentinelJson =
-      s"""{"median":$sentinelMedian,"samples":${
-        sentinelSamples.map { case (t, v) => "\"" + t + "\":" + v }
-          .mkString("{", ",", "}")},"loadavg":${
-        sentinelLoad.map { case (t, v) => "\"" + t + "\":" + v }
-          .mkString("{", ",", "}")},"flagged":${
-        stealFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")},"load_flagged":${
-        loadFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")},"load_threshold":$loadFlagThreshold}"""
+    val (sentinelJson, _, verdict) = sentinel.summary(loadFlagThreshold)
     val nOk = ordered.size - mismatches.size
     val perWorker = sessions.indices.map { i =>
       val mine = ordered.flatMap { case (n, _) =>
@@ -203,13 +156,8 @@ object BenchConcurrent {
         mismatches.map("\"" + _ + "\"").mkString("[", ",", "]")},"conf_bleed":${
         bleed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sequential_total_sec":$seqWall,"concurrent_wall_sec":$concWall,"wall_speedup":${
         if (concWall > 0) seqWall / concWall else -1.0},"queries_per_worker":$perWorker,"sentinel":$sentinelJson,"verdict":"$verdict"}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "bench_concurrent.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench-conc] could not write $outPath: ${e.getMessage}")
-    }
+    Bench.writeRecord(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      "bench_concurrent.json"), line, "bench-conc")
     println(line.take(1900))
     Shared.reset(spark)
     sessions.foreach(Shared.reset)

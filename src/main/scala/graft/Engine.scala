@@ -56,6 +56,28 @@ object Tables {
     }
 }
 
+/** The one session builder of every main: `local[N]` with N shuffle
+  * partitions, where N is SPARK_GRAFT_CPUS or else the caller's
+  * `defaultCpus`; UTC; unchunked base64 (DuckDB's `to_base64` is
+  * unchunked, Spark 4 MIME-chunks by default); AQE on; no UI. The
+  * committed plan dumps (`plans/`) and the bench see the same session
+  * shape. Tests build theirs in `TestSpark`. */
+object Session {
+  def local(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.chunkBase64String.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}
+
 /** The session-scoped memo of DataFrames: table readers ([[Tables]]) and
   * the shared intermediate frames the registry reuses across the queries
   * of one session (MinHash signatures, KNN graphs, cluster labelings, the

@@ -1,17 +1,11 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.ingest.{IngestPipeline, SyntheticData}
 object Plans {
   def main(args: Array[String]): Unit = {
-    // same master/width/AQE as Bench so committed plan dumps (plans/rNN/)
-    // show the exact shapes the driver's bench runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.chunkBase64String.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the session Bench measures, so committed plan dumps (plans/rNN/)
+    // show the exact shapes the bench runs
+    val spark = Session.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // besides registry entries: the ingest front half (`ingest_prepare`)

@@ -103,7 +103,7 @@ object Bfs {
       if (!exhausted) {
         levels ::= next
         frontier = next
-      }
+      } else Frames.freeCheckpoint(next) // the empty level joins no result
     }
     e.unpersist(blocking = false)
     levels.reduce(_ union _)

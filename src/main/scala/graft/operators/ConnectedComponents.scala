@@ -93,9 +93,9 @@ object ConnectedComponents {
     // `handle` is always the EXACT Dataset object that was persisted:
     // CacheManager's cascade=false uncache matches the whole plan by
     // sameResult, so unpersisting a select() WRAPPER of the cached
-    // frame is a silent no-op — the round-12 DebugCacheLeak probe
-    // measured 14 leaked RDD caches from one 64-node-chain labels()
-    // call under the old select-then-unpersist form.
+    // frame is a silent no-op — one 64-node-chain labels() call leaked
+    // 14 RDD caches under the old select-then-unpersist form
+    // (StreamingClustersSpec's no-cache-leak test pins the fix).
     var handle = nodes.select(col(idCol).as("cc_id")).distinct()
       .withColumn("cc_label", col("cc_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -22,7 +23,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * reference. Fixed-point loops and long-running streaming monitors
   * that cut lineage every round/batch must not lease storage memory to
   * GC timing — they free the previous round's blocks explicitly the
-  * moment the next round's frame is materialized.
+  * moment the next round's frame is materialized. The same call
+  * deletes a superseded reliable cut's checkpoint-dir files, so a long
+  * session with a checkpoint dir does not grow it by one dir per loop
+  * round.
   */
 private[graft] object Frames {
 
@@ -32,19 +36,23 @@ private[graft] object Frames {
       df.checkpoint()
     else df.localCheckpoint()
 
-  /** Free the cached blocks behind a [[cut]] `df`.
+  /** Free the storage behind a [[cut]] `df`: the cached blocks of a
+    * local cut, the checkpoint-dir files of a reliable one.
     *
     * UNSAFE unless nothing will ever read `df` (or an un-materialized
-    * derivation of it) again: for a local cut the cached blocks ARE the
-    * data — lineage was truncated at the checkpoint, so a later action
-    * cannot recompute them. For a reliable cut the data lives in
-    * checkpoint-dir files and the unpersist is a harmless no-op (file
-    * cleanup belongs to `spark.cleaner.referenceTracking.cleanCheckpoints`
-    * or job teardown). No-op on frames with no checkpoint leaf (e.g. the
+    * derivation of it) again: either way the freed bytes ARE the data —
+    * lineage was truncated at the checkpoint, so a later action cannot
+    * recompute them. No-op on frames with no checkpoint leaf (e.g. the
     * empty seed state). */
   def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+        lr.rdd.getCheckpointFile.foreach { file =>
+          val path = new Path(file)
+          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
       case _ => ()
     }
 }

@@ -39,8 +39,9 @@ import org.apache.spark.sql.functions._
   * gating AND under-weighed the driver side: the lazy unrolled tree
   * doubles twice per iteration (~4^iterations Catalyst nodes), costing
   * ~5.6 s of per-evaluation analysis+optimization at 3 iterations
-  * (ProfileBench r14). With loop conf applied, per-half-step eager
-  * cuts of the narrow (id, score) frames measure 6.7 → 3.0 s on q284
+  * (r14; Bench's `layers` record splits such driver time into build_s
+  * and plan_s). With loop conf applied, per-half-step eager cuts of
+  * the narrow (id, score) frames measure 6.7 → 3.0 s on q284
   * (min-of-3, r14) with bit-identical integers. See scoresFp.
   *
   * Nodes with no in-edges (or no out-edges) get authority (hub) 0 via
@@ -65,7 +66,8 @@ object Hits {
     // (each half-step references the previous frame in both its raw
     // sum and its L1 total), i.e. ~4^iterations plan nodes: at 3
     // iterations the DRIVER paid ~4.1 s of eager per-operator analysis
-    // + ~1.5 s of optimization per q284 evaluation (ProfileBench r14)
+    // + ~1.5 s of optimization per q284 evaluation (r14; Bench's
+    // `layers` record shows both, as build_s and plan_s)
     // — the execution itself was fine (ReuseExchange dedupes), the
     // Catalyst tree walk was the cost. Cutting each half-step keeps
     // every plan constant-size; the cut frames are (id, score) pairs —

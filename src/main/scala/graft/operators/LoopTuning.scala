@@ -45,7 +45,8 @@ private[graft] object LoopTuning {
   private val active = scala.collection.mutable.Map.empty[SparkSession, Nesting]
 
   /** Row count below which a fixpoint loop's rounds run with whole-stage
-    * codegen OFF (measured r14, DebugLoopCost at sf0.1): every round's
+    * codegen OFF (measured r14 at sf0.1; Bench's `layers` record gives
+    * each loop entry's build, job and driver time): every round's
     * plan carries fresh literals/expr-ids, so its generated source never
     * hits the codegen cache and each stage pays a ~10–50 ms Janino
     * compile that interpreted execution of a few-thousand-row frame

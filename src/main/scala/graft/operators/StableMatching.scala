@@ -69,8 +69,9 @@ import org.apache.spark.storage.StorageLevel
   *     (restored on exit), and AQE is disabled inside the loop: the
   *     round jobs are latency-bound, and AQE's empty-relation
   *     propagation erases the CollectMetrics node at the termination
-  *     round (the DebugObserve finding). The observed count is read
-  *     with a BOUNDED await on the observation future, NOT `get`:
+  *     round (pinned by TextDedupSpec's zero-candidate test). The
+  *     observed count is read with a BOUNDED await on the
+  *     observation future, NOT `get`:
   *     under a caller-configured session with AQE on, an erased node
   *     leaves the observation promise forever incomplete — `get`
   *     would hang the loop at the termination round instead of
@@ -215,11 +216,12 @@ object StableMatching {
           .select(col("bk.sm_p").as("sm_p"), col("sm_a"),
             col("bk.sm_rp").as("sm_rp"), col("bk.sm_ra").as("sm_ra")))
         // AQE's empty-relation propagation ERASES the CollectMetrics
-        // node when the observed aggregate materializes empty (the
-        // DebugObserve finding) — AQE is off inside the loop, but keep
-        // the absent-metric fallback so a caller-configured session
-        // can't silently mis-terminate: absent means "probably empty",
-        // confirmed with one isEmpty (at most once, at termination).
+        // node when the observed aggregate materializes empty
+        // (TextDedupSpec's zero-candidate test) — AQE is off inside the
+        // loop, but keep the absent-metric fallback so a
+        // caller-configured session can't silently mis-terminate:
+        // absent means "probably empty", confirmed with one isEmpty (at
+        // most once, at termination).
         // BOUNDED await on the observation future, NOT obs.get: an
         // erased node never completes the promise, so get would hang
         // the loop forever at exactly the termination round (round-11

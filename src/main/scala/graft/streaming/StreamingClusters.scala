@@ -56,7 +56,7 @@ import graft.operators.{ConnectedComponents, Frames}
   *     internal cache ([[Frames.freeCheckpoint]] +
   *     `labelsWithHandle`) the moment the new state is materialized —
   *     a long-running monitor must not lease memory to driver-GC
-  *     timing (the round-12 DebugCacheLeak finding).
+  *     timing (StreamingClustersSpec's no-cache-leak test).
   */
 final class StreamingClusters(spark: SparkSession,
     stateDir: Option[String] = None) {

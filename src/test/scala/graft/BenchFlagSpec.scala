@@ -8,6 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * executable: the clean-run envelope must stay canonical, each
   * measured contamination regime must flag, and the two rules must be
   * independent (either alone flips the verdict).
+  *
+  * The last two cases run a live [[Bench.Sentinel]] window: the load
+  * rule reads the cores OTHER processes keep busy, so external busy
+  * loops flag a window and the same load on this JVM's own threads does
+  * not.
   */
 class BenchFlagSpec extends AnyFunSuite {
   private val cleanLoads = Seq("a" -> 2.2, "b" -> 7.0, "c" -> 8.6)
@@ -64,5 +69,51 @@ class BenchFlagSpec extends AnyFunSuite {
       Bench.adjudicate(Seq.empty, Seq.empty, 16.0)
     assert(med === -1.0 && steal.isEmpty && load.isEmpty)
     assert(verdict === "canonical")
+  }
+
+  private val cores = Runtime.getRuntime.availableProcessors
+
+  /** One live sentinel window while `load` runs; the load-flagged tags. */
+  private def flaggedUnder(load: => (() => Unit)): (Seq[String], Double) = {
+    val sentinel = new Bench.Sentinel("bench-flag-spec")
+    val stop = load
+    try {
+      Thread.sleep(300)
+      sentinel.window("w")
+    } finally stop()
+    val (_, _, flagged, _) = Bench.adjudicate(sentinel.samples.toSeq,
+      sentinel.foreign.toSeq, cores / 2.0)
+    (flagged, sentinel.foreign.head._2)
+  }
+
+  test("cores external busy loops flag the window by the load rule") {
+    val (flagged, foreign) = flaggedUnder {
+      val hogs = (1 to cores).map(_ => new ProcessBuilder("timeout", "10",
+        "sh", "-c", "while :; do :; done").start())
+      () => hogs.foreach { p =>
+        p.descendants().forEach(c => { c.destroy(); () })
+        p.destroy()
+        p.waitFor(5, java.util.concurrent.TimeUnit.SECONDS)
+      }
+    }
+    assert(flagged === Seq("w"), s"foreign cores $foreign of $cores")
+  }
+
+  test("cores busy threads inside this JVM do not flag the window") {
+    val (flagged, foreign) = flaggedUnder {
+      @volatile var running = true
+      val threads = (1 to cores).map { _ =>
+        val t = new Thread(() => {
+          var h = 1L
+          while (running) h = java.lang.Long.rotateLeft(h * 31L + 7L, 13)
+          if (h == 42L) println(h)
+        })
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      () => { running = false; threads.foreach(_.join()) }
+    }
+    assert(flagged.isEmpty, s"foreign cores $foreign of $cores")
   }
 }

@@ -20,8 +20,10 @@ import graft.queries.QueryRegistry
   * the one documented exemption (its durability is the streaming state
   * table — see the call-site comment in StreamingClusters.processBatch).
   *
-  * The last case pins what LoopObs relies on: a cut, in either mode,
-  * delivers the `observe()` metrics of the frame it materializes.
+  * Two cases close the file: a cut, in either mode, delivers the
+  * `observe()` metrics of the frame it materializes (what LoopObs relies
+  * on), and a loop deletes the checkpoint-dir files of the reliable
+  * cuts it supersedes.
   */
 class DurableCheckpointParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -167,6 +169,39 @@ class DurableCheckpointParitySpec extends AnyFunSuite {
     TestSpark.withCheckpointDir { dir =>
       bothCases()
       assert(wroteReliable(dir))
+    }
+  }
+
+  test("loops delete the reliable cuts they supersede") {
+    import scala.jdk.CollectionConverters._
+    def rddDirs(dir: java.nio.file.Path): Int =
+      java.nio.file.Files.walk(dir).iterator().asScala
+        .count(p => java.nio.file.Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith("rdd-"))
+    def checkpointedLeaves(df: DataFrame): Int =
+      df.queryExecution.analyzed.collectLeaves().flatMap {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.getCheckpointFile
+        case _ => None
+      }.distinct.size
+    TestSpark.withCheckpointDir { dir =>
+      // a 200-edge chain: every propagation round cuts, and each round
+      // supersedes the previous round's cut
+      val cc = ConnectedComponents.labels(
+        sym((0L until 200L).map(i => (i, i + 1))), (0L to 200L).toDF("id"))
+      assert(cc.count() === 201L)
+      val ccLeaves = checkpointedLeaves(cc)
+      assert(rddDirs(dir) <= ccLeaves,
+        s"ConnectedComponents.labels left ${rddDirs(dir)} rdd dirs for " +
+          s"$ccLeaves checkpointed leaves")
+      // 60 hops: one level per hop, then one empty level at exhaustion
+      val bfs = Bfs.distances((0L until 60L).map(i => (i, i + 1))
+        .toDF("src", "dst"), Seq(0L).toDF("seed"), maxHops = 100)
+      assert(bfs.count() === 61L)
+      val bfsLeaves = checkpointedLeaves(bfs)
+      assert(rddDirs(dir) <= ccLeaves + bfsLeaves,
+        s"Bfs.distances left ${rddDirs(dir) - ccLeaves} rdd dirs for " +
+          s"$bfsLeaves checkpointed leaves")
     }
   }
 }

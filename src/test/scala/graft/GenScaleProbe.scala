@@ -1,46 +1,27 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Round-10 sf1 scale probe (VERDICT ask #5).
+/** sf1 scale data.
   *
-  * [[GenScaleProbe]] synthesizes a 10×-amplified copy of the sf0.1
-  * tables under /tmp — the driver ships no sf1 data and its testdata is
-  * read-only. Each copy shifts every key column by a disjoint offset
-  * (FKs stay consistent within a copy; distinct-key counts scale 10×,
-  * matching how the generator scales), dimension tables (region,
-  * nation) keep their fixed cardinality, and each document copy gets a
-  * one-token perturbation — 10 IDENTICAL copies of every text would
+  * Synthesizes a 10×-amplified copy of the sf0.1 tables under /tmp —
+  * the driver ships no sf1 data and its testdata is read-only. Each
+  * copy shifts every key column by a disjoint offset (FKs stay
+  * consistent within a copy; distinct-key counts scale 10×, matching
+  * how the generator scales), dimension tables (region, nation) keep
+  * their fixed cardinality, and each document copy gets a one-token
+  * perturbation — 10 IDENTICAL copies of every text would
   * square the dedup pair counts (a worst-case stress, not "sf1";
   * near-dup clusters should replicate linearly like the generator's
   * do).
   *
-  * [[ScaleProbe]] times the judge's top-15 cost queries once cold and
-  * once steady against any SF dir and prints per-query seconds plus
-  * spill/shuffle stage totals from a listener — the evidence for the
-  * PLANS.md linear-scaling table.
+  * Time queries on the copy with `Bench` (SPARK_GRAFT_SF_DIR at the
+  * copy, SPARK_GRAFT_BENCH_FILTER for the entries): pass 1 is the cold
+  * sample, the minimum the steady one, and `bench_out.json` carries
+  * each entry's spill and shuffle bytes.
   */
 object GenScaleProbe {
   private val K = 100000000L // key shift per copy; >> any sf0.1 key
-
-  /** Bench-grade session (local[32], 32 shuffle partitions) — the probe
-    * measures engine cost, not the local[4] test harness. */
-  private[graft] def benchSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.chunkBase64String.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
@@ -68,7 +49,7 @@ object GenScaleProbe {
     // are not bit-replicas of each other. Both engines read the same
     // generated parquet, so determinism is by construction.
     val mode = if (args.length > 3) args(3) else "stress"
-    val spark = benchSession()
+    val spark = Session.local(32)
     val textMode = if (mode == "jitter") "disjoint" else mode
     def amplify(table: String, keyCols: Seq[String],
         perturbText: Boolean = false, nameCols: Seq[String] = Nil,
@@ -152,61 +133,6 @@ object GenScaleProbe {
       spark.read.parquet(s"$src/$dim.parquet")
         .write.mode("overwrite").parquet(s"$dst/$dim.parquet")
     println(s"[gen] done -> $dst")
-    spark.stop()
-  }
-}
-
-object ScaleProbe {
-  final class SpillListener extends SparkListener {
-    @volatile var memSpill = 0L
-    @volatile var diskSpill = 0L
-    @volatile var shuffleWrite = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        memSpill += m.memoryBytesSpilled
-        diskSpill += m.diskBytesSpilled
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
-    def reset(): Unit = { memSpill = 0L; diskSpill = 0L; shuffleWrite = 0L }
-  }
-
-  val top15 = Seq("q26_minhash_candidates", "q136_winnow_pairs",
-    "q167_novelty_curve", "q107_entity_fuzzy_match", "q117_source_overlap",
-    "q252_newsvendor_quantiles", "q202_theilsen_trend",
-    "q229_bottleneck_suppliers", "q217_equidepth_histogram",
-    "q61_corpus_curation", "q251_abc_xyz", "q133_ivf_probe_sweep",
-    "q172_pmi_pairs", "q143_bm25_topk", "q255_demand_quadrants")
-
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/tmp/sfprobe_sf1")
-    val names = if (args.length > 1) args(1).split(",").toSeq else top15
-    val spark = GenScaleProbe.benchSession()
-    val listener = new SpillListener
-    spark.sparkContext.addSparkListener(listener)
-    val resolved = names.map { n =>
-      SparkEntry.queries.keys.find(_.startsWith(n)).getOrElse(n)
-    }
-    for (name <- resolved) {
-      SparkEntry.queries.get(name) match {
-        case None => println(s"[probe] $name: NOT FOUND")
-        case Some(fn) =>
-          for (pass <- Seq("cold", "steady")) {
-            listener.reset()
-            val t0 = System.nanoTime()
-            try {
-              val n = fn(spark, dir).count()
-              Thread.sleep(300) // let stage-completed events drain
-              println(f"[probe] $name $pass: ${(System.nanoTime() - t0) / 1e9}%.2f s, " +
-                f"$n rows, spill=${(listener.memSpill + listener.diskSpill) / 1e6}%.1f MB, " +
-                f"shuffleWrite=${listener.shuffleWrite / 1e6}%.1f MB")
-            } catch { case e: Throwable =>
-              println(s"[probe] $name $pass FAILED: ${e.getMessage}")
-            }
-          }
-      }
-    }
     spark.stop()
   }
 }

@@ -86,17 +86,26 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the runtime filter only when the dim side carries a LIKELY-SELECTIVE
     // predicate, and Catalyst's isLikelySelective pattern list wants an
     // attribute-vs-literal comparison: a bare boolean flag column does NOT
-    // qualify (found empirically — `=== true` boolean-simplifies away)
+    // qualify (`=== true` boolean-simplifies away; asserted below)
     val firstDate = fact.select(min(col("occurred_date"))).head().getDate(0)
     fact.select(col("occurred_date").as("d")).distinct()
       .withColumn("label",
         when(col("d") === lit(firstDate), "first").otherwise("rest"))
+      .withColumn("is_first", col("d") === lit(firstDate))
       .write.mode("overwrite").parquet(dimOut)
     val dim = spark.read.parquet(dimOut).filter(col("label") === "first")
     val joined = fact.join(dim, col("occurred_date") === col("d"))
     val planned = joined.queryExecution.executedPlan.toString
     assert(planned.contains("dynamicpruning"),
       s"fact scan must carry a dynamic partition-pruning filter:\n$planned")
+    // the same date selected by the boolean flag gets no runtime filter:
+    // express dimension filters as value comparisons, not flag columns
+    val flagged = fact.join(
+      spark.read.parquet(dimOut).filter(col("is_first") === true),
+      col("occurred_date") === col("d"))
+    assert(!flagged.queryExecution.optimizedPlan.toString
+      .contains("dynamicpruning"),
+      "a bare boolean flag on the dimension must not qualify for DPP")
     val n = joined.count()
     assert(n > 0)
     // pruned result equals the statically-filtered equivalent

@@ -109,7 +109,7 @@ class StreamingClustersSpec extends AnyFunSuite {
     val after = cachedRdds()
     // each batch frees the previous state's blocks and the CC loop's
     // internal cache; without the round-12 fix this grew ~2 RDDs/batch
-    // (DebugCacheLeak measured 14 leaked caches from ONE labels() call)
+    // (14 leaked caches were measured from ONE labels() call)
     assert(after <= steady + 2,
       s"cached RDD count grew from $steady to $after over 8 batches")
   }

@@ -183,7 +183,7 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("zero-candidate corpus: AQE drops observed metrics; bucketStats always delivers") {
     // disjoint gram sets → every bucket has one member → zero pairs.
-    // Verified behavior (DebugObserve): AQE's empty-relation propagation
+    // Verified behavior, pinned here: AQE's empty-relation propagation
     // replaces the downstream plan INCLUDING the executed CollectMetrics
     // stage, so the listener never sees the metrics — which is itself
     // conclusive (zero pairs ⇒ no bucket ≥ 2 ⇒ no overflow). The
