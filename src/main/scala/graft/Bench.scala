@@ -37,11 +37,12 @@ object Bench {
     val sentinel = new Sentinel("bench")
     val recorder = new Recorder(spark)
 
-    // Flagship ingest throughput pass: a fresh (unpersisted) end-to-end
-    // run of the full decode→validate→sample→normalize→dedup chain over
-    // 200k synthetic envelopes — comparable to the reference's msgs/min
-    // step-load numbers (BASELINE.md). Per-pass failures are tolerated
-    // like the per-query timings; fatal JVM errors propagate.
+    // Flagship ingest throughput pass: one end-to-end run of the full
+    // decode→validate→sample→normalize→dedup chain over 500k synthetic
+    // envelopes (`IngestPipeline.run` leaves its routed batch cached, and
+    // the next pass's run replaces it) — comparable to the reference's
+    // msgs/min step-load numbers (BASELINE.md). Per-pass failures are
+    // tolerated like the per-query timings; fatal JVM errors propagate.
     // 500k envelopes per throughput pass: at 200k the ~0.5-1 s fixed
     // job cost (stage scheduling + codegen reuse checks) was a third of
     // the pass, understating steady-state env/s — the measured rate is
@@ -215,7 +216,7 @@ object Bench {
 
   /** Warm-up before any timing: JIT + codegen + parquet footer/page-cache
     * priming over every table, plus one small registry entry. */
-  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
     for (t <- Tables.starTables) {
       try Tables.table(spark, sfDir, t).count()
       catch { case _: Throwable => }
@@ -231,7 +232,7 @@ object Bench {
     * full-registry run. Totals from filtered runs are NOT comparable to
     * full runs (shared-frame builds land on fewer consumers); per-query
     * steady minima are. */
-  private[graft] def entries(): Seq[(String, Entry)] = {
+  private def entries(): Seq[(String, Entry)] = {
     val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
@@ -239,7 +240,7 @@ object Bench {
       .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
   }
 
-  private[graft] def writeRecord(path: String, line: String, tag: String): Unit =
+  private def writeRecord(path: String, line: String, tag: String): Unit =
     try java.nio.file.Files.write(java.nio.file.Paths.get(path),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
@@ -400,7 +401,7 @@ object Bench {
   // after one perfbench run on a quiet 4-core box, over the cores/2
   // threshold); it stays in the record as information only.
 
-  /** The contention sentinel of both bench mains: each [[window]] times
+  /** The bench's contention sentinel: each [[window]] times
     * the probe and reads the foreign busy cores over the same interval;
     * [[summary]] adjudicates the windows. */
   private[graft] final class Sentinel(logTag: String) {

@@ -57,16 +57,11 @@ private[graft] object LoopTuning {
     * production folds (q332's 36M-pref sf1 market) KEEP codegen while
     * scheduler-latency-bound benches drop it. Same scale-adaptive
     * discipline as widthFor — not a local[32] constant: the decision
-    * input is the loop's own row count. SPARK_GRAFT_LOOP_CODEGEN=on|off
-    * forces either side (the A/B kill-switch). */
+    * input is the loop's own row count. */
   private val CodegenRowThreshold = 4000000L
 
   private def codegenFor(rows: Long): String =
-    sys.env.get("SPARK_GRAFT_LOOP_CODEGEN") match {
-      case Some("on") => "true"
-      case Some("off") => "false"
-      case _ => if (rows < CodegenRowThreshold) "false" else "true"
-    }
+    (rows >= CodegenRowThreshold).toString
 
   /** The session's TRUE shuffle width — the saved pre-loop value when a
     * tuned loop is running, else the live conf value. Keeps width
@@ -83,17 +78,13 @@ private[graft] object LoopTuning {
     math.min(trueSessionWidth(spark),
       math.max(1L, rows / 50000L + 1L)).toString
 
-  private def tuningOff: Boolean =
-    sys.env.get("SPARK_GRAFT_LOOP_TUNING").contains("off")
-
   /** Re-derive the loop's shuffle width mid-loop from the CURRENT row
     * count — for loops whose working set can GROW across rounds
     * (transitive closure's reach frame tends toward |V|², far past the
     * seed edge count the loop entered with). Still capped at the true
-    * session width; no-op when tuning is off or when no tuned loop is
-    * active for the session (so a stray call can't narrow a session). */
+    * session width; no-op when no tuned loop is active for the session
+    * (so a stray call can't narrow a session). */
   def updateWidth(spark: SparkSession, rows: Long): Unit = {
-    if (tuningOff) return
     val inLoop = active.synchronized(active.contains(spark))
     if (inLoop) {
       spark.conf.set("spark.sql.shuffle.partitions", widthFor(spark, rows))
@@ -111,10 +102,9 @@ private[graft] object LoopTuning {
   // frames (no wide columns to force) under this loop conf, which is a
   // different trade and measured 6.7 → 3.0 s — see Hits.scoresFp.
 
-  /** Run `body` with loop-sized shuffles and AQE off; restore after.
-    * `SPARK_GRAFT_LOOP_TUNING=off` bypasses (the A/B kill-switch). */
+  /** Run `body` with loop-sized shuffles, AQE off and the codegen rule
+    * of [[codegenFor]]; restore all three after. */
   def withLoopConf[T](spark: SparkSession, rows: Long)(body: => T): T = {
-    if (tuningOff) return body
     active.synchronized {
       val n = active.getOrElseUpdate(spark,
         new Nesting(Nil, spark.conf.get("spark.sql.adaptive.enabled")))

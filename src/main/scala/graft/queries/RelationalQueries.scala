@@ -796,8 +796,8 @@ object RelationalQueries {
         val (sa, sb) = (col("sa").cast("double"), col("sb").cast("double"))
         stats.select(col("o_orderpriority"), col("n_pairs"),
             ((nd * col("sab").cast("double") - sa * sb) /
-              (sqrt(nd * col("saa").cast("double") - sa * sa) *
-                sqrt(nd * col("sbb").cast("double") - sb * sb)))
+              nullif(sqrt(nd * col("saa").cast("double") - sa * sa) *
+                sqrt(nd * col("sbb").cast("double") - sb * sb), lit(0.0)))
               .as("autocorr_lag1"))
           .orderBy("o_orderpriority")
       },
@@ -824,10 +824,10 @@ object RelationalQueries {
              |SELECT o_orderpriority, n_pairs,
              |  (CAST(n_pairs AS DOUBLE) * CAST(sab AS DOUBLE)
              |    - CAST(sa AS DOUBLE) * CAST(sb AS DOUBLE))
-             |  / (sqrt(CAST(n_pairs AS DOUBLE) * CAST(saa AS DOUBLE)
+             |  / NULLIF(sqrt(CAST(n_pairs AS DOUBLE) * CAST(saa AS DOUBLE)
              |      - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
              |    * sqrt(CAST(n_pairs AS DOUBLE) * CAST(sbb AS DOUBLE)
-             |      - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)))
+             |      - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)), 0)
              |    AS autocorr_lag1
              |FROM stats ORDER BY o_orderpriority""".stripMargin)),
 

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming per-key AMS F₂ (second frequency moment) monitor — the
   * streaming twin of the batch sketch (q317): each key maintains the
@@ -46,30 +45,24 @@ object StreamingAmsF2 {
     1L - 2L * (d(3) & 1)
   }
 
-  private def stateFn(key: String, events: Iterator[IdEvent],
-      state: GroupState[AmsState]): Iterator[AmsReading] = {
-    val batch = events.toSeq
-    if (batch.isEmpty) return Iterator.empty
-    val st = state.getOption
-      .getOrElse(AmsState(0L, Seq.fill(Counters)(0L)))
-    val c = st.c.toArray
-    batch.foreach { e =>
-      var j = 0
-      while (j < Counters) { c(j) += sign(j, e.item); j += 1 }
-    }
-    val next = AmsState(st.n + batch.length, c.toSeq)
-    state.update(next)
-    val est = c.map(x => x * x).sum / Counters
-    Iterator.single(AmsReading(key, next.n, est, next.c))
-  }
+  private[graft] def fold: KeyedFold[IdEvent, String, AmsState, AmsReading] =
+    KeyedFold(_.key, Ordering.by(e => (e.ts, e.id)),
+      AmsState(0L, Seq.fill(Counters)(0L)), (key, pre, sorted) => {
+        val c = pre.c.toArray
+        sorted.foreach { e =>
+          var j = 0
+          while (j < Counters) { c(j) += sign(j, e.item); j += 1 }
+        }
+        val next = AmsState(pre.n + sorted.length, c.toSeq)
+        val est = c.map(x => x * x).sum / Counters
+        (next, Iterator.single(AmsReading(key, next.n, est, next.c)))
+      })
 
   /** One reading per (key, micro-batch that touched it). State never
     * expires — F₂ is a running property of the whole feed. */
   def monitor(events: Dataset[IdEvent])(
       implicit spark: SparkSession): Dataset[AmsReading] = {
     import spark.implicits._
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[AmsState, AmsReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(stateFn)
+    fold.run(events)
   }
 }

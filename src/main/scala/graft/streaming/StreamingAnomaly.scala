@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming z-score anomaly detection with running moments — the
   * streaming-native twin of the batch outlier sweep (q93): each event is
@@ -28,29 +27,26 @@ object StreamingAnomaly {
   final case class Anomaly(event_id: Long, event_type: String,
       ts: java.sql.Timestamp, value: Double, z: Double, n_so_far: Long)
 
-  private def stateFn(threshold: Double, minSamples: Long)(key: String,
-      events: Iterator[ValueEvent],
-      state: GroupState[Moments]): Iterator[Anomaly] = {
-    // deterministic intra-batch order: (ts, event_id)
-    val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-    var m = state.getOption.getOrElse(Moments(0L, 0.0, 0.0))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Anomaly]
-    sorted.foreach { e =>
-      if (m.n >= minSamples) {
-        val mean = m.sum / m.n
-        val variance = math.max(0.0, m.sumSq / m.n - mean * mean)
-        val sd = math.sqrt(variance)
-        if (sd > 0.0) {
-          val z = (e.value - mean) / sd
-          if (math.abs(z) > threshold)
-            out += Anomaly(e.event_id, e.event_type, e.ts, e.value, z, m.n)
+  private[graft] def fold(threshold: Double, minSamples: Long)
+      : KeyedFold[ValueEvent, String, Moments, Anomaly] =
+    KeyedFold(_.event_type, Ordering.by(e => (e.ts.getTime, e.event_id)),
+      Moments(0L, 0.0, 0.0), (_, pre, sorted) => {
+        val out = scala.collection.mutable.ArrayBuffer.empty[Anomaly]
+        val m = sorted.foldLeft(pre) { (m, e) =>
+          if (m.n >= minSamples) {
+            val mean = m.sum / m.n
+            val variance = math.max(0.0, m.sumSq / m.n - mean * mean)
+            val sd = math.sqrt(variance)
+            if (sd > 0.0) {
+              val z = (e.value - mean) / sd
+              if (math.abs(z) > threshold)
+                out += Anomaly(e.event_id, e.event_type, e.ts, e.value, z, m.n)
+            }
+          }
+          Moments(m.n + 1, m.sum + e.value, m.sumSq + e.value * e.value)
         }
-      }
-      m = Moments(m.n + 1, m.sum + e.value, m.sumSq + e.value * e.value)
-    }
-    state.update(m)
-    out.iterator
-  }
+        (m, out.iterator)
+      })
 
   /** Flag events whose value deviates more than `threshold` standard
     * deviations from their type's running mean. Works on a streaming or
@@ -59,9 +55,6 @@ object StreamingAnomaly {
   def anomalies(events: Dataset[ValueEvent], threshold: Double = 3.0,
       minSamples: Long = 30L)(implicit spark: SparkSession): Dataset[Anomaly] = {
     import spark.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[Moments, Anomaly](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(threshold, minSamples))
+    fold(threshold, minSamples).run(events)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Sha256Prefix
 
@@ -83,21 +82,16 @@ object StreamingDedup {
     d.map(b => f"$b%02x").mkString
   }
 
-  private def exactFn(key: String, events: Iterator[DocEvent],
-      state: GroupState[Long]): Iterator[ExactVerdict] = {
-    // deterministic intra-batch order: min doc_id of a batch becomes the
-    // keeper when the content is new (the batch operator's min() rule)
-    val sorted = events.toSeq.sortBy(_.doc_id)
-    var keeper = state.getOption.getOrElse(Long.MaxValue)
-    val out = sorted.map { e =>
-      if (keeper == Long.MaxValue) {
-        keeper = e.doc_id
-        ExactVerdict(e.doc_id, e.doc_id, is_duplicate = false)
-      } else ExactVerdict(e.doc_id, keeper, is_duplicate = true)
-    }
-    state.update(keeper)
-    out.iterator
-  }
+  // deterministic intra-batch order: min doc_id of a batch becomes the
+  // keeper when the content is new (the batch operator's min() rule)
+  private[graft] def exactFold: KeyedFold[DocEvent, String, Long, ExactVerdict] =
+    KeyedFold(d => contentHash(d.text), Ordering.by(_.doc_id), Long.MaxValue,
+      (_, pre, sorted) => {
+        val fresh = pre == Long.MaxValue
+        val keeper = if (fresh) sorted.head.doc_id else pre
+        (keeper, sorted.iterator.zipWithIndex.map { case (e, i) =>
+          ExactVerdict(e.doc_id, keeper, is_duplicate = !fresh || i > 0) })
+      })
 
   /** Exact-duplicate verdict per arriving document, against all content
     * seen so far. Works on a streaming or batch Dataset; state never
@@ -106,33 +100,29 @@ object StreamingDedup {
   def exactVerdicts(docs: Dataset[DocEvent])(
       implicit spark: SparkSession): Dataset[ExactVerdict] = {
     import spark.implicits._
-    docs.groupByKey(d => contentHash(d.text))
-      .flatMapGroupsWithState[Long, ExactVerdict](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(exactFn)
+    exactFold.run(docs)
   }
 
-  private def bucketFn(maxBucketSize: Int)(key: (Int, Long),
-      events: Iterator[BucketEvent],
-      state: GroupState[BucketState]): Iterator[CandidatePair] = {
-    val sorted = events.toSeq.sortBy(_.doc_id)
-    var members = state.getOption.map(_.members)
-      .getOrElse(Array.emptyLongArray)
-    val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
-    sorted.foreach { e =>
-      members.foreach { m =>
-        if (m != e.doc_id)
-          out += CandidatePair(math.min(m, e.doc_id),
-            math.max(m, e.doc_id), key._1)
-      }
-      // cap mirrors the batch operator's bounded bucket: an overflowing
-      // doc still gets checked against the stored members (delivery
-      // keeps working) but is not stored (state stays bounded)
-      if (members.length < maxBucketSize && !members.contains(e.doc_id))
-        members = members :+ e.doc_id
-    }
-    state.update(BucketState(members))
-    out.iterator
-  }
+  private[graft] def bucketFold(maxBucketSize: Int)
+      : KeyedFold[BucketEvent, (Int, Long), BucketState, CandidatePair] =
+    KeyedFold(e => (e.band, e.minhash), Ordering.by(_.doc_id),
+      BucketState(Array.emptyLongArray), (key, pre, sorted) => {
+        val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
+        val members = sorted.foldLeft(pre.members) { (members, e) =>
+          members.foreach { m =>
+            if (m != e.doc_id)
+              out += CandidatePair(math.min(m, e.doc_id),
+                math.max(m, e.doc_id), key._1)
+          }
+          // cap mirrors the batch operator's bounded bucket: an
+          // overflowing doc still gets checked against the stored members
+          // (delivery keeps working) but is not stored (state stays bounded)
+          if (members.length < maxBucketSize && !members.contains(e.doc_id))
+            members :+ e.doc_id
+          else members
+        }
+        (BucketState(members), out.iterator)
+      })
 
   /** Near-dup candidate pairs of each arriving document against the
     * corpus so far: (doc_a, doc_b, band), doc_a < doc_b, one row per
@@ -141,15 +131,11 @@ object StreamingDedup {
       maxBucketSize: Int = graft.operators.TextDedup.DefaultMaxBucketSize)(
       implicit spark: SparkSession): Dataset[CandidatePair] = {
     import spark.implicits._
-    docs
-      .flatMap { d =>
-        val sig = signature(d.text, bands)
-        sig.iterator.zipWithIndex.map { case (mh, b) =>
-          BucketEvent(b, mh, d.doc_id)
-        }
+    bucketFold(maxBucketSize).run(docs.flatMap { d =>
+      val sig = signature(d.text, bands)
+      sig.iterator.zipWithIndex.map { case (mh, b) =>
+        BucketEvent(b, mh, d.doc_id)
       }
-      .groupByKey(e => (e.band, e.minhash))
-      .flatMapGroupsWithState[BucketState, CandidatePair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(bucketFn(maxBucketSize))
+    })
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming embedding-centroid drift monitor — the streaming-native
   * twin of the batch per-source drift report (q126): each source's
@@ -34,27 +33,26 @@ object StreamingDrift {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  private def stateFn(reference: Array[Double], alarmBelow: Double,
-      minSamples: Long)(key: String, events: Iterator[VecEvent],
-      state: GroupState[CentroidState]): Iterator[DriftReading] = {
-    // deterministic intra-batch fold order
-    val sorted = events.toSeq.sortBy(_.vec_id)
+  private[graft] def fold(reference: Array[Double], alarmBelow: Double,
+      minSamples: Long)
+      : KeyedFold[VecEvent, String, CentroidState, DriftReading] = {
     val dims = reference.length
-    var st = state.getOption.getOrElse(CentroidState(0L, new Array[Double](dims)))
-    sorted.foreach { e =>
-      require(e.embedding.length == dims,
-        s"dim mismatch: got ${e.embedding.length}, reference has $dims")
-      val s = st.sums.clone()
-      var i = 0
-      while (i < dims) { s(i) += e.embedding(i); i += 1 }
-      st = CentroidState(st.n + 1, s)
-    }
-    state.update(st)
-    if (st.n >= minSamples && sorted.nonEmpty) {
-      // the mean is sums/n, but cosine is scale-invariant: compare sums
-      val cos = cosine(st.sums, reference)
-      Iterator.single(DriftReading(key, st.n, cos, cos < alarmBelow))
-    } else Iterator.empty
+    KeyedFold(_.source, Ordering.by(_.vec_id),
+      CentroidState(0L, new Array[Double](dims)), (key, pre, sorted) => {
+        val st = sorted.foldLeft(pre) { (st, e) =>
+          require(e.embedding.length == dims,
+            s"dim mismatch: got ${e.embedding.length}, reference has $dims")
+          val s = st.sums.clone()
+          var i = 0
+          while (i < dims) { s(i) += e.embedding(i); i += 1 }
+          CentroidState(st.n + 1, s)
+        }
+        (st, if (st.n >= minSamples) {
+          // the mean is sums/n, but cosine is scale-invariant: compare sums
+          val cos = cosine(st.sums, reference)
+          Iterator.single(DriftReading(key, st.n, cos, cos < alarmBelow))
+        } else Iterator.empty)
+      })
   }
 
   /** One drift reading per (source, micro-batch that touched it), once
@@ -64,9 +62,6 @@ object StreamingDrift {
       alarmBelow: Double = 0.8, minSamples: Long = 10L)(
       implicit spark: SparkSession): Dataset[DriftReading] = {
     import spark.implicits._
-    vecs.groupByKey(_.source)
-      .flatMapGroupsWithState[CentroidState, DriftReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(reference, alarmBelow, minSamples))
+    fold(reference, alarmBelow, minSamples).run(vecs)
   }
 }

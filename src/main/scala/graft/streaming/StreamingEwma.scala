@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming per-key EWMA level/deviation monitor — the streaming twin
   * of the batch EWMA smoother (q203): each key holds its exponentially
@@ -29,31 +28,25 @@ object StreamingEwma {
       ewma: Double, ew_stddev: Double, last_value: Double,
       alarm: Boolean)
 
-  private def stateFn(alpha: Double, k: Double, minSamples: Long)(
-      key: String, events: Iterator[ValueEvent],
-      state: GroupState[EwmaState]): Iterator[EwmaReading] = {
-    val sorted = events.toSeq.sortBy(e => (e.ts, e.id))
-    if (sorted.isEmpty) return Iterator.empty
-    var st = state.getOption.getOrElse(EwmaState(0L, 0.0, 0.0))
-    val preLevel = st.ewma
-    val preVar = st.ewmvar
-    val preN = st.n
-    sorted.foreach { e =>
-      if (st.n == 0L) st = EwmaState(1L, e.value, 0.0)
-      else {
-        val diff = e.value - st.ewma
-        val incr = alpha * diff
-        st = EwmaState(st.n + 1, st.ewma + incr,
-          (1.0 - alpha) * (st.ewmvar + diff * incr))
-      }
-    }
-    state.update(st)
-    val last = sorted.last.value
-    val alarm = preN >= minSamples && preVar > 0.0 &&
-      math.abs(last - preLevel) > k * math.sqrt(preVar)
-    Iterator.single(EwmaReading(key, st.n, st.ewma,
-      math.sqrt(st.ewmvar), last, alarm))
-  }
+  private[graft] def fold(alpha: Double, k: Double, minSamples: Long)
+      : KeyedFold[ValueEvent, String, EwmaState, EwmaReading] =
+    KeyedFold(_.key, Ordering.by(e => (e.ts, e.id)), EwmaState(0L, 0.0, 0.0),
+      (key, pre, sorted) => {
+        val st = sorted.foldLeft(pre) { (st, e) =>
+          if (st.n == 0L) EwmaState(1L, e.value, 0.0)
+          else {
+            val diff = e.value - st.ewma
+            val incr = alpha * diff
+            EwmaState(st.n + 1, st.ewma + incr,
+              (1.0 - alpha) * (st.ewmvar + diff * incr))
+          }
+        }
+        val last = sorted.last.value
+        val alarm = pre.n >= minSamples && pre.ewmvar > 0.0 &&
+          math.abs(last - pre.ewma) > k * math.sqrt(pre.ewmvar)
+        (st, Iterator.single(EwmaReading(key, st.n, st.ewma,
+          math.sqrt(st.ewmvar), last, alarm)))
+      })
 
   /** One reading per (key, micro-batch that touched it). State never
     * expires — the level IS the baseline. */
@@ -61,9 +54,6 @@ object StreamingEwma {
       k: Double = 3.0, minSamples: Long = 5L)(
       implicit spark: SparkSession): Dataset[EwmaReading] = {
     import spark.implicits._
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[EwmaState, EwmaReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(alpha, k, minSamples))
+    fold(alpha, k, minSamples).run(events)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming data-freshness monitor — the ops "is this source stale"
   * SLO panel (reference analog: the pipeline-health dashboard the ETL
@@ -30,32 +29,26 @@ object StreamingFreshness {
       max_event_ms: Long, mean_lag_ms: Double, worst_lag_ms: Long,
       watermark_behind_ms: Long, stale: Boolean)
 
-  private def stateFn(maxAllowedLagMs: Long)(
-      key: String, events: Iterator[TimedEvent],
-      state: GroupState[FreshState]): Iterator[FreshReading] = {
-    val sorted = events.toSeq.sortBy(e => (e.arrivalMs, e.id))
-    if (sorted.isEmpty) return Iterator.empty
-    var st = state.getOption.getOrElse(FreshState(0L, Long.MinValue, 0L, 0L))
-    sorted.foreach { e =>
-      val lag = math.max(0L, e.arrivalMs - e.eventMs)
-      st = FreshState(st.n + 1, math.max(st.maxEventMs, e.eventMs),
-        st.lagSumMs + lag, math.max(st.maxLagMs, lag))
-    }
-    state.update(st)
-    val batchClock = sorted.map(_.arrivalMs).max
-    val behind = batchClock - st.maxEventMs
-    Iterator.single(FreshReading(key, st.n, st.maxEventMs,
-      st.lagSumMs.toDouble / st.n.toDouble, st.maxLagMs, behind,
-      behind > maxAllowedLagMs))
-  }
+  private[graft] def fold(maxAllowedLagMs: Long)
+      : KeyedFold[TimedEvent, String, FreshState, FreshReading] =
+    KeyedFold(_.source, Ordering.by(e => (e.arrivalMs, e.id)),
+      FreshState(0L, Long.MinValue, 0L, 0L), (key, pre, sorted) => {
+        val st = sorted.foldLeft(pre) { (st, e) =>
+          val lag = math.max(0L, e.arrivalMs - e.eventMs)
+          FreshState(st.n + 1, math.max(st.maxEventMs, e.eventMs),
+            st.lagSumMs + lag, math.max(st.maxLagMs, lag))
+        }
+        val batchClock = sorted.map(_.arrivalMs).max
+        val behind = batchClock - st.maxEventMs
+        (st, Iterator.single(FreshReading(key, st.n, st.maxEventMs,
+          st.lagSumMs.toDouble / st.n.toDouble, st.maxLagMs, behind,
+          behind > maxAllowedLagMs)))
+      })
 
   /** One freshness reading per (source, micro-batch that touched it). */
   def monitor(events: Dataset[TimedEvent], maxAllowedLagMs: Long = 60000L)(
       implicit spark: SparkSession): Dataset[FreshReading] = {
     import spark.implicits._
-    events.groupByKey(_.source)
-      .flatMapGroupsWithState[FreshState, FreshReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(maxAllowedLagMs))
+    fold(maxAllowedLagMs).run(events)
   }
 }

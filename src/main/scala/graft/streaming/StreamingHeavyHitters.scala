@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming Misra–Gries heavy-hitters monitor — the streaming twin of
   * the batch [[graft.operators.HeavyHitters]] aggregator: per stream key
@@ -26,7 +25,7 @@ object StreamingHeavyHitters {
   final case class TopHits(key: String, n_items: Long, top: Seq[String],
       min_counts: Seq[Long])
 
-  private def fold(counts: Map[String, Long], item: String,
+  private def offer(counts: Map[String, Long], item: String,
       k: Int): Map[String, Long] = {
     val grown = counts.updatedWith(item) {
       case Some(c) => Some(c + 1L)
@@ -41,22 +40,17 @@ object StreamingHeavyHitters {
     }
   }
 
-  private def stateFn(k: Int, topN: Int)(key: String,
-      events: Iterator[Item],
-      state: GroupState[MgState]): Iterator[TopHits] = {
-    val sorted = events.toSeq.sortBy(_.event_id)
-    var st = state.getOption.getOrElse(MgState(0L, Map.empty))
-    sorted.foreach { e =>
-      st = MgState(st.n + 1, fold(st.counts, e.item, k))
-    }
-    if (sorted.isEmpty) Iterator.empty
-    else {
-      state.update(st)
-      val top = st.counts.toSeq
-        .sortBy { case (it, c) => (-c, it) }.take(topN)
-      Iterator.single(TopHits(key, st.n, top.map(_._1), top.map(_._2)))
-    }
-  }
+  private[graft] def fold(k: Int, topN: Int)
+      : KeyedFold[Item, String, MgState, TopHits] =
+    KeyedFold(_.key, Ordering.by(_.event_id), MgState(0L, Map.empty),
+      (key, pre, sorted) => {
+        val st = sorted.foldLeft(pre) { (st, e) =>
+          MgState(st.n + 1, offer(st.counts, e.item, k))
+        }
+        val top = st.counts.toSeq
+          .sortBy { case (it, c) => (-c, it) }.take(topN)
+        (st, Iterator.single(TopHits(key, st.n, top.map(_._1), top.map(_._2))))
+      })
 
   /** One TopHits row per (key, micro-batch that touched it). `k` bounds
     * state; `topN ≤ k` bounds the emitted list. */
@@ -64,8 +58,6 @@ object StreamingHeavyHitters {
       implicit spark: SparkSession): Dataset[TopHits] = {
     import spark.implicits._
     require(topN <= k, "topN cannot exceed the counter budget k")
-    items.groupByKey(_.key)
-      .flatMapGroupsWithState[MgState, TopHits](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(stateFn(k, topN))
+    fold(k, topN).run(items)
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming distinct-count monitor: per key a DETERMINISTIC
   * HyperLogLog (m = 256 registers over the 60-bit sha256-prefix hash)
@@ -61,29 +60,26 @@ object StreamingHll {
       sNum.toDouble
   }
 
-  private def stateFn(key: String, events: Iterator[KeyedValue],
-      state: GroupState[HllState]): Iterator[HllReading] = {
-    val st = state.getOption.getOrElse(HllState(new Array[Byte](256), 0L))
-    val regs = st.regs.clone()
-    var n = st.n
-    events.foreach { e =>
-      val h = hash60(e.value)
-      val reg = (h % 256L).toInt
-      val r = rho(h >>> 8)
-      if (r > regs(reg)) regs(reg) = r
-      n += 1
-    }
-    state.update(HllState(regs, n))
-    Iterator.single(HllReading(key, n,
-      regs.count(_ != 0), estimate(regs), regs.toSeq))
-  }
+  private[graft] def fold
+      : KeyedFold[KeyedValue, String, HllState, HllReading] =
+    KeyedFold(_.key, Ordering.by(_.value), HllState(new Array[Byte](256), 0L),
+      (key, pre, sorted) => {
+        val regs = pre.regs.clone()
+        sorted.foreach { e =>
+          val h = hash60(e.value)
+          val reg = (h % 256L).toInt
+          val r = rho(h >>> 8)
+          if (r > regs(reg)) regs(reg) = r
+        }
+        val n = pre.n + sorted.length
+        (HllState(regs, n), Iterator.single(HllReading(key, n,
+          regs.count(_ != 0), estimate(regs), regs.toSeq)))
+      })
 
   /** One reading per (key, micro-batch that touched it). */
   def monitor(events: Dataset[KeyedValue])(
       implicit spark: SparkSession): Dataset[HllReading] = {
     import spark.implicits._
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[HllState, HllReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(stateFn)
+    fold.run(events)
   }
 }

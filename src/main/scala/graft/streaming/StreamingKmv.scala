@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming per-key KMV (k-minimum-values) distinct-count monitor —
   * the streaming twin of the batch bottom-k sketch (q321): each key
@@ -53,25 +52,20 @@ object StreamingKmv {
     else (K - 1).toLong * 1000000000000L /
       (mins.max / (1152921504606846976L / 1000000000000L))
 
-  private def stateFn(key: String, events: Iterator[IdEvent],
-      state: GroupState[KmvState]): Iterator[KmvReading] = {
-    val batch = events.toSeq
-    if (batch.isEmpty) return Iterator.empty
-    val prev = state.getOption.map(_.mins).getOrElse(Seq.empty)
-    val mins = (prev ++ batch.map(e => hash60(e.item)))
-      .distinct.sorted.take(K)
-    state.update(KmvState(mins))
-    Iterator.single(KmvReading(key, mins.size.toLong, estimate(mins),
-      mins.size == K))
-  }
+  private[graft] def fold: KeyedFold[IdEvent, String, KmvState, KmvReading] =
+    KeyedFold(_.key, Ordering.by(e => (e.ts, e.id)), KmvState(Seq.empty),
+      (key, pre, sorted) => {
+        val mins = (pre.mins ++ sorted.map(e => hash60(e.item)))
+          .distinct.sorted.take(K)
+        (KmvState(mins), Iterator.single(KmvReading(key, mins.size.toLong,
+          estimate(mins), mins.size == K)))
+      })
 
   /** One reading per (key, micro-batch that touched it). State never
     * expires — cardinality is a running property of the feed. */
   def monitor(events: Dataset[IdEvent])(
       implicit spark: SparkSession): Dataset[KmvReading] = {
     import spark.implicits._
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[KmvState, KmvReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(stateFn)
+    fold.run(events)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming per-key Page–Hinkley upward-drift detector — the
   * streaming twin of the batch PH screen (q304): each key maintains
@@ -35,24 +34,21 @@ object StreamingPageHinkley {
   /** q304's quantization scale (2^20). */
   val Scale: Long = 1048576L
 
-  private def stateFn(thresholdCents: Long)(
-      key: String, events: Iterator[CentsEvent],
-      state: GroupState[PhState]): Iterator[PhReading] = {
-    val sorted = events.toSeq.sortBy(e => (e.ts, e.id))
-    if (sorted.isEmpty) return Iterator.empty
-    var st = state.getOption.getOrElse(PhState(0L, 0L, 0L, Long.MaxValue))
-    sorted.foreach { e =>
-      val t = st.t + 1
-      val s = st.s + e.cents
-      val devQ = (e.cents * t - s) * Scale / t
-      val m = st.m + devQ
-      st = PhState(t, s, m, math.min(st.runMin, m))
-    }
-    state.update(st)
-    val ph = st.m - st.runMin
-    Iterator.single(PhReading(key, st.t, sorted.last.cents, ph,
-      ph > thresholdCents * Scale))
-  }
+  private[graft] def fold(thresholdCents: Long)
+      : KeyedFold[CentsEvent, String, PhState, PhReading] =
+    KeyedFold(_.key, Ordering.by(e => (e.ts, e.id)),
+      PhState(0L, 0L, 0L, Long.MaxValue), (key, pre, sorted) => {
+        val st = sorted.foldLeft(pre) { (st, e) =>
+          val t = st.t + 1
+          val s = st.s + e.cents
+          val devQ = (e.cents * t - s) * Scale / t
+          val m = st.m + devQ
+          PhState(t, s, m, math.min(st.runMin, m))
+        }
+        val ph = st.m - st.runMin
+        (st, Iterator.single(PhReading(key, st.t, sorted.last.cents, ph,
+          ph > thresholdCents * Scale)))
+      })
 
   /** One reading per (key, micro-batch that touched it). State never
     * expires — the running mean IS the baseline. */
@@ -60,9 +56,6 @@ object StreamingPageHinkley {
       thresholdCents: Long = 50000L)(
       implicit spark: SparkSession): Dataset[PhReading] = {
     import spark.implicits._
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[PhState, PhReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(thresholdCents))
+    fold(thresholdCents).run(events)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming population-stability monitor — the streaming-native twin of
   * the batch PSI drift report (q161): each key (a source, a tenant, a
@@ -44,22 +43,21 @@ object StreamingPsi {
     psi
   }
 
-  private def stateFn(reference: Array[Double], alarmAbove: Double,
-      minSamples: Long)(key: String, events: Iterator[ValueEvent],
-      state: GroupState[HistState]): Iterator[PsiReading] = {
+  private[graft] def fold(reference: Array[Double], alarmAbove: Double,
+      minSamples: Long): KeyedFold[ValueEvent, String, HistState, PsiReading] = {
     val bins = reference.length
-    val sorted = events.toSeq.sortBy(_.event_id)
-    var st = state.getOption.getOrElse(HistState(0L, new Array[Long](bins)))
-    sorted.foreach { e =>
-      val c = st.counts.clone()
-      c(binOf(e.cents, bins)) += 1L
-      st = HistState(st.n + 1, c)
-    }
-    state.update(st)
-    if (st.n >= minSamples && sorted.nonEmpty) {
-      val psi = psiOf(st.counts, st.n, reference)
-      Iterator.single(PsiReading(key, st.n, psi, psi > alarmAbove))
-    } else Iterator.empty
+    KeyedFold(_.key, Ordering.by(_.event_id),
+      HistState(0L, new Array[Long](bins)), (key, pre, sorted) => {
+        val st = sorted.foldLeft(pre) { (st, e) =>
+          val c = st.counts.clone()
+          c(binOf(e.cents, bins)) += 1L
+          HistState(st.n + 1, c)
+        }
+        (st, if (st.n >= minSamples) {
+          val psi = psiOf(st.counts, st.n, reference)
+          Iterator.single(PsiReading(key, st.n, psi, psi > alarmAbove))
+        } else Iterator.empty)
+      })
   }
 
   /** One PSI reading per (key, micro-batch that touched it), once the
@@ -70,9 +68,6 @@ object StreamingPsi {
       implicit spark: SparkSession): Dataset[PsiReading] = {
     import spark.implicits._
     require(reference.forall(_ > 0.0), "reference bins must be smoothed > 0")
-    values.groupByKey(_.key)
-      .flatMapGroupsWithState[HistState, PsiReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stateFn(reference, alarmAbove, minSamples))
+    fold(reference, alarmAbove, minSamples).run(values)
   }
 }

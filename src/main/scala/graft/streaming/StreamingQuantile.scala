@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming per-key quantile monitor using the P² algorithm (Jain &
   * Chlamtac 1985, the classic O(1)-state online quantile estimator):
@@ -82,25 +81,20 @@ object StreamingQuantile {
         math.ceil(p * st.n).toInt - 1)))
     } else st.q(2)
 
-  private def stateFn(p: Double)(key: String,
-      events: Iterator[ValueEvent],
-      state: GroupState[P2State]): Iterator[QuantileReading] = {
-    val sorted = events.toSeq.sortBy(e => (e.ts, e.id))
-    if (sorted.isEmpty) return Iterator.empty
-    var st = state.getOption.getOrElse(initState(p))
-    sorted.foreach(e => st = observe(st, e.value, p))
-    state.update(st)
-    Iterator.single(QuantileReading(key, st.n, estimate(st, p),
-      st.n < 5))
-  }
+  private[graft] def fold(p: Double)
+      : KeyedFold[ValueEvent, String, P2State, QuantileReading] =
+    KeyedFold(_.key, Ordering.by(e => (e.ts, e.id)), initState(p),
+      (key, pre, sorted) => {
+        val st = sorted.foldLeft(pre)((st, e) => observe(st, e.value, p))
+        (st, Iterator.single(QuantileReading(key, st.n, estimate(st, p),
+          st.n < 5)))
+      })
 
   /** One quantile reading per (key, micro-batch that touched it). */
   def monitor(events: Dataset[ValueEvent], p: Double = 0.9)(
       implicit spark: SparkSession): Dataset[QuantileReading] = {
     import spark.implicits._
     require(p > 0.0 && p < 1.0, "p must be in (0,1)")
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[P2State, QuantileReading](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(stateFn(p))
+    fold(p).run(events)
   }
 }

@@ -1,14 +1,21 @@
 package graft
 
+import java.util.concurrent.CyclicBarrier
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.LoopTuning
+import graft.operators.{ConnectedComponents, LoopTuning}
 
 /** LoopTuning conf scoping: nested tuned loops restore their parent's
   * width and only the outermost exit restores the session's original
   * width + AQE flag — two stacked loops (e.g. an operator calling
   * another tuned operator) can never leave the session
   * mis-configured (round-11 ADVICE finding on session-conf
-  * mutation). */
+  * mutation). Tuned loops on two sessions of one context
+  * (`spark.newSession()`, the documented concurrency prescription) run
+  * at the same time without touching each other's conf. */
 class LoopTuningSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -63,5 +70,33 @@ class LoopTuningSpec extends AnyFunSuite {
       assert(width === w0)
     }
     assert(width === w0)
+  }
+
+  test("tuned loops on two concurrent sessions match their sequential runs and keep each session's conf") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage")
+    def conf(s: SparkSession) = keys.map(s.conf.get)
+    // two chains of n + 1 nodes each: 0-1-…-n and 1000-…-(1000 + n)
+    def labels(s: SparkSession, n: Long): Map[Long, Long] = {
+      import s.implicits._
+      val edges = (0L until n).map(i => (i, i + 1)) ++
+        (1000L until 1000L + n).map(i => (i, i + 1))
+      val nodes = (0L to n) ++ (1000L to 1000L + n)
+      ConnectedComponents.labels(edges.toDF("src", "dst"), nodes.toDF("id"))
+        .as[(Long, Long)].collect().toMap
+    }
+    val sessions = Seq(spark.newSession(), spark.newSession())
+    // distinct widths, so a conf that bled from one session shows
+    sessions(1).conf.set("spark.sql.shuffle.partitions", "3")
+    val sizes = Seq(12L, 16L)
+    val sequential = sessions.zip(sizes).map { case (s, n) => labels(s, n) }
+    val before = (spark +: sessions).map(conf)
+    val start = new CyclicBarrier(sessions.size)
+    val concurrent = Await.result(Future.sequence(
+      sessions.zip(sizes).map { case (s, n) =>
+        Future { start.await(); labels(s, n) }
+      }), 5.minutes)
+    assert(concurrent === sequential)
+    assert((spark +: sessions).map(conf) === before)
   }
 }

@@ -22,6 +22,14 @@ class QueryRegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("q164 collects its autocorrelation at sf0.001, where a variance product is 0") {
+    // count() prunes the coefficient; collect() evaluates its division
+    val rows = SparkEntry.queries("q164_autocorr_daily")(spark, dir).collect()
+    assert(rows.nonEmpty)
+    assert(rows.exists(_.isNullAt(2)),
+      "a zero denominator must read NULL, as NULLIF makes it in DuckDB")
+  }
+
   test("flagship entry returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

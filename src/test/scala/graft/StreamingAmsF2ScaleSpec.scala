@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.CoreFunctions.sha256PrefixLong
@@ -54,27 +52,16 @@ class StreamingAmsF2ScaleSpec extends AnyFunSuite {
     val want = batchCountersByKey()
     val nByKey = kv.groupBy(_._1).map { case (k, vs) => k -> vs.length.toLong }
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[IdEvent]
-    val q = StreamingAmsF2.monitor(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ams_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ams-scale").toString)
-      .start()
     val batchSize = 5000
     var id = 0L
+    val batches = kv.grouped(batchSize).map(_.map { case (k, v) =>
+      id += 1; IdEvent(id, id, k, v) }.toSeq).toSeq
     val t0 = System.nanoTime()
-    kv.grouped(batchSize).foreach { chunk =>
-      input.addData(chunk.map { case (k, v) =>
-        id += 1; IdEvent(id, id, k, v) }.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(batches)(StreamingAmsF2.monitor(_))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
     // final reading per key = the one with the highest n (monotone)
-    val finals = spark.table("ams_scale").as[AmsReading].collect()
+    val finals = rows
       .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n) }
     assert(finals.keySet === want.keySet)
     finals.foreach { case (k, reading) =>

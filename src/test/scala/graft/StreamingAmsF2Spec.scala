@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingAmsF2
@@ -22,23 +20,10 @@ class StreamingAmsF2Spec extends AnyFunSuite {
       items.map(StreamingAmsF2.sign(j, _)).sum)
 
   private def run(batches: Seq[Seq[Long]]): Seq[AmsReading] = {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[IdEvent]
-    val name = s"ams_out_${System.nanoTime()}"
-    val q = StreamingAmsF2.monitor(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ams").toString)
-      .start()
     var id = 0L
-    batches.foreach { b =>
-      input.addData(b.map { it =>
-        id += 1; IdEvent(id, id, "feed", it) }: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    spark.table(name).as[AmsReading].collect().toSeq.sortBy(_.n)
+    StreamDriver.run(batches.map(_.map { it =>
+      id += 1; IdEvent(id, id, "feed", it) }))(StreamingAmsF2.monitor(_))
+      .toSeq.sortBy(_.n)
   }
 
   test("sign matches the Catalyst sha256PrefixLong parity") {

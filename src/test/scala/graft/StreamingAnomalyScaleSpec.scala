@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -65,26 +63,14 @@ class StreamingAnomalyScaleSpec extends AnyFunSuite {
         ValueEvent(id, k, new Timestamp(tsl * 1000L), v) }
     val want = batchAnomalies()
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingAnomaly.anomalies(input.toDS(),
-        threshold = Threshold, minSamples = MinSamples)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("anom_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-anom-scale").toString)
-      .start()
     val t0 = System.nanoTime()
-    ev.grouped(5000).foreach { chunk =>
-      input.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(ev.grouped(5000).map(_.toSeq).toSeq)(
+      StreamingAnomaly.anomalies(_,
+        threshold = Threshold, minSamples = MinSamples))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
-    val got = spark.table("anom_scale").as[Anomaly].collect()
-      .map(a => (a.event_id, a.z)).toSet
-    assert(got.size === spark.table("anom_scale").count(),
+    val got = rows.map(a => (a.event_id, a.z)).toSet
+    assert(got.size === rows.length,
       "anomaly ids must be unique")
     assert(got === want,
       s"streamed anomaly set (${got.size}) diverges from the batch " +

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingAnomaly
 import graft.streaming.StreamingAnomaly.{Anomaly, ValueEvent}
@@ -14,28 +12,16 @@ class StreamingAnomalySpec extends AnyFunSuite {
   private def ts(s: Int) = new Timestamp(1704067200000L + s * 1000L)
 
   test("running z-score flags spikes against state so far, across micro-batches (q93 streaming twin)") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingAnomaly.anomalies(input.toDS(), threshold = 3.0,
-        minSamples = 10L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("anomaly_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-anom").toString)
-      .start()
-    // batch 1: a stable baseline around 10 ± 1 (alternating 9/11)
-    input.addData((0 until 20).map(i =>
-      ValueEvent(i.toLong, "click", ts(i), if (i % 2 == 0) 9.0 else 11.0)): _*)
-    q.processAllAvailable()
-    // batch 2: one spike plus two normal values; the spike scores against
-    // the 20-event baseline carried in state from the previous batch
-    input.addData(
-      ValueEvent(100L, "click", ts(100), 10.0),
-      ValueEvent(101L, "click", ts(101), 50.0),
-      ValueEvent(102L, "click", ts(102), 9.0))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("anomaly_out").as[Anomaly].collect()
+    val got = StreamDriver.run(Seq(
+      // batch 1: a stable baseline around 10 ± 1 (alternating 9/11)
+      (0 until 20).map(i =>
+        ValueEvent(i.toLong, "click", ts(i), if (i % 2 == 0) 9.0 else 11.0)),
+      // batch 2: one spike plus two normal values; the spike scores
+      // against the 20-event baseline carried in state from batch 1
+      Seq(ValueEvent(100L, "click", ts(100), 10.0),
+        ValueEvent(101L, "click", ts(101), 50.0),
+        ValueEvent(102L, "click", ts(102), 9.0))))(
+      StreamingAnomaly.anomalies(_, threshold = 3.0, minSamples = 10L))
       .sortBy(_.event_id)
     assert(got.map(_.event_id).toSeq === Seq(101L),
       s"only the spike may be flagged, got: ${got.mkString("; ")}")
@@ -48,23 +34,13 @@ class StreamingAnomalySpec extends AnyFunSuite {
   }
 
   test("no scoring below minSamples; sd=0 histories never divide by zero") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingAnomaly.anomalies(input.toDS(), threshold = 1.0,
-        minSamples = 5L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("anomaly_out2")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-anom2").toString)
-      .start()
     // constant history (sd = 0): even a wild value must not crash, and
     // the first 4 events are below minSamples
-    input.addData((0 until 8).map(i =>
-      ValueEvent(i.toLong, "error", ts(i), 5.0)): _*)
-    input.addData(ValueEvent(9L, "error", ts(9), 500.0))
-    q.processAllAvailable()
-    q.stop()
+    val got = StreamDriver.run(Seq(
+      (0 until 8).map(i => ValueEvent(i.toLong, "error", ts(i), 5.0)),
+      Seq(ValueEvent(9L, "error", ts(9), 500.0))))(
+      StreamingAnomaly.anomalies(_, threshold = 1.0, minSamples = 5L))
     // sd stays 0 through the constant prefix → nothing scored
-    assert(spark.table("anomaly_out2").count() === 0L)
+    assert(got.length === 0)
   }
 }

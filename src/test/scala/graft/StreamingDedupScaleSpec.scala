@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextDedup
@@ -54,39 +52,21 @@ class StreamingDedupScaleSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
 
     val events = docsDF.as[DocEvent].collect().sortBy(_.doc_id)
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[DocEvent]
-    val pairsQ = StreamingDedup.candidatePairs(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sds_pairs")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-sds-p").toString)
-      .start()
-    val exactQ = StreamingDedup.exactVerdicts(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sds_exact")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-sds-e").toString)
-      .start()
     val batchSize = 500
+    val batches = events.grouped(batchSize).map(_.toSeq).toSeq
     val t0 = System.nanoTime()
-    events.grouped(batchSize).foreach { chunk =>
-      input.addData(chunk.toSeq)
-      pairsQ.processAllAvailable()
-      exactQ.processAllAvailable()
-    }
+    val pairs = StreamDriver.run(batches)(StreamingDedup.candidatePairs(_))
+    val verdicts = StreamDriver.run(batches)(StreamingDedup.exactVerdicts(_))
     val secs = (System.nanoTime() - t0) / 1e9
-    pairsQ.stop(); exactQ.stop()
 
-    val streamPairs = spark.table("sds_pairs")
+    val streamPairs = pairs.toSeq.toDS()
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared_bands"))
       .as[(Long, Long, Long)].collect().toSet
     assert(streamPairs === batchPairs,
       s"streaming candidates diverge: ${streamPairs.size} vs batch ${batchPairs.size}")
 
-    val streamKeepers = spark.table("sds_exact").as[ExactVerdict]
-      .collect().map(v => v.doc_id -> v.keeper_id).toMap
+    val streamKeepers = verdicts.map(v => v.doc_id -> v.keeper_id).toMap
     assert(streamKeepers.size === events.length,
       "every document must get exactly one exact-dedup verdict")
     assert(streamKeepers === batchKeepers)

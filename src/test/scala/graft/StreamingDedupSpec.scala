@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextDedup
@@ -38,23 +36,13 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 
   test("exact verdicts: first arrival keeps, later duplicates flag across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[DocEvent]
-    val q = StreamingDedup.exactVerdicts(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("exact_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-sdex").toString)
-      .start()
-    // batch 1: two distinct docs plus an in-batch duplicate (5 beats 7
-    // by the min-id rule)
-    input.addData(DocEvent(5L, base), DocEvent(7L, base), DocEvent(6L, other))
-    q.processAllAvailable()
-    // batch 2: a late duplicate of batch-1 content + a new doc
-    input.addData(DocEvent(9L, base), DocEvent(10L, "fresh content entirely " * 8))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("exact_out").as[ExactVerdict].collect()
+    val got = StreamDriver.run(Seq(
+      // batch 1: two distinct docs plus an in-batch duplicate (5 beats 7
+      // by the min-id rule)
+      Seq(DocEvent(5L, base), DocEvent(7L, base), DocEvent(6L, other)),
+      // batch 2: a late duplicate of batch-1 content + a new doc
+      Seq(DocEvent(9L, base), DocEvent(10L, "fresh content entirely " * 8))))(
+      StreamingDedup.exactVerdicts(_))
       .map(v => v.doc_id -> ((v.keeper_id, v.is_duplicate))).toMap
     assert(got === Map(
       5L -> ((5L, false)), 7L -> ((5L, true)), 6L -> ((6L, false)),
@@ -62,22 +50,11 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 
   test("near-dup candidates: an arriving duplicate pairs against buckets from earlier batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[DocEvent]
-    val q = StreamingDedup.candidatePairs(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cand_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-sdlsh").toString)
-      .start()
-    // batch 1: the corpus so far — base doc + an unrelated doc
-    input.addData(DocEvent(0L, base), DocEvent(3L, other))
-    q.processAllAvailable()
-    // batch 2: an exact duplicate of doc 0 arrives later
-    input.addData(DocEvent(1L, base))
-    q.processAllAvailable()
-    q.stop()
-    val pairs = spark.table("cand_out").as[CandidatePair].collect()
+    val pairs = StreamDriver.run(Seq(
+      // batch 1: the corpus so far — base doc + an unrelated doc
+      Seq(DocEvent(0L, base), DocEvent(3L, other)),
+      // batch 2: an exact duplicate of doc 0 arrives later
+      Seq(DocEvent(1L, base))))(StreamingDedup.candidatePairs(_))
     val byPair = pairs.groupBy(p => (p.doc_a, p.doc_b))
     // the exact duplicate collides with doc 0 in ALL 8 band buckets —
     // the batch operator's n_shared_bands invariant, incrementally
@@ -92,25 +69,15 @@ class StreamingDedupSpec extends AnyFunSuite {
     // through the same encoders but persists them off-heap/on-disk —
     // a bean that only works in the default in-memory provider would
     // fail here, at the provider swap a real deployment makes
-    implicit val sqlCtx = spark.sqlContext
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val input = MemoryStream[DocEvent]
-      val q = StreamingDedup.exactVerdicts(input.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("exact_rocks_out")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-sdrocks").toString)
-        .start()
-      input.addData(DocEvent(1L, base), DocEvent(2L, other))
-      q.processAllAvailable()
-      input.addData(DocEvent(3L, base)) // duplicate vs RocksDB state
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("exact_rocks_out").as[ExactVerdict].collect()
+      val got = StreamDriver.run(Seq(
+        Seq(DocEvent(1L, base), DocEvent(2L, other)),
+        Seq(DocEvent(3L, base))))( // duplicate vs RocksDB state
+        StreamingDedup.exactVerdicts(_))
         .map(v => v.doc_id -> ((v.keeper_id, v.is_duplicate))).toMap
       assert(got === Map(1L -> ((1L, false)), 2L -> ((2L, false)),
         3L -> ((1L, true))))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingDrift
@@ -63,24 +61,13 @@ class StreamingDriftScaleSpec extends AnyFunSuite {
       .map { case (id, k, emb) => VecEvent(id, k, emb) }
     val want = sqlSums("/root/testdata/sf0.1", keyed = true)
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[VecEvent]
-    val q = StreamingDrift.drift(input.toDS(), reference,
-        alarmBelow = 0.8, minSamples = 10L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("drift_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-drift-scale").toString)
-      .start()
     val t0 = System.nanoTime()
-    ev.grouped(100).foreach { chunk =>
-      input.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(ev.grouped(100).map(_.toSeq).toSeq)(
+      StreamingDrift.drift(_, reference,
+        alarmBelow = 0.8, minSamples = 10L))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
-    val finals = spark.table("drift_scale").as[DriftReading].collect()
+    val finals = rows
       .groupBy(_.source).map { case (k, rs) => k -> rs.maxBy(_.n_so_far) }
     assert(finals.keySet === want.keySet)
     finals.foreach { case (k, reading) =>

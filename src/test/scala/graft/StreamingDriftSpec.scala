@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingDrift
 import graft.streaming.StreamingDrift.{DriftReading, VecEvent}
@@ -20,28 +18,16 @@ class StreamingDriftSpec extends AnyFunSuite {
   }
 
   test("running centroid tracks the reference, alarms on drift, state survives batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[VecEvent]
-    val q = StreamingDrift.drift(input.toDS(), reference,
-        alarmBelow = 0.8, minSamples = 5L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("drift_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-drift").toString)
-      .start()
-    // batch 1: aligned source emits 6 reference-direction vectors (cos 1),
-    // drifting source emits only 3 (below minSamples — no reading yet)
-    input.addData(
+    val got = StreamDriver.run(Seq(
+      // batch 1: aligned source emits 6 reference-direction vectors
+      // (cos 1), drifting source emits only 3 (below minSamples — no
+      // reading yet)
       (0 until 6).map(i => VecEvent(i.toLong, "aligned", vec(0))) ++
-        (0 until 3).map(i => VecEvent(100L + i, "drifting", vec(0))): _*)
-    q.processAllAvailable()
-    // batch 2: the drifting source swings to an orthogonal axis — its
-    // centroid (3 on axis0 + 4 on axis1) falls below the 0.8 alarm
-    input.addData((0 until 4).map(i =>
-      VecEvent(200L + i, "drifting", vec(1))): _*)
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("drift_out").as[DriftReading].collect()
+        (0 until 3).map(i => VecEvent(100L + i, "drifting", vec(0))),
+      // batch 2: the drifting source swings to an orthogonal axis — its
+      // centroid (3 on axis0 + 4 on axis1) falls below the 0.8 alarm
+      (0 until 4).map(i => VecEvent(200L + i, "drifting", vec(1)))))(
+      StreamingDrift.drift(_, reference, alarmBelow = 0.8, minSamples = 5L))
     val aligned = got.filter(_.source == "aligned")
     assert(aligned.map(_.n_so_far).toSeq === Seq(6L))
     assert(aligned.head.cos_to_reference === 1.0 && !aligned.head.drifted)

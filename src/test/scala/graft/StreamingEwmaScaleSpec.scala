@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingEwma
@@ -63,23 +61,12 @@ class StreamingEwmaScaleSpec extends AnyFunSuite {
       .map { case (id, tsl, k, v) => ValueEvent(id, tsl, k, v) }
     val want = batchFold()
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingEwma.monitor(input.toDS(), alpha = 0.5)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ewma_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ewma-scale").toString)
-      .start()
     val t0 = System.nanoTime()
-    ev.grouped(5000).foreach { chunk =>
-      input.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(ev.grouped(5000).map(_.toSeq).toSeq)(
+      StreamingEwma.monitor(_, alpha = 0.5))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
-    val finals = spark.table("ewma_scale").as[EwmaReading].collect()
+    val finals = rows
       .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n_so_far) }
     assert(finals.keySet === want.keySet)
     finals.foreach { case (k, reading) =>

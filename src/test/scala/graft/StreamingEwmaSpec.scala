@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingEwma
 import graft.streaming.StreamingEwma.{EwmaReading, ValueEvent}
@@ -25,25 +23,14 @@ class StreamingEwmaSpec extends AnyFunSuite {
     } match { case (m, v, _) => (m, v) }
 
   test("EWMA state carries across batches and a level shift alarms") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingEwma.monitor(input.toDS(), alpha = 0.5, k = 3.0,
-        minSamples = 5L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ewma_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ewma").toString)
-      .start()
     // batch 1: a steady level-10 signal with ±1 wobble (6 samples)
     val b1 = Seq(10.0, 11.0, 9.0, 10.0, 11.0, 9.0)
-    input.addData(b1.zipWithIndex.map { case (v, i) =>
-      ValueEvent(i.toLong, i.toLong, "purchases", v) }: _*)
-    q.processAllAvailable()
-    // batch 2: the level jumps to 100 — far beyond 3 EW-stddevs
-    input.addData(ValueEvent(100L, 100L, "purchases", 100.0))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("ewma_out").as[EwmaReading].collect()
+    val got = StreamDriver.run(Seq(
+      b1.zipWithIndex.map { case (v, i) =>
+        ValueEvent(i.toLong, i.toLong, "purchases", v) },
+      // batch 2: the level jumps to 100 — far beyond 3 EW-stddevs
+      Seq(ValueEvent(100L, 100L, "purchases", 100.0))))(
+      StreamingEwma.monitor(_, alpha = 0.5, k = 3.0, minSamples = 5L))
       .sortBy(_.n_so_far)
     assert(got.length == 2)
     val (m1, v1) = fold(b1)
@@ -58,21 +45,10 @@ class StreamingEwmaSpec extends AnyFunSuite {
   }
 
   test("below minSamples a batch updates state but cannot alarm") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingEwma.monitor(input.toDS(), alpha = 0.5, k = 3.0,
-        minSamples = 5L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ewma_min_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ewma-min").toString)
-      .start()
-    input.addData(ValueEvent(0L, 0L, "k", 1.0), ValueEvent(1L, 1L, "k", 2.0))
-    q.processAllAvailable()
-    input.addData(ValueEvent(2L, 2L, "k", 1000.0))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("ewma_min_out").as[EwmaReading].collect()
+    val got = StreamDriver.run(Seq(
+      Seq(ValueEvent(0L, 0L, "k", 1.0), ValueEvent(1L, 1L, "k", 2.0)),
+      Seq(ValueEvent(2L, 2L, "k", 1000.0))))(
+      StreamingEwma.monitor(_, alpha = 0.5, k = 3.0, minSamples = 5L))
     assert(got.length == 2 && got.forall(!_.alarm))
     assert(got.map(_.n_so_far).sorted.toSeq == Seq(2L, 3L))
   }

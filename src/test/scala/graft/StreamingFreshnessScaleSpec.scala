@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingFreshness
@@ -51,23 +49,12 @@ class StreamingFreshnessScaleSpec extends AnyFunSuite {
       .sortBy(e => (e.arrivalMs, e.id))
     val want = batchFresh()
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[TimedEvent]
-    val q = StreamingFreshness.monitor(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("fresh_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-fresh-scale").toString)
-      .start()
     val t0 = System.nanoTime()
-    ev.grouped(5000).foreach { chunk =>
-      input.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(ev.grouped(5000).map(_.toSeq).toSeq)(
+      StreamingFreshness.monitor(_))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
-    val finals = spark.table("fresh_scale").as[FreshReading].collect()
+    val finals = rows
       .groupBy(_.source).map { case (k, rs) => k -> rs.maxBy(_.n_so_far) }
     assert(finals.keySet === want.keySet)
     finals.foreach { case (k, reading) =>

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingFreshness
 import graft.streaming.StreamingFreshness.{FreshReading, TimedEvent}
@@ -14,26 +12,14 @@ class StreamingFreshnessSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("lag sums carry across batches; a stalled source goes stale") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[TimedEvent]
-    val q = StreamingFreshness.monitor(input.toDS(), maxAllowedLagMs = 5000L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("fresh_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-fresh").toString)
-      .start()
-    // batch 1: healthy source — events arrive 1s after they happen
-    input.addData(
-      TimedEvent(1L, "pos", eventMs = 10000L, arrivalMs = 11000L),
-      TimedEvent(2L, "pos", eventMs = 12000L, arrivalMs = 13000L))
-    q.processAllAvailable()
-    // batch 2: the feed stalls — new arrivals carry OLD event times,
-    // so the watermark is now 20s behind the arrival clock
-    input.addData(
-      TimedEvent(3L, "pos", eventMs = 13000L, arrivalMs = 33000L))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("fresh_out").as[FreshReading].collect()
+    val got = StreamDriver.run(Seq(
+      // batch 1: healthy source — events arrive 1s after they happen
+      Seq(TimedEvent(1L, "pos", eventMs = 10000L, arrivalMs = 11000L),
+        TimedEvent(2L, "pos", eventMs = 12000L, arrivalMs = 13000L)),
+      // batch 2: the feed stalls — new arrivals carry OLD event times,
+      // so the watermark is now 20s behind the arrival clock
+      Seq(TimedEvent(3L, "pos", eventMs = 13000L, arrivalMs = 33000L))))(
+      StreamingFreshness.monitor(_, maxAllowedLagMs = 5000L))
       .sortBy(_.n_so_far)
     assert(got.length == 2)
     assert(got(0).n_so_far == 2L)
@@ -49,20 +35,10 @@ class StreamingFreshnessSpec extends AnyFunSuite {
   }
 
   test("out-of-order event times never move the watermark backwards") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[TimedEvent]
-    val q = StreamingFreshness.monitor(input.toDS(), maxAllowedLagMs = 60000L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("fresh_ooo_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-fresh-ooo").toString)
-      .start()
-    input.addData(TimedEvent(1L, "s", 50000L, 50500L))
-    q.processAllAvailable()
-    input.addData(TimedEvent(2L, "s", 20000L, 51000L)) // late straggler
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("fresh_ooo_out").as[FreshReading].collect()
+    val got = StreamDriver.run(Seq(
+      Seq(TimedEvent(1L, "s", 50000L, 50500L)),
+      Seq(TimedEvent(2L, "s", 20000L, 51000L))))( // late straggler
+      StreamingFreshness.monitor(_, maxAllowedLagMs = 60000L))
       .sortBy(_.n_so_far)
     assert(got.map(_.max_event_ms).toSeq == Seq(50000L, 50000L))
     assert(got(1).worst_lag_ms == 31000L)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingHeavyHitters
@@ -32,25 +30,13 @@ class StreamingHeavyHittersScaleSpec extends AnyFunSuite {
   private val K = 16
 
   private def stream(items: Array[Item], topN: Int): Map[String, TopHits] = {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Item]
-    val name = s"mg_scale_${System.nanoTime()}"
-    val q = StreamingHeavyHitters.monitor(input.toDS(), k = K, topN = topN)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-mg-scale").toString)
-      .start()
     val t0 = System.nanoTime()
-    items.grouped(5000).foreach { chunk =>
-      input.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(items.grouped(5000).map(_.toSeq).toSeq)(
+      StreamingHeavyHitters.monitor(_, k = K, topN = topN))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
     println(f"[stream-mg] ${items.length}%d items in $secs%.1f s " +
       f"= ${items.length / secs}%.0f items/s (topN=$topN)")
-    spark.table(name).as[TopHits].collect()
+    rows
       .groupBy(_.key).map { case (k2, rs) => k2 -> rs.maxBy(_.n_items) }
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingHeavyHitters
 import graft.streaming.StreamingHeavyHitters.{Item, TopHits}
@@ -11,26 +9,14 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("frequent items survive across micro-batches within the MG bound") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Item]
-    val out = StreamingHeavyHitters.monitor(input.toDS(), k = 3, topN = 2)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("hh_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-hh").toString)
-      .start()
     // batch 1: "hot" appears 10×, noise a/b once each
     val b1 = (0 until 10).map(i => Item(i, "t1", "hot")) ++
       Seq(Item(10, "t1", "a"), Item(11, "t1", "b"))
-    input.addData(b1: _*)
-    q.processAllAvailable()
     // batch 2: "warm" appears 6×, more noise — state carries "hot"
     val b2 = (20 until 26).map(i => Item(i, "t1", "warm")) ++
       Seq(Item(26, "t1", "c"), Item(27, "t1", "d"))
-    input.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("hh_out").as[TopHits].collect()
+    val got = StreamDriver.run(Seq(b1, b2))(
+      StreamingHeavyHitters.monitor(_, k = 3, topN = 2))
       .sortBy(_.n_items)
     assert(got.length === 2)
     // after batch 1: hot dominates with a count within the MG bound
@@ -44,24 +30,13 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
   }
 
   test("streamed single-batch top matches the batch aggregator's top item") {
-    implicit val sqlCtx = spark.sqlContext
     val items = Seq.tabulate(30)(i =>
       Item(i, "g", if (i % 3 == 0) "x" else s"noise$i"))
     val batchTop = items.map(_.item).toDS()
       .select(graft.operators.HeavyHitters.sketch(8).toColumn)
       .head().head.item
-    val input = MemoryStream[Item]
-    val out = StreamingHeavyHitters.monitor(input.toDS(), k = 8, topN = 1)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("hh_eq_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-hh2").toString)
-      .start()
-    input.addData(items: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamedTop = spark.table("hh_eq_out").as[TopHits]
-      .collect().head.top.head
+    val streamedTop = StreamDriver.run(Seq(items))(
+      StreamingHeavyHitters.monitor(_, k = 8, topN = 1)).head.top.head
     assert(streamedTop === batchTop && streamedTop === "x")
   }
 }

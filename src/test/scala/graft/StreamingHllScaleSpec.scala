@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingHll
@@ -53,25 +51,15 @@ class StreamingHllScaleSpec extends AnyFunSuite {
     val exactByKey = kv.groupBy(_._1).map { case (k, vs) =>
       k -> vs.map(_._2).distinct.length }
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[KeyedValue]
-    val q = StreamingHll.monitor(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("hll_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-hll-scale").toString)
-      .start()
     val batchSize = 5000
+    val batches = kv.grouped(batchSize)
+      .map(_.map { case (k, v) => KeyedValue(k, v) }.toSeq).toSeq
     val t0 = System.nanoTime()
-    kv.grouped(batchSize).foreach { chunk =>
-      input.addData(chunk.map { case (k, v) => KeyedValue(k, v) }.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(batches)(StreamingHll.monitor(_))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
     // final reading per key = the one with the highest n_so_far
-    val finals = spark.table("hll_scale").as[HllReading].collect()
+    val finals = rows
       .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n_so_far) }
     assert(finals.keySet === want.keySet)
     finals.foreach { case (k, reading) =>

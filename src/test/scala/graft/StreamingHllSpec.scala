@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingHll
@@ -35,25 +33,11 @@ class StreamingHllSpec extends AnyFunSuite {
   }
 
   test("streaming registers equal the batch sketch after multi-batch ingest") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[KeyedValue]
-    val q = StreamingHll.monitor(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("hll_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-hll").toString)
-      .start()
     val b1 = (1 to 400).map(i => s"user-$i")
     val b2 = (200 to 700).map(i => s"user-$i") // overlaps b1: replays merge
     val b3 = Seq("user-1", "user-1", "user-999") // duplicates are no-ops
-    input.addData(b1.map(KeyedValue("k", _)): _*)
-    q.processAllAvailable()
-    input.addData(b2.map(KeyedValue("k", _)): _*)
-    q.processAllAvailable()
-    input.addData(b3.map(KeyedValue("k", _)): _*)
-    q.processAllAvailable()
-    q.stop()
-    val readings = spark.table("hll_out").as[HllReading].collect()
+    val readings = StreamDriver.run(
+      Seq(b1, b2, b3).map(_.map(KeyedValue("k", _))))(StreamingHll.monitor(_))
       .filter(_.key == "k").sortBy(_.n_so_far)
     assert(readings.length == 3)
     val last = readings.last
@@ -71,19 +55,9 @@ class StreamingHllSpec extends AnyFunSuite {
   }
 
   test("per-key isolation: two keys keep independent sketches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[KeyedValue]
-    val q = StreamingHll.monitor(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("hll_two_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-hll2").toString)
-      .start()
-    input.addData((1 to 300).map(i => KeyedValue("a", s"x-$i")) ++
-      Seq(KeyedValue("b", "only-one")): _*)
-    q.processAllAvailable()
-    q.stop()
-    val byKey = spark.table("hll_two_out").as[HllReading].collect()
+    val byKey = StreamDriver.run(Seq(
+      (1 to 300).map(i => KeyedValue("a", s"x-$i")) ++
+        Seq(KeyedValue("b", "only-one"))))(StreamingHll.monitor(_))
       .groupBy(_.key)
     assert(byKey("a").head.regs.toArray.sameElements(
       batchRegs((1 to 300).map(i => s"x-$i"))))

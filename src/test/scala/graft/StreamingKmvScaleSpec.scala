@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,29 +52,18 @@ class StreamingKmvScaleSpec extends AnyFunSuite {
     val exactByKey = kv.groupBy(_._1).map { case (k, vs) =>
       k -> vs.map(_._2).distinct.length }
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[IdEvent]
-    val q = StreamingKmv.monitor(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("kmv_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-kmv-scale").toString)
-      .start()
     val batchSize = 5000
     var id = 0L
+    val batches = kv.grouped(batchSize).map(_.map { case (k, v) =>
+      id += 1; IdEvent(id, id, k, v) }.toSeq).toSeq
     val t0 = System.nanoTime()
-    kv.grouped(batchSize).foreach { chunk =>
-      input.addData(chunk.map { case (k, v) =>
-        id += 1; IdEvent(id, id, k, v) }.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(batches)(StreamingKmv.monitor(_))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
     // final reading per key: n_kept grows monotonically to k, then the
     // kth min only shrinks → est only grows, so (n_kept, est) is the
     // lexicographic maximum exactly at the last reading
-    val finals = spark.table("kmv_scale").as[KmvReading].collect()
+    val finals = rows
       .groupBy(_.key)
       .map { case (k, rs) => k -> rs.maxBy(r => (r.n_kept, r.est)) }
     assert(finals.keySet === want.keySet)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingKmv
@@ -16,26 +14,9 @@ class StreamingKmvSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def run(batches: Seq[Seq[Long]]): Seq[KmvReading] = {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[IdEvent]
-    val name = s"kmv_out_${System.nanoTime()}"
-    val q = StreamingKmv.monitor(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-kmv").toString)
-      .start()
     var id = 0L
-    val out = scala.collection.mutable.ArrayBuffer.empty[KmvReading]
-    batches.foreach { b =>
-      input.addData(b.map { it =>
-        id += 1; IdEvent(id, id, "feed", it) }: _*)
-      q.processAllAvailable()
-      out.clear()
-      out ++= spark.table(name).as[KmvReading].collect()
-    }
-    q.stop()
-    out.toSeq
+    StreamDriver.run(batches.map(_.map { it =>
+      id += 1; IdEvent(id, id, "feed", it) }))(StreamingKmv.monitor(_)).toSeq
   }
 
   test("hash60 matches the Catalyst sha256PrefixLong15 value") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -61,24 +59,13 @@ class StreamingPageHinkleyScaleSpec extends AnyFunSuite {
       .map { case (id, tsl, k, c) => CentsEvent(id, tsl, k, c) }
     val want = batchPh()
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[CentsEvent]
     val threshold = 50000L
-    val q = StreamingPageHinkley.monitor(input.toDS(), threshold)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ph_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ph-scale").toString)
-      .start()
     val t0 = System.nanoTime()
-    ev.grouped(5000).foreach { chunk =>
-      input.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(ev.grouped(5000).map(_.toSeq).toSeq)(
+      StreamingPageHinkley.monitor(_, threshold))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
-    val finals = spark.table("ph_scale").as[PhReading].collect()
+    val finals = rows
       .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.t) }
     assert(finals.keySet === want.keySet)
     finals.foreach { case (k, reading) =>

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingPageHinkley
 import graft.streaming.StreamingPageHinkley.{CentsEvent, PhReading}
@@ -28,23 +26,11 @@ class StreamingPageHinkleySpec extends AnyFunSuite {
 
   private def run(batches: Seq[Seq[Long]], threshold: Long = 50000L)
       : Seq[PhReading] = {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[CentsEvent]
-    val name = s"ph_out_${System.nanoTime()}"
-    val q = StreamingPageHinkley.monitor(input.toDS(), threshold)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ph").toString)
-      .start()
     var id = 0L
-    batches.foreach { b =>
-      input.addData(b.map { c =>
-        id += 1; CentsEvent(id, id, "revenue", c) }: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    spark.table(name).as[PhReading].collect().toSeq.sortBy(_.t)
+    StreamDriver.run(batches.map(_.map { c =>
+      id += 1; CentsEvent(id, id, "revenue", c) }))(
+      StreamingPageHinkley.monitor(_, threshold))
+      .toSeq.sortBy(_.t)
   }
 
   test("readings match the batch recurrence exactly across batches") {

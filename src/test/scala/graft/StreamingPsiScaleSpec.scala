@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingPsi
@@ -64,23 +62,12 @@ class StreamingPsiScaleSpec extends AnyFunSuite {
     val want = sqlHistogram("/root/testdata/sf0.1")
     val nByKey = ev.groupBy(_.key).map { case (k, xs) => k -> xs.length.toLong }
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingPsi.monitor(input.toDS(), ref)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("psi_scale")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-psi-scale").toString)
-      .start()
     val t0 = System.nanoTime()
-    ev.grouped(5000).foreach { chunk =>
-      input.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(ev.grouped(5000).map(_.toSeq).toSeq)(
+      StreamingPsi.monitor(_, ref))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
 
-    val finals = spark.table("psi_scale").as[PsiReading].collect()
+    val finals = rows
       .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n_so_far) }
     assert(finals.keySet === want.keySet)
     finals.foreach { case (k, reading) =>

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingPsi
 import graft.streaming.StreamingPsi.{PsiReading, ValueEvent}
@@ -16,28 +14,16 @@ class StreamingPsiSpec extends AnyFunSuite {
   private def cents(bin: Int): Long = bin * 5000L + 100L
 
   test("stable stream stays under the alarm; shifted stream trips it") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val out = StreamingPsi.monitor(input.toDS(), reference,
-      alarmAbove = 0.2, minSamples = 20L)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("psi_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-psi").toString)
-      .start()
     // batch 1, key "stable": 40 values matching the reference mix
     val stable = (0 until 16).map(i => ValueEvent(i, "stable", cents(0))) ++
       (16 until 28).map(i => ValueEvent(i, "stable", cents(1))) ++
       (28 until 36).map(i => ValueEvent(i, "stable", cents(2))) ++
       (36 until 40).map(i => ValueEvent(i, "stable", cents(3)))
-    input.addData(stable: _*)
-    q.processAllAvailable()
     // batch 2, key "shifted": 40 values all in the top bin
-    input.addData((100 until 140).map(i =>
-      ValueEvent(i, "shifted", cents(3))): _*)
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("psi_out").as[PsiReading].collect()
+    val shifted = (100 until 140).map(i =>
+      ValueEvent(i, "shifted", cents(3)))
+    val got = StreamDriver.run(Seq(stable, shifted))(
+      StreamingPsi.monitor(_, reference, alarmAbove = 0.2, minSamples = 20L))
       .map(r => r.key -> r).toMap
     assert(!got("stable").drifted,
       s"stable stream flagged: psi=${got("stable").psi}")

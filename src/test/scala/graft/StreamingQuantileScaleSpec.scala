@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingQuantile
@@ -25,24 +23,13 @@ class StreamingQuantileScaleSpec extends AnyFunSuite {
 
   private def run(ev: Array[ValueEvent], batchSize: Int, name: String)
       : Map[String, QuantileReading] = {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingQuantile.monitor(input.toDS(), p = 0.9)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$name").toString)
-      .start()
     val t0 = System.nanoTime()
-    ev.grouped(batchSize).foreach { chunk =>
-      input.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
+    val rows = StreamDriver.run(ev.grouped(batchSize).map(_.toSeq).toSeq)(
+      StreamingQuantile.monitor(_, p = 0.9))
     val secs = (System.nanoTime() - t0) / 1e9
-    q.stop()
     println(f"[stream-p2] ${ev.length}%d events / " +
       f"${ev.grouped(batchSize).size}%d batches in $secs%.1f s ($name)")
-    spark.table(name).as[QuantileReading].collect()
+    rows
       .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n_so_far) }
   }
 

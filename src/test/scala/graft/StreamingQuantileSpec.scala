@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingQuantile
 import graft.streaming.StreamingQuantile.{QuantileReading, ValueEvent}
@@ -13,31 +11,18 @@ class StreamingQuantileSpec extends AnyFunSuite {
   implicit lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def streamOf(name: String, p: Double, batches: Seq[Seq[Double]])
+  private def streamOf(p: Double, batches: Seq[Seq[Double]])
       : Array[QuantileReading] = {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[ValueEvent]
-    val q = StreamingQuantile.monitor(input.toDS(), p)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$name").toString)
-      .start()
     var id = 0L
-    batches.foreach { b =>
-      input.addData(b.map { v =>
-        id += 1; ValueEvent(id, id, "lat", v)
-      }: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    spark.table(name).as[QuantileReading].collect().sortBy(_.n_so_far)
+    StreamDriver.run(batches.map(_.map { v =>
+      id += 1; ValueEvent(id, id, "lat", v)
+    }))(StreamingQuantile.monitor(_, p)).sortBy(_.n_so_far)
   }
 
   test("exact regime below 5 samples; p90 tracks a uniform ramp across batches") {
     // deterministic pseudo-uniform values on [0, 1000)
     val vals = (1 to 400).map(i => ((i * 377) % 1000).toDouble)
-    val got = streamOf("p2_out", 0.9,
+    val got = streamOf(0.9,
       Seq(vals.take(3), vals.slice(3, 120), vals.drop(120)))
     assert(got.length == 3)
     // batch 1: exact regime — ceil(0.9*3)=3rd of the sorted 3
@@ -52,8 +37,8 @@ class StreamingQuantileSpec extends AnyFunSuite {
 
   test("estimator is deterministic for a replayed stream") {
     val vals = (1 to 200).map(i => ((i * 131) % 500).toDouble)
-    val a = streamOf("p2_rep_a", 0.5, Seq(vals))
-    val b = streamOf("p2_rep_b", 0.5, Seq(vals))
+    val a = streamOf(0.5, Seq(vals))
+    val b = streamOf(0.5, Seq(vals))
     assert(a.last.p_estimate == b.last.p_estimate)
   }
 }
