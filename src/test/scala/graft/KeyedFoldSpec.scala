@@ -148,10 +148,10 @@ class KeyedFoldSpec extends AnyFunSuite {
     assert(!r.passed && r.status.isInstanceOf[Test.Failed], s"${r.status}")
   }
 
-  /** One seeded random split into at least two non-empty batches through
-    * `MemoryStream` → `run`, twice from fresh checkpoints: both runs and
-    * the pure driver emit the same rows (compared as multisets; Spark
-    * does not order rows across keys). */
+  /** One seeded random split into at least two non-empty batches, each
+    * shuffled (`run` must sort it), through `MemoryStream` → `run`, twice
+    * from fresh checkpoints: both runs and the pure driver emit the same
+    * rows (compared as multisets; Spark does not order rows across keys). */
   private def sparkMatchesDriver[E: Encoder, K: Encoder, S: Encoder,
       O: Encoder](c: Case[E, K, S, O]): Unit = {
     val (_, batches) = splitEvents(c)
@@ -160,8 +160,10 @@ class KeyedFoldSpec extends AnyFunSuite {
     def counts(rows: Seq[O]) = rows.groupBy(canon).map { case (r, g) =>
       r -> g.size }
     val want = counts(drive(c.fold, batches).values.flatMap(_._2).toSeq)
-    val first = StreamDriver.run(batches)(c.fold.run(_))
-    val second = StreamDriver.run(batches)(c.fold.run(_))
+    val rng = new scala.util.Random(7L)
+    val shuffled = batches.map(rng.shuffle(_))
+    val first = StreamDriver.run(shuffled)(c.fold.run(_))
+    val second = StreamDriver.run(shuffled)(c.fold.run(_))
     assert(counts(first.toSeq) === counts(second.toSeq),
       s"${c.name}: a replay from a fresh checkpoint emitted different rows")
     assert(counts(first.toSeq) === want,
