@@ -8,9 +8,11 @@ object Plans {
     val spark = Session.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // besides registry entries: the ingest front half (`ingest_prepare`)
-    // and its events route (`ingest_events`), over a parquet of synthetic
-    // envelopes, the input shape the ingest benchmark reads
+    // besides registry entries: the ingest front half (`ingest_prepare`),
+    // its uncached events route (`ingest_events`, the streaming shape) and
+    // the cached, deduped events route of a batch run
+    // (`ingest_events_batch`), over a parquet of synthetic envelopes, the
+    // input shape the ingest benchmark reads
     val tmp = java.nio.file.Files.createTempDirectory("graft-plans").toFile
     lazy val envelopes = {
       val path = s"$tmp/envelopes"
@@ -21,6 +23,11 @@ object Plans {
       case "ingest_prepare" => IngestPipeline.prepare(envelopes)
       case "ingest_events" => IngestPipeline.eventRows(
         IngestPipeline.prepare(envelopes), IngestPipeline.Config())
+      case "ingest_events_batch" =>
+        // run once, so the dump is AQE's final plan with its codegen stages
+        val events = IngestPipeline.run(envelopes).events
+        events.collect()
+        events
       case _ => SparkEntry.queries(q)(spark, dir)
     }
     try for (q <- args) {

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Scalar column functions reproducing the reference pipeline semantics
   * (SURVEY.md §2A) as pure Catalyst expressions — codegen'd, pushdown-
@@ -148,6 +149,17 @@ object CoreFunctions {
     // no-op on strings, which the optimizer drops)
     GraftColumnBridge.column(NormalizePhoneExpr(
       GraftColumnBridge.expression(phone.cast("string")), region))
+
+  /** A JSON payload string re-serialized with [[normalizePhone]] applied
+    * to its `phoneFields`: the fields of `schema` in schema order, null
+    * fields skipped (as `spark.sql.jsonGenerator.ignoreNullFields` says
+    * when the query runs), unknown fields dropped. One native
+    * expression, [[NormalizePayloadExpr]], byte-identical to
+    * `to_json(struct(…))` over `from_json(payload, schema)`. */
+  def normalizePayload(payload: Column, schema: StructType,
+      phoneFields: Seq[String], region: String): Column =
+    GraftColumnBridge.column(NormalizePayloadExpr(
+      GraftColumnBridge.expression(payload), schema, phoneFields, region))
 
   /** E.164 phone occurrences: '+' then 8-15 digits — the shape every
     * number leaves [[normalizePhone]] in, matchable identically by Java

@@ -91,8 +91,11 @@ object IngestPipeline {
     // try_ variant: malformed timestamps must route to the DLQ, not throw
     // (ANSI mode is on)
     val tsOk = expr("try_to_timestamp(occurred_at)").isNotNull
-    val key = idempotencyKey(col("payload"),
-      Seq("$.call_id", "$.message_id"), col("trace_id"))
+    // noInline: the is_valid filter reads the key through error_type; on
+    // an uncached frame, pushdown would otherwise copy the key's payload
+    // parses into the filter, below the projection that also runs them
+    val key = noInline(idempotencyKey(col("payload"),
+      Seq("$.call_id", "$.message_id"), col("trace_id")))
     df.withColumn("idempotency_key", key)
       .withColumn("error_type",
         // the regex test first: `&&` stops at it for every row that opens
@@ -113,25 +116,19 @@ object IngestPipeline {
     df.withColumn("sampled",
       shouldSample(col("idempotency_key"), cfg.auditRate))
 
+  /** The payload fields that hold phone numbers (phone.js:36-56). */
+  val phoneFields: Seq[String] = Seq("caller", "callee", "from_phone", "to_phone")
+
   /** A9 — normalize the four phone fields inside the payload JSON
-    * (phone.js:36-56) via a typed struct round-trip; untouched fields and
-    * nested metadata survive. */
+    * (phone.js:36-56) and re-serialize the payload (bq.js:20-35) with one
+    * native expression ([[graft.functions.CoreFunctions.normalizePayload]]):
+    * the [[payloadSchema]] fields in schema order, nulls skipped, unknown
+    * top-level fields dropped; nested metadata survives. */
   def phoneNormalized(df: DataFrame,
       region: String = graft.functions.CoreFunctions.defaultPhoneRegion)
-      : DataFrame = {
-    // parse once, rebuild the struct flat: a withField fold over from_json
-    // re-embeds the parse (and the normalizer) per field and
-    // blows up the codegen'd expression tree
-    val parsed = df.withColumn("payload_struct",
-      from_json(col("payload"), payloadSchema))
-    val p = col("payload_struct")
-    val phoneFields = Set("caller", "callee", "from_phone", "to_phone")
-    val rebuilt = struct(payloadSchema.fields.toIndexedSeq.map { f =>
-      val v = p.getField(f.name)
-      (if (phoneFields(f.name)) normalizePhone(v, region) else v).as(f.name)
-    }: _*)
-    parsed.withColumn("payload_normalized", to_json(rebuilt))
-  }
+      : DataFrame =
+    df.withColumn("payload_normalized",
+      normalizePayload(col("payload"), payloadSchema, phoneFields, region))
 
   /** A10 — warehouse-row projection (bq.js:20-35): INT casts, defaults,
     * ingest timestamp, sampled flag, normalized payload re-serialized. */

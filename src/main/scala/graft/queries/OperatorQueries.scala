@@ -15,9 +15,10 @@ import graft.operators.Multimodal
   * sha256('syn:' || id || ':' || seed) — expressible in both engines — so
   * the DuckDB oracle regenerates the identical 2000 envelopes from
   * range(2000) and replays the whole pipeline's semantics in SQL. That
-  * upgrades q41–q43 from rows-only to full hash-checked entries: Spark's
-  * to_json emits struct fields in schema order and skips nulls, so the
-  * oracle concatenates the identical normalized-payload string.
+  * upgrades q41–q43 from rows-only to full hash-checked entries: the
+  * payload kernel (`CoreFunctions.normalizePayload`) writes the payload
+  * fields in schema order and skips nulls, so the oracle concatenates the
+  * identical normalized-payload string.
   */
 object OperatorQueries {
 
@@ -98,9 +99,9 @@ object OperatorQueries {
       |    CAST(CASE WHEN i % 100 = 0 THEN 422 ELSE 400 END AS INT) AS http_status
       |  FROM env WHERE i % 50 = 0)""".stripMargin
 
-  /** DuckDB twin of the warehouse-row payload JSON (Spark's to_json over
-    * the normalized struct) — shared by q41 and q77 so the two oracles
-    * cannot silently diverge. */
+  /** DuckDB twin of the warehouse-row payload JSON (the payload kernel's
+    * contract: schema order, nulls skipped, phones normalized) — shared by
+    * q41 and q77 so the two oracles cannot silently diverge. */
   private val eventsPayloadSql =
     """'{"call_id":"call-' || CAST(i AS VARCHAR) ||
       |    '","caller":"' || caller_raw || '","callee":"' || callee_norm ||

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -393,6 +393,195 @@ class CoreFunctionsSpec extends AnyFunSuite {
     }
     // the rules fire: the inputs are not all null under every region
     assert(df.select(normalizePhone(col("raw"), "GB")).na.drop().count() > 100)
+  }
+
+  /** The normalized payload as the pipeline first computed it: a typed
+    * struct round trip, `from_json` into a column, then `to_json` over a
+    * struct rebuilt from its fields with the phone fields through
+    * [[normalizePhone]]. The spec that
+    * [[graft.functions.NormalizePayloadExpr]]'s kernel must equal byte
+    * for byte. The parse stays one projection below the rebuild, as it
+    * was: inlined into the rebuild, the optimizer would prune it into one
+    * single-field parse per field, whose results differ on malformed
+    * input. */
+  private def referencePayload(df: DataFrame, region: String): DataFrame = {
+    import graft.ingest.IngestPipeline.{payloadSchema, phoneFields}
+    val parsed = df.withColumn("payload_struct",
+      from_json(col("payload"), payloadSchema))
+    val p = col("payload_struct")
+    val rebuilt = struct(payloadSchema.fields.toIndexedSeq.map { f =>
+      val v = p.getField(f.name)
+      (if (phoneFields.contains(f.name)) normalizePhone(v, region) else v).as(f.name)
+    }: _*)
+    parsed.withColumn("payload_normalized", to_json(rebuilt))
+  }
+
+  /** Seeded payload bytes: random subsets of the known fields in random
+    * order, with nulls, escapes, non-ASCII and emoji, unknown and nested
+    * fields; then values outside the fast path's grammar (a number in a
+    * phone field, a string in `duration`, 1e400, a long overflow, a float
+    * in `text_length`, null and nested map values, duplicate and
+    * case-variant keys, single quotes, NaN, a non-object root, malformed
+    * JSON, trailing text), invalid UTF-8 bytes and null. */
+  private def payloadInputs(seed: Long, count: Int): Seq[Array[Byte]] = {
+    val rnd = new scala.util.Random(seed)
+    def pick[T](xs: IndexedSeq[T]) = xs(rnd.nextInt(xs.size))
+    val chars = IndexedSeq("a", "Z", "0", "7", " ", "-", "+", "(", ")", ".",
+      "\\\"", "\\\\", "\\/", "\\n", "\\t", "\\u00e9", "\\u0041", "\\ud83d\\ude00",
+      "\\ud800", "é", "中", "😀", "٣", "\u00a0", "/", "'")
+    def text(k: Int) = (1 to k).map(_ => pick(chars)).mkString
+    def phone() = pick(IndexedSeq("", "+", "00", "(", "0", "1")) +
+      (1 to 6 + rnd.nextInt(10)).map(_ => if (rnd.nextInt(6) == 0) pick(chars)
+        else ('0' + rnd.nextInt(10)).toChar.toString).mkString
+    def str(s: String) = if (rnd.nextInt(40) == 0) s"'$s'" else "\"" + s + "\""
+    def num() = pick(IndexedSeq(rnd.nextInt(4000).toString,
+      (rnd.nextDouble() * 1000).toString, "-0.0", "0", "1e-320", "2.5E10",
+      "123456789012345678", "-7"))
+    def meta() = "{" + (0 until rnd.nextInt(4)).map(j =>
+      s"${str("k" + j + text(rnd.nextInt(3)))}:${str(text(rnd.nextInt(5)))}")
+      .mkString(",") + "}"
+    def unknown() = pick(IndexedSeq("{\"a\":[1,{\"b\":null}],\"c\":\"x\"}", "[1,2,3]",
+      "\"u\"", "12.5", "true", "null", "{}"))
+    val good: IndexedSeq[(String, () => String)] = IndexedSeq(
+      "call_id" -> (() => str("call-" + text(rnd.nextInt(6)))),
+      "message_id" -> (() => str(text(rnd.nextInt(8)))),
+      "caller" -> (() => str(phone())), "callee" -> (() => str(phone())),
+      "from_phone" -> (() => str(phone())), "to_phone" -> (() => str(phone())),
+      "duration" -> (() => num()),
+      "status" -> (() => str(pick(IndexedSeq("completed", "failed", text(3))))),
+      "channel" -> (() => str(text(rnd.nextInt(4)))),
+      "text_length" -> (() => rnd.nextInt(100000).toString),
+      "metadata" -> (() => meta()))
+    val bad: IndexedSeq[String => String] = IndexedSeq(
+      o => o.replaceFirst("^\\{", "{\"caller\":4155550123,"),
+      o => o.replaceFirst("^\\{", "{\"duration\":\"12\","),
+      o => o.replaceFirst("^\\{", "{\"duration\":1e400,"),
+      o => o.replaceFirst("^\\{", "{\"duration\":NaN,"),
+      o => o.replaceFirst("^\\{", "{\"duration\":\"NaN\","),
+      o => o.replaceFirst("^\\{", "{\"text_length\":99999999999999999999,"),
+      o => o.replaceFirst("^\\{", "{\"text_length\":1.5,"),
+      o => o.replaceFirst("^\\{", "{\"metadata\":{\"a\":null,\"b\":\"c\"},"),
+      o => o.replaceFirst("^\\{", "{\"metadata\":{\"a\":{\"n\":1}},"),
+      o => o.replaceFirst("^\\{", "{\"metadata\":{\"a\":\"1\",\"a\":\"2\"},"),
+      o => o.replaceFirst("^\\{", "{\"metadata\":\"flat\","),
+      o => o.replaceFirst("^\\{", "{\"status\":\"x\",\"status\":\"y\","),
+      o => o.replaceFirst("^\\{", "{\"Caller\":\"4155550123\","),
+      o => o.replaceFirst("^\\{", "{\"CALL_ID\":\"c\","),
+      o => o.replaceFirst("^\\{", "{'caller':'+44 20 7946 0958',"),
+      o => o.replaceFirst("^\\{", "{\"call_id\":[1],"),
+      o => o.replaceFirst("^\\{", "{\"call_id\":{\"x\":\"y\"},"),
+      o => "[" + o + "]", o => "\"" + o.replace("\"", "'") + "\"", _ => "42",
+      _ => "null", _ => "", o => " " + o, o => "\uFEFF" + o,
+      o => o.dropRight(1), o => o + " trailing", o => o + "{}",
+      o => o.replaceFirst(",", ",,"), o => o.replaceFirst("\\}$", ",}"))
+    val badBytes = IndexedSeq(Array(0xff), Array(0xc0, 0x80), Array(0xed, 0xa0, 0x80),
+      Array(0xf4, 0x90, 0x80, 0x80), Array(0xe2, 0x82), Array(0x80), Array(0x00),
+      Array(0xf0, 0x9f, 0x98, 0x80)).map(_.map(_.toByte))
+    def obj(): String = {
+      val fields = rnd.shuffle(good).take(rnd.nextInt(good.size + 1)).map { case (k, v) =>
+        s"\"$k\":" + (if (rnd.nextInt(8) == 0) "null" else v())
+      } ++ (if (rnd.nextInt(4) == 0) Seq(s"\"extra_${rnd.nextInt(3)}\":${unknown()}")
+        else Nil)
+      rnd.shuffle(fields).mkString("{", ",", "}")
+    }
+    val generated = (1 to count).map { _ =>
+      val o = obj()
+      rnd.nextInt(10) match {
+        case 0 | 1 | 2 => pick(bad)(o).getBytes("UTF-8")
+        case 3 =>
+          // raw bytes spliced inside a string value (or anywhere)
+          val b = o.getBytes("UTF-8")
+          val quote = b.indices.filter(b(_) == '"')
+          val at = if (quote.nonEmpty && rnd.nextBoolean()) quote(rnd.nextInt(quote.size)) + 1
+            else rnd.nextInt(b.length + 1)
+          b.take(at) ++ pick(badBytes) ++ b.drop(at)
+        case _ => o.getBytes("UTF-8")
+      }
+    }
+    generated :+ null
+  }
+
+  test("normalizePayload kernel equals from_json → normalizePhone → to_json, byte for byte, codegen'd and interpreted") {
+    import graft.functions.{NormalizePayloadExpr, PayloadNormalizer}
+    import graft.ingest.IngestPipeline.{payloadSchema, phoneFields}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val inputs = payloadInputs(seed = 4321L, count = 3000)
+    // an RDD-backed frame, so the kernel reaches generated code; binary →
+    // string keeps invalid UTF-8 bytes as they are
+    val df = spark.sparkContext.parallelize(inputs.zipWithIndex.map {
+      case (b, i) => (i, b) }, 4).toDF("i", "bin")
+      .select(col("i"), col("bin").cast("string").as("payload"))
+    def bytes(out: DataFrame) = out.select(col("i"), col("payload_normalized").cast("binary"))
+      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    def check(region: String, what: String): Unit = {
+      val kernel = df.withColumn("payload_normalized",
+        normalizePayload(col("payload"), payloadSchema, phoneFields, region))
+      val projects = kernel.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => w.collect { case p: ProjectExec => p }
+      }.flatten
+      assert(projects.exists(_.projectList.exists(_.find(
+        _.isInstanceOf[NormalizePayloadExpr]).isDefined)), "the kernel runs codegen'd")
+      val got = bytes(kernel)
+      val want = bytes(referencePayload(df, region))
+      val diff = inputs.indices.filter(i => got(i) != want(i))
+      assert(diff.isEmpty, s"$what codegen'd: " + diff.take(5).map(i =>
+        s"in=${Option(inputs(i)).map(new String(_, "UTF-8")).orNull} " +
+        s"got=${new String(got(i).toArray, "UTF-8")} want=${new String(want(i).toArray, "UTF-8")}")
+        .mkString("; "))
+      inputs.indices.foreach { i =>
+        val lit = Literal(Option(inputs(i)).map(UTF8String.fromBytes).orNull, StringType)
+        val out = NormalizePayloadExpr(lit, payloadSchema, phoneFields, region)
+          .eval().asInstanceOf[UTF8String]
+        assert(out.getBytes.toSeq == want(i), s"$what interpreted: input $i")
+      }
+    }
+    for (region <- Seq("US", "GB")) check(region, s"region=$region")
+    // both paths are exercised: most inputs take the fast path, and a
+    // large share falls back to the reference
+    val kernel = new PayloadNormalizer(payloadSchema, phoneFields, "US")
+    val fast = inputs.count(b => b != null &&
+      kernel.fastOrNull(UTF8String.fromBytes(b)) != null)
+    assert(fast > inputs.size / 2 && inputs.size - fast > inputs.size / 4,
+      s"fast path took $fast of ${inputs.size}")
+    // the null-fields setting is read when the kernel first runs, as
+    // to_json reads it, so an expression built before a change follows it
+    val builtBefore = NormalizePayloadExpr(Literal(
+      UTF8String.fromString("{\"caller\":null,\"duration\":1.5}"), StringType),
+      payloadSchema, phoneFields, "US")
+    val prev = spark.conf.get("spark.sql.jsonGenerator.ignoreNullFields")
+    spark.conf.set("spark.sql.jsonGenerator.ignoreNullFields", "false")
+    try {
+      check("US", "ignoreNullFields=false")
+      val late = builtBefore.eval().toString
+      assert(late.contains("\"caller\":null,") && late.contains("\"duration\":1.5"), late)
+    } finally spark.conf.set("spark.sql.jsonGenerator.ignoreNullFields", prev)
+  }
+
+  test("normalizePayload: a used kernel is collectable while its thread lives on") {
+    import graft.functions.PayloadNormalizer
+    import graft.ingest.IngestPipeline.{payloadSchema, phoneFields}
+    import java.lang.ref.WeakReference
+    import org.apache.spark.unsafe.types.UTF8String
+    // every task deserializes its own kernel on a pooled executor thread;
+    // the kernel's parse state must go with it, not stay on the thread.
+    // Both paths run, so both halves of the state are built.
+    def used(): WeakReference[PayloadNormalizer] = {
+      val k = new PayloadNormalizer(payloadSchema, phoneFields, "US")
+      for (in <- Seq("""{"caller":"4155550123"}""", """ {"caller":"4155550123"}"""))
+        assert(k.normalize(UTF8String.fromString(in)).toString === """{"caller":"+14155550123"}""")
+      new WeakReference(k)
+    }
+    val refs = (1 to 8).map(_ => used())
+    var gcs = 0
+    while (refs.exists(_.get != null) && gcs < 50) {
+      System.gc()
+      Thread.sleep(20)
+      gcs += 1
+    }
+    assert(refs.count(_.get != null) === 0, s"kernels still reachable after $gcs GCs")
   }
 
   test("maskPhones: E.164 masked to +D***DD, non-phones untouched, count matches") {

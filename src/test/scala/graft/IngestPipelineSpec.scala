@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 import java.util.Base64
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
@@ -119,8 +120,40 @@ class IngestPipelineSpec extends AnyFunSuite {
       val res = IngestPipeline.run(SyntheticData.envelopes(spark, 2000),
         IngestPipeline.Config(auditRate = 0.8, receivedAt = Some(fixedTs)))
       assert(res.events.count() > 1400)
+      // the batch events route over run's cache, and the uncached route
+      // the streaming path runs: no expression that opts out of codegen,
+      // and no projection outside a whole-stage-codegen stage
+      val uncached = IngestPipeline.eventRows(IngestPipeline.prepare(
+        SyntheticData.envelopes(spark, 2000), cfg80), cfg80)
+      val gaps = Seq("batch" -> res.events, "uncached" -> uncached).flatMap {
+        case (route, df) =>
+          assert(df.collect().length > 1400)
+          val nodes = planNodes(df.queryExecution.executedPlan)
+          val staged = nodes.collect { case w: WholeStageCodegenExec => stage(w.child) }
+            .flatten
+          nodes.filter(_.expressions.exists(
+              _.find(_.isInstanceOf[CodegenFallback]).isDefined))
+            .map(n => s"$route, codegen fallback: ${n.simpleString(200)}") ++
+          nodes.collect { case p: ProjectExec if !staged.exists(_ eq p) =>
+            s"$route, projection outside codegen: ${p.simpleString(200)}" }
+      }
+      assert(gaps.isEmpty, gaps.mkString("\n"))
     } finally spark.conf.set("spark.sql.codegen.fallback", prev)
   }
+
+  /** Every node of an executed plan: through AQE's stages, and into the
+    * plans of the caches it scans. */
+  private def planNodes(plan: SparkPlan): Seq[SparkPlan] =
+    Plans.collect(plan) { case p => p }.flatMap {
+      case m: InMemoryTableScanExec => m +: planNodes(m.relation.cachedPlan)
+      case p => Seq(p)
+    }
+
+  /** The nodes one whole-stage-codegen stage compiles, from its child. */
+  private def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case _: InputAdapter => Nil
+    case _ => p.children.flatMap(stage)
+  })
 
   private object Plans extends AdaptiveSparkPlanHelper
 
@@ -222,11 +255,13 @@ class IngestPipelineSpec extends AnyFunSuite {
     def exprs(df: DataFrame) = Plans.collect(df.queryExecution.executedPlan) {
       case p => p.expressions
     }.flatten
-    val payloadParses = exprs(v).flatMap(_.collect {
+    def payloadParses(df: DataFrame) = exprs(df).flatMap(_.collect {
       case g @ GetJsonObject(a: AttributeReference, _) if a.name == "payload" => g
     })
-    assert(payloadParses.size === 2, v.queryExecution.executedPlan.toString)
+    assert(payloadParses(v).size === 2, v.queryExecution.executedPlan.toString)
     val events = IngestPipeline.eventRows(v, cfg80)
+    // uncached, the validity filter must not copy the key's parses
+    assert(payloadParses(events).size === 2, events.queryExecution.executedPlan.toString)
     assert(exprs(events).forall(_.find(_.isInstanceOf[RegExpReplace]).isEmpty),
       events.queryExecution.executedPlan.toString)
     assert(events.count() > 300)
