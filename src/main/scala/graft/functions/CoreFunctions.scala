@@ -161,6 +161,17 @@ object CoreFunctions {
     GraftColumnBridge.column(NormalizePayloadExpr(
       GraftColumnBridge.expression(payload), schema, phoneFields, region))
 
+  /** A base64 push body decoded into its envelope by one native
+    * expression, [[DecodeEnvelopeExpr]]: a struct of the decoded JSON
+    * (`__raw_json`), each of `fields`, the first non-null of the `ids`
+    * inside the `payload` field (`payload_id`) and `invalid_json`, each
+    * byte-identical to the Spark expression its scaladoc names
+    * (`try_to_binary`, `json_tuple`, `get_json_object`). */
+  def decodeEnvelope(data: Column, fields: Seq[String], payload: String,
+      ids: Seq[String], probe: String): Column =
+    GraftColumnBridge.column(DecodeEnvelopeExpr(
+      GraftColumnBridge.expression(data), fields, payload, ids, probe))
+
   /** E.164 phone occurrences: '+' then 8-15 digits — the shape every
     * number leaves [[normalizePhone]] in, matchable identically by Java
     * regex (engine) and RE2 (oracle): no lookaround, no backreferences. */

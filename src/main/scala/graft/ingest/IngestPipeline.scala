@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.CoreFunctions._
+import graft.functions.EnvelopeDecoder
 
 /** The reference's ingest pipeline (SURVEY §2A A2–A14) as one declarative
   * Spark transform chain: decode → validate → key-derive → sample →
@@ -53,62 +54,63 @@ object IngestPipeline {
   /** Transport attributes the DLQ carries when the source has them. */
   private val transportFields = Seq("message_id", "ordering_key")
 
+  /** The payload fields whose first non-null value keys a message
+    * (validation.js:33-42); `trace_id` is the fallback. */
+  private val payloadIds = Seq("call_id", "message_id")
+
+  /** The kernel's struct column, read by [[validated]] and dropped there. */
+  private val Envelope = "__envelope"
+
   /** A2 — base64-decode a Pub/Sub push body column and surface the
     * envelope fields (handler.js:43-44). Bad base64 / non-JSON rows get
-    * null envelope fields and are routed by [[validated]]. */
+    * null envelope fields and are routed by [[validated]].
+    *
+    * One native expression reads each body once
+    * ([[graft.functions.CoreFunctions.decodeEnvelope]]): the decoded JSON
+    * (`__raw_json`), the eight fields, and for [[validated]] the payload
+    * id and the invalid-JSON test, in an internal struct column,
+    * `__envelope`, which [[validated]] drops. Each value is byte-identical
+    * to the expression chain it replaces: `try_to_binary(data, 'base64')`
+    * cast to string, `json_tuple` over the eight fields, and
+    * `get_json_object` over the payload (CoreFunctionsSpec keeps that
+    * chain and checks the kernel against it).
+    *
+    * noInline: the fields are struct-field reads of the one kernel column;
+    * without the barrier, predicate pushdown would copy the kernel into
+    * every filter that reads a field — one decode per reference per row.
+    * The barrier also stops predicates on SIBLING columns from crossing
+    * this projection (Catalyst tests all fields of a Project), so apply
+    * source-column filters — partition pruning, attribute predicates — to
+    * `raw` BEFORE calling decoded(). */
   def decoded(raw: DataFrame, dataCol: String = "data"): DataFrame = {
-    val json = col("__raw_json")
-    // try_to_binary: malformed base64 yields null (→ invalid_json route)
-    // instead of an ANSI execution error.
-    // noInline: downstream validation filters reference the decoded JSON
-    // ~12×; without the barrier, predicate pushdown re-embeds the whole
-    // decode-of-source tree per reference — recomputed per row AND (with
-    // an expression-defined source like the synthetic generator) a fused
-    // stage past the JVM's 64 KB codegen limit. Decode once, reference
-    // many. The barrier also stops predicates on SIBLING columns from
-    // crossing this projection (Catalyst tests all fields of a Project),
-    // so apply source-column filters — partition pruning, attribute
-    // predicates — to `raw` BEFORE calling decoded().
-    // ONE streaming parse for all eight top-level fields (json_tuple)
-    // instead of eight independent get_json_object parses of the same
-    // string (r15; decode was 2.9 s of the 4.9 s / 500k-envelope ingest
-    // pass, guide §1.2 per-task work). Identical extraction semantics:
-    // both are Jackson streaming top-level field reads — missing fields,
-    // scalar roots and malformed JSON yield NULL, and non-leaf fields
-    // (payload) surface as their raw JSON text (IngestPipelineSpec +
-    // the q01–q09 oracle twins gate this).
-    raw.withColumn("__raw_json",
-        noInline(expr(s"cast(try_to_binary($dataCol, 'base64') as string)")))
-      .select(col("*"), json_tuple(json, envelopeFields: _*).as(envelopeFields))
+    val env = col(Envelope)
+    raw.select(col("*"), noInline(decodeEnvelope(col(dataCol), envelopeFields,
+        "payload", payloadIds, "event_type")).as(Envelope))
+      .select(col("*") +: (EnvelopeDecoder.RawJson +: envelopeFields)
+        .map(f => env.getField(f).as(f)): _*)
   }
 
   /** A3+A4+A5 — envelope validation + key derivation (validation.js:12-66):
-    * adds is_valid, error_type, idempotency_key. */
+    * adds is_valid, error_type, idempotency_key. Reads the `__envelope`
+    * column [[decoded]] adds, and drops it. */
   def validated(df: DataFrame): DataFrame = {
+    val env = col(Envelope)
     val requiredOk = Seq("envelope_version", "event_type", "schema_version",
       "tenant_id", "occurred_at", "payload").map(col(_).isNotNull)
       .reduce(_ && _)
     // try_ variant: malformed timestamps must route to the DLQ, not throw
     // (ANSI mode is on)
     val tsOk = expr("try_to_timestamp(occurred_at)").isNotNull
-    // noInline: the is_valid filter reads the key through error_type; on
-    // an uncached frame, pushdown would otherwise copy the key's payload
-    // parses into the filter, below the projection that also runs them
-    val key = noInline(idempotencyKey(col("payload"),
-      Seq("$.call_id", "$.message_id"), col("trace_id")))
-    df.withColumn("idempotency_key", key)
+    df.withColumn("idempotency_key",
+        coalesce(env.getField(EnvelopeDecoder.PayloadId), col("trace_id")))
       .withColumn("error_type",
-        // the regex test first: `&&` stops at it for every row that opens
-        // a JSON object, so only the rest parse the raw envelope again
-        when(col("__raw_json").isNull ||
-            !col("__raw_json").rlike("^\\s*\\{") &&
-            get_json_object(col("__raw_json"), "$.event_type").isNull,
-            lit("invalid_json"))
+        when(env.getField(EnvelopeDecoder.InvalidJson), lit("invalid_json"))
           .when(!requiredOk, lit("missing_fields"))
           .when(!tsOk, lit("invalid_timestamp"))
           .when(col("idempotency_key").isNull, lit("no_idempotency_key"))
           .otherwise(lit(null).cast("string")))
       .withColumn("is_valid", col("error_type").isNull)
+      .drop(Envelope)
   }
 
   /** A6+A7 — deterministic sampling decision column (sampling.js). */
@@ -167,20 +169,18 @@ object IngestPipeline {
   /** Back half: route a prepared frame into (events, dlq, sampled-out).
     * A12's dedup: events are dropDuplicates on idempotency_key — stronger
     * than the reference's best-effort BigQuery insertId (SURVEY A12).
-    * IngestPipelineSpec asserts the whole path stays inside whole-stage
-    * codegen with spark.sql.codegen.fallback=false. */
+    * IngestPipelineSpec asserts every projection on the path stays inside
+    * whole-stage codegen with spark.sql.codegen.fallback=false; the dedup
+    * aggregate itself does not (below). */
   def split(v: DataFrame, cfg: Config = Config()): IngestResult = {
     // The explicit repartition IS the dedup's shuffle (hashpartitioning on
     // the key satisfies the aggregate's distribution — EnsureRequirements
-    // adds no second exchange). Placing it between the heavy
-    // decode→normalize→project tree and the dedup aggregate cuts the
-    // codegen stage there: the map side carries the column work (a plain
-    // projection, which codegens fine), the reduce side aggregates 11
-    // already-materialized attributes. Fused into one stage, the
-    // aggregate's generated doAggregateWithKeys() re-embeds every
-    // upstream column tree per first() expr and exceeds the JVM's 64 KB
-    // method limit — a silent fall-back off whole-stage codegen for the
-    // hot ingest stage.
+    // adds no second exchange). The map side carries the column work
+    // (normalize → project, a codegen'd projection); the reduce side
+    // dedups 11 already-materialized attributes. That dedup runs outside
+    // whole-stage codegen: `first()` over string columns has no
+    // fixed-width buffer, so Spark plans it as two SortAggregates
+    // (plans/r18/ingest_events_batch_after.txt).
     val events = eventRows(v, cfg)
       .repartition(col("idempotency_key"))
       .dropDuplicates("idempotency_key")

@@ -584,6 +584,219 @@ class CoreFunctionsSpec extends AnyFunSuite {
     assert(refs.count(_.get != null) === 0, s"kernels still reachable after $gcs GCs")
   }
 
+  /** The envelope fields the pipeline surfaces, in its order. */
+  private val envelopeFields = Seq("envelope_version", "event_type",
+    "schema_version", "tenant_id", "occurred_at", "trace_id", "source",
+    "payload")
+
+  /** Decode and validation as the pipeline first computed them:
+    * `try_to_binary` → cast → `json_tuple`, the key's `get_json_object`s
+    * over the payload, and the `invalid_json` test over the raw JSON —
+    * the spec [[graft.functions.DecodeEnvelopeExpr]]'s kernel must equal
+    * byte for byte. Kept verbatim from `IngestPipeline.decoded` and
+    * `validated`. */
+  private def referenceEnvelope(raw: DataFrame): DataFrame = {
+    val json = col("__raw_json")
+    val decoded = raw.withColumn("__raw_json",
+        noInline(expr("cast(try_to_binary(data, 'base64') as string)")))
+      .select(col("*"), json_tuple(json, envelopeFields: _*).as(envelopeFields))
+    val requiredOk = Seq("envelope_version", "event_type", "schema_version",
+      "tenant_id", "occurred_at", "payload").map(col(_).isNotNull)
+      .reduce(_ && _)
+    val tsOk = expr("try_to_timestamp(occurred_at)").isNotNull
+    val key = noInline(idempotencyKey(col("payload"),
+      Seq("$.call_id", "$.message_id"), col("trace_id")))
+    decoded.withColumn("idempotency_key", key)
+      .withColumn("error_type",
+        when(col("__raw_json").isNull ||
+            !col("__raw_json").rlike("^\\s*\\{") &&
+            get_json_object(col("__raw_json"), "$.event_type").isNull,
+            lit("invalid_json"))
+          .when(!requiredOk, lit("missing_fields"))
+          .when(!tsOk, lit("invalid_timestamp"))
+          .when(col("idempotency_key").isNull, lit("no_idempotency_key"))
+          .otherwise(lit(null).cast("string")))
+      .withColumn("is_valid", col("error_type").isNull)
+  }
+
+  /** Seeded push bodies (as bytes, so malformed ones survive): envelopes
+    * with random subsets of the fields in random order, nulls, unknown
+    * fields, nested values, numbers, non-ASCII and emoji, payloads with
+    * and without ids; then, for about 40 %, one edge: whitespace, escapes,
+    * single quotes, duplicate fields and payload ids (null first or not),
+    * case-variant keys, non-object roots, trailing tokens, `1.50`/`1e3`/
+    * `-0` numbers, deep nesting, an oversized body, malformed UTF-8 and
+    * NUL bytes, or bad, padded, unpadded, URL-safe, spaced and
+    * non-canonical base64; and a null body. */
+  private def envelopeInputs(seed: Long, count: Int): Seq[Array[Byte]] = {
+    val rnd = new scala.util.Random(seed)
+    def pick[T](xs: IndexedSeq[T]) = xs(rnd.nextInt(xs.size))
+    val plain = IndexedSeq("a", "Z", "7", " ", "-", ".", ":", "é", "中", "/", "(", ")")
+    val odd = IndexedSeq("😀", "\\\"", "\\\\", "\\/", "\\n", "\\u0041",
+      "\\ud83d\\ude00", "\\ud800", "'", "\t", "\u007f")
+    def text(k: Int) = {
+      val t = (1 to k).map(_ => pick(plain)).mkString
+      if (rnd.nextInt(40) > 0) t else {
+        val at = rnd.nextInt(k + 1)
+        t.take(at) + pick(odd) + t.drop(at)
+      }
+    }
+    def str(s: String) = "\"" + s + "\""
+    val numbers = IndexedSeq("0", "7", "42", "-3", "1.5", "42.5", "0.1",
+      "1.0E10", "2.5E-3", "1.50", "1e3", "-0", "-0.0", "1E400",
+      "123456789012345678901", "3600")
+    def num() = if (rnd.nextInt(6) == 0) pick(numbers) else rnd.nextInt(4000).toString
+    def nested(d: Int): String = rnd.nextInt(if (d > 2) 4 else 6) match {
+      case 0 => str(text(rnd.nextInt(6)))
+      case 1 => num()
+      case 2 => pick(IndexedSeq("true", "false", "null"))
+      case 3 => "[]"
+      case 4 => (0 until 1 + rnd.nextInt(3)).map(_ => nested(d + 1)).mkString("[", ",", "]")
+      case _ => (0 until rnd.nextInt(3)).map(j => s"${str("k" + j)}:${nested(d + 1)}")
+        .mkString("{", ",", "}")
+    }
+    def payload(): String = rnd.nextInt(40) match {
+      case 0 => "null"
+      case 1 => str(pick(IndexedSeq("""{\"call_id\":\"s\"}""", "{'call_id':'q'}", "text")))
+      case 2 => pick(IndexedSeq("5", "[1,2]", "true", "[{\"call_id\":\"x\"}]"))
+      case _ =>
+        val id = () => rnd.nextInt(12) match {
+          case 0 => "null"
+          case 1 => num()
+          case 2 => nested(2)
+          case _ => str("id-" + text(1 + rnd.nextInt(6)))
+        }
+        val fields = Seq(
+          Option.when(rnd.nextInt(4) > 0)(s"${str("call_id")}:${id()}"),
+          Option.when(rnd.nextInt(3) > 0)(s"${str("message_id")}:${id()}"),
+          Some(s"${str("caller")}:${str("(415) 555-" + rnd.nextInt(10000))}"),
+          Some(s"${str("duration")}:${num()}"),
+          Option.when(rnd.nextBoolean())(s"${str("metadata")}:${nested(1)}"),
+          Option.when(rnd.nextInt(4) == 0)(s"${str("nested")}:{${str("call_id")}:${str("inner")}}"))
+          .flatten
+        rnd.shuffle(fields).mkString("{", ",", "}")
+    }
+    val known: IndexedSeq[(String, () => String)] = IndexedSeq(
+      "envelope_version" -> (() => if (rnd.nextInt(10) == 0) "1" else str("1")),
+      "event_type" -> (() => str(pick(IndexedSeq("call.completed", "chat.message", text(3))))),
+      "schema_version" -> (() => if (rnd.nextInt(10) == 0) num() else str("2")),
+      "tenant_id" -> (() => if (rnd.nextInt(15) == 0) nested(1) else str("tenant-" + text(2))),
+      "occurred_at" -> (() => str(pick(IndexedSeq("2024-05-01T10:00:00Z",
+        "2024-03-09T23:59:59Z", "2024-05-01 10:00:00", "not-a-date")))),
+      "trace_id" -> (() => str("trace-" + text(1 + rnd.nextInt(5)))),
+      "source" -> (() => str(text(rnd.nextInt(8)))),
+      "payload" -> (() => payload()))
+    def envelope(): String = {
+      val fields = known.filter(_ => rnd.nextInt(12) > 0).map { case (k, v) =>
+        s"${str(k)}:" + (if (rnd.nextInt(15) == 0) "null" else v())
+      } ++ (if (rnd.nextInt(5) == 0) Seq(s"${str("extra")}:${nested(1)}") else Nil)
+      rnd.shuffle(fields).mkString("{", ",", "}")
+    }
+    val edits: IndexedSeq[String => String] = IndexedSeq(
+      o => " " + o, o => o + " ", o => o + "\n", o => "\u000b" + o, o => "﻿" + o,
+      o => o.replace("\":", "\": "), o => o.replace(",", " ,"),
+      o => o + " junk", o => o + "{}", o => o.dropRight(1), o => o.replaceFirst(",", ",,"),
+      o => o.replaceFirst("\\}$", ",}"),
+      o => "[" + o + "]", _ => "\"{}\"", _ => "42", _ => "null", _ => "", _ => "not json",
+      o => o.replaceFirst("^\\{", "{\"tenant_id\":null,"),
+      o => o.replaceFirst("^\\{", "{\"tenant_id\":\"dup\","),
+      o => o + o.replaceFirst("^\\{", ","),
+      o => o.replace("\"payload\":{", "\"payload\":{\"call_id\":null,"),
+      o => o.replace("\"payload\":{", "\"payload\":{\"call_id\":\"first\","),
+      o => o.replace("\"payload\":{", "\"payload\":{\"message_id\":\"m\",\"message_id\":null,"),
+      o => o.replaceFirst("^\\{", "{'source':'sq',"),
+      o => o.replaceFirst("^\\{", "{\"Tenant_ID\":\"case\","),
+      o => o.replaceFirst("^\\{", "{\"source\":\"a\\\\\"b\","),
+      o => o.replaceFirst("^\\{", "{\"source\":\"tab\there\","),
+      o => o.replaceFirst("^\\{", "{\"tenant_id\":1.50,"),
+      o => o.replaceFirst("^\\{", "{\"schema_version\":1e3,"),
+      o => o.replaceFirst("^\\{", "{\"schema_version\":-0,"),
+      o => o.replaceFirst("^\\{", "{\"extra\":" + "[" * 40 + "]" * 40 + ","),
+      o => o.replaceFirst("^\\{", "{\"extra\":\"" + "x" * 40000 + "\","))
+    val badBytes = IndexedSeq(Array(0xff), Array(0xc0, 0x80), Array(0xed, 0xa0, 0x80),
+      Array(0xf4, 0x90, 0x80, 0x80), Array(0xe2, 0x82), Array(0x80), Array(0x00),
+      Array(0x0b), Array(0xf0, 0x9f, 0x98, 0x80)).map(_.map(_.toByte))
+    val b64 = java.util.Base64.getEncoder
+    val b64edits: IndexedSeq[String => String] = IndexedSeq(
+      _.dropRight(1), _ + "=", _.replace("=", ""), _.replace('+', '-').replace('/', '_'),
+      s => s.take(s.length / 2) + " " + s.drop(s.length / 2),
+      s => s.take(s.length / 2) + "\n" + s.drop(s.length / 2),
+      s => s.take(4) + "=" + s.drop(4), "%%" + _ + "%%", _ => "!!!not-base64!!!", _ => "",
+      _ + "é",
+      // a non-zero trailing bit, which lenient decoders drop
+      s => if (s.endsWith("=")) {
+        val k = s.indexOf('=') - 1
+        s.take(k) + (if (s(k) == 'A') 'B' else 'A') + s.drop(k + 1)
+      } else s)
+    val bodies = (1 to count).map { _ =>
+      val o = envelope()
+      val json = rnd.nextInt(20) match {
+        case k if k < 5 => pick(edits)(o).getBytes("UTF-8")
+        case 5 =>
+          val b = o.getBytes("UTF-8")
+          val at = rnd.nextInt(b.length + 1)
+          b.take(at) ++ pick(badBytes) ++ b.drop(at)
+        case _ => o.getBytes("UTF-8")
+      }
+      val data = b64.encodeToString(json)
+      (if (rnd.nextInt(12) == 0) pick(b64edits)(data) else data).getBytes("UTF-8")
+    }
+    bodies :+ null
+  }
+
+  test("decodeEnvelope equals base64 → json_tuple → get_json_object, byte for byte, codegen'd and interpreted") {
+    import graft.functions.{DecodeEnvelopeExpr, EnvelopeDecoder}
+    import graft.ingest.IngestPipeline
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.unsafe.types.UTF8String
+    val inputs = envelopeInputs(seed = 9021L, count = 3000)
+    // an RDD-backed frame, so the kernel reaches generated code; binary →
+    // string keeps malformed bytes as they are
+    val raw = spark.sparkContext.parallelize(inputs.zipWithIndex.map {
+      case (b, i) => (i, b) }, 4).toDF("i", "bin")
+      .select(col("i"), col("bin").cast("string").as("data"))
+    val outputs = ("__raw_json" +: envelopeFields) ++ Seq("idempotency_key", "error_type")
+    def rows(df: DataFrame) = df.select(col("i") +: outputs.map(col(_).cast("binary")) :+
+        col("is_valid"): _*)
+      .collect().map(r => r.getInt(0) -> r.toSeq.tail.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }).toMap
+    val want = rows(referenceEnvelope(raw))
+    def check(what: String): Unit = {
+      val kernel = IngestPipeline.validated(IngestPipeline.decoded(raw))
+      val got = rows(kernel)
+      val diff = inputs.indices.filter(i => got(i) != want(i))
+      assert(diff.isEmpty, s"$what: ${diff.size} differ; " + diff.take(5).map { i =>
+        val col = outputs.indices.find(k => got(i)(k) != want(i)(k)).map(outputs).getOrElse("is_valid")
+        s"in=${Option(inputs(i)).map(new String(_, "UTF-8")).orNull} first diff in $col"
+      }.mkString("; "))
+    }
+    // codegen'd, with no interpreted fall-back
+    assert(spark.conf.get("spark.sql.codegen.fallback") === "false")
+    val plan = IngestPipeline.validated(IngestPipeline.decoded(raw)).queryExecution.executedPlan
+    assert(plan.collect { case w: WholeStageCodegenExec => w.collect { case p: ProjectExec => p } }
+      .flatten.exists(_.projectList.exists(_.find(_.isInstanceOf[DecodeEnvelopeExpr]).isDefined)),
+      s"the kernel runs codegen'd: $plan")
+    check("codegen'd")
+    // interpreted: every projection evaluates its expressions through eval
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try check("interpreted")
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // both paths carry a large share of the inputs
+    val kernel = new EnvelopeDecoder(envelopeFields, "payload", Seq("call_id", "message_id"),
+      "event_type")
+    val fast = inputs.count(b => b != null && kernel.fastOrNull(UTF8String.fromBytes(b)) != null)
+    assert(fast > inputs.size / 2 && inputs.size - fast > inputs.size / 4,
+      s"fast path took $fast of ${inputs.size}")
+  }
+
   test("maskPhones: E.164 masked to +D***DD, non-phones untouched, count matches") {
     val rows = Seq(
       // E.164 from normalizePhone: masked, keep '+', first digit, last two
