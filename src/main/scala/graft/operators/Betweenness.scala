@@ -58,10 +58,11 @@ object Betweenness {
     val Array(srcCol, dstCol, _*) = edges.columns
     val eRaw = edges.select(col(srcCol).as("bt_node"),
       col(dstCol).as("bt_next"))
-    // loop-sized shuffles + AQE off for both sweeps (LoopTuning); the
-    // count (off the caller's upstream cache) sizes the loop conf
+    // both sweeps run under the loop conf (Fixpoint); the count (off
+    // the caller's upstream cache) sizes it
     val edgeRows = eRaw.count()
-    LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
+    val loop = new Fixpoint(edges.sparkSession)
+    loop.run(edgeRows) {
     // r15 (the Bfs r14 pattern, guide §2.4): EVERY per-layer join of both
     // sweeps keys on bt_node, so one keyed exchange at loop width makes
     // the persisted edge partitioning reusable by all of them — each
@@ -73,31 +74,26 @@ object Betweenness {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // ---- forward sweep: layers of (bt_seed, bt_node, sigma) ----
-    val layer0 = Frames.cut(seeds
+    val layer0 = loop.cut(seeds
       .select(col(seeds.columns.head).as("bt_seed")).distinct()
       .select(col("bt_seed"), col("bt_seed").as("bt_node"),
         lit(1L).as("sigma")))
-    var layers = List(layer0) // head = deepest layer so far
-    var hop = 0
-    var exhausted = false
-    while (!exhausted && hop < maxHops) {
-      hop += 1
-      // visited = union of the cut layers (append-only, the Bfs r14
-      // discipline): no per-hop re-checkpoint of the growing visited
-      // set, and the frontier-size test rides the checkpoint job as an
-      // observed metric — 3 jobs/hop → 1 (LoopObs)
-      val visited = layers.map(_.select("bt_seed", "bt_node"))
-        .reduce(_ union _)
-      val obs = org.apache.spark.sql.Observation(s"bt_hop_$hop")
-      val next = Frames.cut(layers.head.join(e, "bt_node")
-        .select(col("bt_seed"), col("bt_next").as("bt_node"),
-          col("sigma"))
-        .join(visited, Seq("bt_seed", "bt_node"), "left_anti")
-        .groupBy("bt_seed", "bt_node")
-        .agg(sum("sigma").as("sigma"))
-        .observe(obs, count(lit(1)).as("n")))
-      exhausted = LoopObs.count(obs, next) == 0L
-      if (!exhausted) layers ::= next
+    // head = deepest layer so far
+    val (layers, _) = loop.iterate(List(layer0), maxHops)(identity) {
+      (layers, _) =>
+        // visited = union of the cut layers (append-only, as in Bfs):
+        // no per-hop re-cut of the growing visited set, and the
+        // frontier-size test rides the cut job as an observed metric —
+        // one job per hop
+        val visited = layers.map(_.select("bt_seed", "bt_node"))
+          .reduce(_ union _)
+        val (next, n) = loop.observedCut(layers.head.join(e, "bt_node")
+          .select(col("bt_seed"), col("bt_next").as("bt_node"),
+            col("sigma"))
+          .join(visited, Seq("bt_seed", "bt_node"), "left_anti")
+          .groupBy("bt_seed", "bt_node")
+          .agg(sum("sigma").as("sigma")), count(lit(1)))
+        if (n == 0L) (layers, true) else (next :: layers, false)
     }
 
     // ---- backward sweep: δ per layer, deepest first ----
@@ -120,7 +116,7 @@ object Betweenness {
             Seq("bt_seed", "bt_next"), "left")
           .select(col("bt_seed"), col("bt_next"), col("sigma_w"),
             coalesce(col("delta_w"), lit(0L)).as("delta_w"))
-      delta = Frames.cut(cur.join(e, "bt_node")
+      delta = loop.cut(cur.join(e, "bt_node")
         .join(deeperDelta, Seq("bt_seed", "bt_next"))
         .select(col("bt_seed"), col("bt_node"),
           expr("(sigma * (1000000 + delta_w)) div sigma_w").as("term"))
@@ -137,7 +133,7 @@ object Betweenness {
     if (acc == null)
       layer0.sparkSession.emptyDataFrame
         .select(lit(0L).as("bt_node"), lit(0L).as("bt_fp")).limit(0)
-    else Frames.cut(acc.groupBy("bt_node").agg(sum("delta_fp").as("bt_fp")))
+    else loop.cut(acc.groupBy("bt_node").agg(sum("delta_fp").as("bt_fp")))
     }
   }
 }

@@ -54,11 +54,12 @@ object Bfs {
     // caller's upstream cache, and only the repartitioned copy — the one
     // every hop actually joins — is kept in storage.
     val eRaw = edges.select(col(srcCol).as("bfs_node"), col(dstCol).as("bfs_next"))
-    // loop-sized shuffles + AQE off for the hop loop (LoopTuning); the
-    // count runs under SESSION conf — candidate generation above the
-    // edge frame can be the heaviest subplan in the engine and keeps AQE
+    // the count runs under SESSION conf — candidate generation above
+    // the edge frame can be the heaviest subplan in the engine and
+    // keeps AQE; it sizes the hop loop's conf (Fixpoint)
     val edgeRows = eRaw.count()
-    LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
+    val loop = new Fixpoint(edges.sparkSession)
+    loop.run(edgeRows) {
     // Pre-partition the edge frame ON THE JOIN KEY at loop width, once
     // (guide §2.4: repeated joins on the same key reuse a persisted
     // partitioning): the cached scan partitioning carries no
@@ -67,43 +68,31 @@ object Bfs {
     // keyed exchange the per-hop join shuffles only the frontier.
     val e = eRaw.repartition(col("bfs_node"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val seed = Frames.cut(seeds
+    val seed = loop.cut(seeds
       .select(col(seeds.columns.head).as("bfs_seed")).distinct()
       .select(col("bfs_seed"), col("bfs_seed").as("bfs_node"),
         lit(0L).as("bfs_dist")))
     // BFS visited state is APPEND-ONLY (first touch is the minimum
     // distance), so the visited set is kept as the UNION of the per-hop
-    // cut frontier levels instead of being re-checkpointed every hop:
-    // each level is already a lineage leaf, the union of ≤ maxHops
-    // leaves keeps the per-hop plan flat, and the old
-    // `cut(visited ∪ next)` job — one extra action re-materializing
-    // O(|reached|) rows EVERY hop, O(|reached|·hops) total writes — is
-    // gone (r14 optimization: 3 jobs/hop → 2, measured on q322/q281).
-    // The anti-join reads the same rows either way.
-    var levels = List(seed)
-    var frontier = seed
-    var hop = 0
-    var exhausted = false
-    while (!exhausted && hop < maxHops) {
-      hop += 1
-      val visited = levels.map(_.select("bfs_seed", "bfs_node"))
-        .reduce(_ union _)
-      // the frontier-size convergence test rides the checkpoint job as
-      // an observed metric instead of a second count() action — one
-      // scheduler round-trip per hop, not two (LoopObs)
-      val obs = org.apache.spark.sql.Observation(s"bfs_hop_$hop")
-      val next = Frames.cut(frontier.join(e, "bfs_node")
-        .select(col("bfs_seed"), col("bfs_next").as("bfs_node"))
-        .distinct()
-        .join(visited, Seq("bfs_seed", "bfs_node"), "left_anti")
-        .select(col("bfs_seed"), col("bfs_node"),
-          lit(hop.toLong).as("bfs_dist"))
-        .observe(obs, count(lit(1)).as("n")))
-      exhausted = LoopObs.count(obs, next) == 0L
-      if (!exhausted) {
-        levels ::= next
-        frontier = next
-      } else Frames.freeCheckpoint(next) // the empty level joins no result
+    // cut frontier levels (head = the frontier) instead of being re-cut
+    // every hop: each level is already a lineage leaf, the union of
+    // ≤ maxHops leaves keeps the per-hop plan flat, and no hop pays an
+    // extra action re-materializing O(|reached|) rows (measured on
+    // q322/q281).
+    val (levels, _) = loop.iterate(List(seed), maxHops)(identity) {
+      (levels, hop) =>
+        val visited = levels.map(_.select("bfs_seed", "bfs_node"))
+          .reduce(_ union _)
+        // the frontier size rides the cut job as an observed metric —
+        // one scheduler round-trip per hop, not two; an empty level
+        // joins no result, so the driver frees it
+        val (next, n) = loop.observedCut(levels.head.join(e, "bfs_node")
+          .select(col("bfs_seed"), col("bfs_next").as("bfs_node"))
+          .distinct()
+          .join(visited, Seq("bfs_seed", "bfs_node"), "left_anti")
+          .select(col("bfs_seed"), col("bfs_node"),
+            lit(hop.toLong).as("bfs_dist")), count(lit(1)))
+        if (n == 0L) (levels, true) else (next :: levels, false)
     }
     e.unpersist(blocking = false)
     levels.reduce(_ union _)

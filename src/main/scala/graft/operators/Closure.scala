@@ -47,46 +47,40 @@ object Closure {
     */
   def transitiveClosure(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val Array(srcCol, dstCol, _*) = edges.columns
-    var reach = Frames.cut(edges
+    val loop = new Fixpoint(edges.sparkSession)
+    val reach0 = loop.cut(edges
       .select(col(srcCol).as("tc_src"), col(dstCol).as("tc_dst"))
       .filter(col("tc_src") =!= col("tc_dst"))
       .distinct())
-    var n = reach.count()
-    // loop-sized shuffles + AQE off for the doubling rounds (LoopTuning).
-    // The width is RE-DERIVED from the reach count every round below:
-    // the reach frame can grow toward |V|² of the reachable DAG across
+    // the doubling rounds run under the loop conf (Fixpoint). The
+    // width is RE-DERIVED from the reach count every round below: the
+    // reach frame can grow toward |V|² of the reachable DAG across
     // doublings, so a width fixed from the SEED edge count would run
     // quadratic-growth shuffles at seed-sized parallelism on dense
     // graphs — the count the loop already takes per round is the
     // growth-aware signal, for free.
-    LoopTuning.withLoopConf(edges.sparkSession, n) {
-    var iter = 0
-    var closed = false
-    while (!closed) {
-      iter += 1
-      if (iter > maxIter) throw new IllegalStateException(
-        s"transitive closure did not fix in $maxIter doubling rounds")
-      // fixpoint row count folded into the checkpoint job (LoopObs):
-      // one action per doubling round instead of two
-      val obs = org.apache.spark.sql.Observation(s"tc_round_$iter")
-      val doubled = Frames.cut(reach
+    val n0 = reach0.count()
+    loop.run(n0) {
+    val ((reach, _), closed) = loop.iterate((reach0, n0), maxIter)(
+        s => Seq(s._1)) { case ((reach, n), _) =>
+      // the fixpoint row count rides the cut job: one action per
+      // doubling round instead of two
+      val (doubled, n2) = loop.observedCut(reach
         .union(reach.as("a")
           .join(reach.select(col("tc_src").as("tc_mid2"),
               col("tc_dst").as("tc_far")),
             col("a.tc_dst") === col("tc_mid2"))
           .select(col("a.tc_src").as("tc_src"),
             col("tc_far").as("tc_dst")))
-        .distinct()
-        .observe(obs, count(lit(1)).as("n")))
-      val n2 = LoopObs.count(obs, doubled)
-      closed = n2 == n
-      n = n2
-      reach = doubled
+        .distinct(), count(lit(1)))
       // growth-aware re-split: next round's self-join shuffles n² /
       // current-reach rows in the worst case — resize from the count
       // this round already paid for
-      LoopTuning.updateWidth(edges.sparkSession, n)
+      LoopTuning.updateWidth(edges.sparkSession, n2)
+      ((doubled, n2), n2 == n)
     }
+    if (!closed) throw new IllegalStateException(
+      s"transitive closure did not fix in $maxIter doubling rounds")
     reach
     }
   }
@@ -134,47 +128,35 @@ object Closure {
       .filter(col("lay_src") =!= col("lay_node"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // loop-sized shuffles + AQE off for the layer rounds (LoopTuning)
+    // the layer rounds run under the loop conf (Fixpoint)
     val edgeRows = e.count()
-    LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
-    var layer = Frames.cut(nodes
+    val loop = new Fixpoint(edges.sparkSession)
+    loop.run(edgeRows) {
+    val layer0 = loop.cut(nodes
       .select(col(nodes.columns.head).as("lay_node")).distinct()
       .select(col("lay_node"), lit(0L).as("lay_layer")))
-    var iter = 0
-    var settled = false
-    while (!settled) {
-      iter += 1
-      if (iter > maxIter) throw new IllegalStateException(
-        s"dagLayers did not converge in $maxIter rounds — cyclic input?")
-      // the moved-row convergence test is computable INSIDE the round's
-      // plan (old layer vs corrected layer are both present before the
-      // final projection), so it rides the checkpoint job as an
-      // observed metric — the old separate next⋈layer count job per
-      // round is gone (LoopObs; 2 jobs + 1 join → 1 job per round)
-      val obs = org.apache.spark.sql.Observation(s"lay_round_$iter")
-      val next = Frames.cut(layer
-        .join(layer.select(col("lay_node").as("lay_src"),
-            col("lay_layer").as("src_layer"))
-          .join(e, "lay_src")
-          .groupBy("lay_node")
-          .agg((max(col("src_layer")) + 1L).as("in_layer")),
-          Seq("lay_node"), "left")
-        .select(col("lay_node"), col("lay_layer").as("lay_old"),
-          greatest(col("lay_layer"), coalesce(col("in_layer"), lit(0L)))
-            .as("lay_new"))
-        .observe(obs, coalesce(sum(
-            when(col("lay_new") =!= col("lay_old"), 1L).otherwise(0L)),
-          lit(0L)).as("n"))
-        .select(col("lay_node"), col("lay_new").as("lay_layer")))
-      settled = LoopObs.metric(obs) {
-        // fallback recomputation of the SAME moved-count (join form)
-        next.join(layer.withColumnRenamed("lay_layer", "old"),
-            Seq("lay_node"))
-          .filter(col("lay_layer") =!= col("old")).count()
-      } == 0L
-      layer = next
+    val (layer, settled) = loop.iterate(layer0, maxIter)(Seq(_)) {
+      (layer, _) =>
+        // the moved-row convergence test is computable INSIDE the
+        // round's plan (old and corrected layer are both present), so
+        // it rides the cut job as an observed metric — one job per
+        // round, no next⋈layer count
+        val (next, moved) = loop.observedCut(layer
+          .join(layer.select(col("lay_node").as("lay_src"),
+              col("lay_layer").as("src_layer"))
+            .join(e, "lay_src")
+            .groupBy("lay_node")
+            .agg((max(col("src_layer")) + 1L).as("in_layer")),
+            Seq("lay_node"), "left")
+          .select(col("lay_node"), col("lay_layer").as("lay_old"),
+            greatest(col("lay_layer"), coalesce(col("in_layer"), lit(0L)))
+              .as("lay_layer")),
+          sum(when(col("lay_layer") =!= col("lay_old"), 1L).otherwise(0L)))
+        (next.select("lay_node", "lay_layer"), moved == 0L)
     }
     e.unpersist(blocking = false)
+    if (!settled) throw new IllegalStateException(
+      s"dagLayers did not converge in $maxIter rounds — cyclic input?")
     layer
     }
   }

@@ -39,7 +39,9 @@ import org.apache.spark.storage.StorageLevel
   *   - lineage is cut EVERY round at the pre-jump labeling: the jump
   *     joins that frame with itself, so without a leaf boundary the
   *     logical plan would DOUBLE per round — exponential driver-side
-  *     analysis cost. The cut is an eager [[Frames.cut]].
+  *     analysis cost. The new labeling is cut too, with the
+  *     changed-row count observed on its job; [[Fixpoint]] frees both
+  *     once the next round's labeling is materialized.
   */
 object ConnectedComponents {
 
@@ -53,10 +55,8 @@ object ConnectedComponents {
     *              their own id.
     * @return one row per distinct node id: (<nodes' id column>,
     *         cluster_id) where cluster_id = min node id in the component.
-    *         The frame references executor-cached state (|V| rows — the
-    *         final round's persist/localCheckpoint, which the truncated
-    *         lineage depends on); it is evicted LRU or on
-    *         `spark.catalog.clearCache()`.
+    *         The frame reads the final round's cut (|V| rows), which
+    *         lives until the driver GCs the frame.
     * @throws IllegalStateException if `maxIter` rounds pass without
     *         convergence (never silently returns a partial labeling)
     */
@@ -65,8 +65,7 @@ object ConnectedComponents {
     labelsWithHandle(edges, nodes, maxIter)._1
 
   /** [[labels]] plus a RELEASE closure that frees the loop's residual
-    * storage (the final round's persisted labeling + its lineage-cut
-    * blocks), for callers that COPY the result elsewhere (e.g. the
+    * storage (the final round's cut), for callers that COPY the result elsewhere (e.g. the
     * streaming monitors' per-batch state fold) and must not hold one
     * |V|-row cache entry per invocation until session end — call it
     * once the copy is materialized, after which the returned frame
@@ -83,93 +82,60 @@ object ConnectedComponents {
       .union(edges.select(col(dstCol).as("cc_id"), col(srcCol).as("cc_nbr")))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // loop-sized shuffles + AQE off for the propagation rounds
-    // (LoopTuning): the count materializes the symmetrized edge cache
-    // UNDER SESSION CONF first (candidate generation above it can be
-    // the heaviest subplan in the engine and keeps AQE), then the
-    // rounds run at a width matched to |E| instead of the session's
+    // the count materializes the symmetrized edge cache UNDER SESSION
+    // CONF first (candidate generation above it can be the heaviest
+    // subplan in the engine and keeps AQE), then the rounds run under
+    // the loop conf (Fixpoint) at a width matched to |E|
     val edgeRows = sym.count()
-    LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
-    // `handle` is always the EXACT Dataset object that was persisted:
-    // CacheManager's cascade=false uncache matches the whole plan by
-    // sameResult, so unpersisting a select() WRAPPER of the cached
-    // frame is a silent no-op — one 64-node-chain labels() call leaked
-    // 14 RDD caches under the old select-then-unpersist form
-    // (StreamingClustersSpec's no-cache-leak test pins the fix).
-    var handle = nodes.select(col(idCol).as("cc_id")).distinct()
-      .withColumn("cc_label", col("cc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labeled = handle
-    // the previous round's lineage-cut frame: its blocks back nothing
-    // once the CURRENT round's persisted labeling is materialized (the
-    // ContextCleaner would free them eventually, but a loop must not
-    // lease storage memory to driver-GC timing)
-    var prevCut: Option[DataFrame] = None
-    var round = 0
-    var converged = false
-    while (!converged && round < maxIter) {
-      round += 1
-      // 1. neighbour step: cc_mid(v) = min(label(v), min of neighbours'
-      //    labels) — advances one hop per round
-      val nbrLabels = labeled
-        .select(col("cc_id").as("cc_nbr"), col("cc_label").as("cc_nbr_label"))
-      val nbrMin = sym.join(nbrLabels, "cc_nbr")
-        .groupBy("cc_id")
-        .agg(min(col("cc_nbr_label")).as("cc_nbr_min"))
-      // eager checkpoint cut, not persist: the pointer jump below joins
-      // cand with ITSELF, so a plain persist doubles the logical plan
-      // every round — exponential tree growth that stalls the DRIVER in
-      // plan analysis/rendering long before any data moves. Cutting
-      // lineage to a leaf here makes every round's plan constant-size
-      // (|V| rows per round, freed by the ContextCleaner as references
-      // drop).
-      val cand = Frames.cut(labeled.join(nbrMin, Seq("cc_id"), "left")
-        .select(col("cc_id"), col("cc_label").as("cc_old"),
-          least(col("cc_label"), coalesce(col("cc_nbr_min"), col("cc_label")))
-            .as("cc_mid")))
-      // 2. pointer jump: label(v) ← min(cc_mid(v), cc_mid(cc_mid(v))).
-      //    Every label IS a node id of the same component, so looking the
-      //    label up in the labeling doubles the distance already covered
-      //    — rounds drop from O(diameter) to O(log diameter), which is
-      //    what makes chain-shaped duplicate clusters (common after
-      //    band-thresholding) cheap. One extra keyed join per round.
-      val jump = cand
-        .select(col("cc_id").as("cc_jump_key"), col("cc_mid").as("cc_jump_label"))
-      val stepped = cand
-        .join(jump.withColumnRenamed("cc_jump_key", "cc_mid"), Seq("cc_mid"), "left")
-        .select(col("cc_id"),
-          least(col("cc_mid"), coalesce(col("cc_jump_label"), col("cc_mid")))
-            .as("cc_label"),
-          (least(col("cc_mid"), coalesce(col("cc_jump_label"), col("cc_mid")))
-            < col("cc_old")).as("cc_changed"))
-      val next = stepped.persist(StorageLevel.MEMORY_AND_DISK)
-      converged = next.filter(col("cc_changed")).count() == 0L
-      // the count above materialized next's cache from THIS round's cut
-      // frame, so the previous round's cache and cut blocks are dead
-      handle.unpersist(blocking = false)
-      prevCut.foreach(Frames.freeCheckpoint)
-      prevCut = Some(cand)
-      handle = next
-      labeled = next.select(col("cc_id"), col("cc_label"))
+    val loop = new Fixpoint(edges.sparkSession)
+    val out = loop.run(edgeRows) {
+      val init = nodes.select(col(idCol).as("cc_id")).distinct()
+        .withColumn("cc_label", col("cc_id"))
+      val (labeled, converged) = loop.iterate(init, maxIter)(Seq(_)) {
+        (labeled, _) =>
+          // 1. neighbour step: cc_mid(v) = min(label(v), min of
+          //    neighbours' labels) — advances one hop per round
+          val nbrLabels = labeled
+            .select(col("cc_id").as("cc_nbr"), col("cc_label").as("cc_nbr_label"))
+          val nbrMin = sym.join(nbrLabels, "cc_nbr")
+            .groupBy("cc_id")
+            .agg(min(col("cc_nbr_label")).as("cc_nbr_min"))
+          // eager cut: the pointer jump below joins cand with ITSELF,
+          // so without a leaf boundary the logical plan doubles every
+          // round — exponential tree growth that stalls the DRIVER in
+          // plan analysis long before any data moves
+          val cand = loop.cut(labeled.join(nbrMin, Seq("cc_id"), "left")
+            .select(col("cc_id"), col("cc_label").as("cc_old"),
+              least(col("cc_label"), coalesce(col("cc_nbr_min"), col("cc_label")))
+                .as("cc_mid")))
+          // 2. pointer jump: label(v) ← min(cc_mid(v), cc_mid(cc_mid(v))).
+          //    Every label IS a node id of the same component, so looking
+          //    the label up in the labeling doubles the distance already
+          //    covered — rounds drop from O(diameter) to O(log diameter),
+          //    which is what makes chain-shaped duplicate clusters
+          //    (common after band-thresholding) cheap. One extra keyed
+          //    join per round.
+          val jump = cand
+            .select(col("cc_id").as("cc_jump_key"), col("cc_mid").as("cc_jump_label"))
+          val label =
+            least(col("cc_mid"), coalesce(col("cc_jump_label"), col("cc_mid")))
+          // the changed-row count rides the cut job of the new labeling
+          val (next, changed) = loop.observedCut(cand
+            .join(jump.withColumnRenamed("cc_jump_key", "cc_mid"), Seq("cc_mid"), "left")
+            .select(col("cc_id"), label.as("cc_label"),
+              (label < col("cc_old")).as("cc_changed")),
+            sum(col("cc_changed").cast("long")))
+          (next.select(col("cc_id"), col("cc_label")), changed == 0L)
+      }
+      sym.unpersist(blocking = false)
+      if (!converged) throw new IllegalStateException(
+        s"connected components did not converge in $maxIter rounds " +
+          "(graph diameter exceeds maxIter — raise it)")
+      labeled.select(col("cc_id").as(idCol), col("cc_label").as("cluster_id"))
     }
-    sym.unpersist(blocking = false)
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in $maxIter rounds " +
-        "(graph diameter exceeds maxIter — raise it)")
-    // the final round's cut frame stays while the result is live (it
-    // is the persisted result's recompute lineage); the release
-    // closure frees BOTH residuals once the caller has copied the
-    // result out (StreamingClustersSpec's bounded-storage gate
-    // measured +1 leaked checkpoint per batch without this)
-    val finalHandle = handle
-    val finalCut = prevCut
-    val release = () => {
-      finalHandle.unpersist(blocking = false)
-      finalCut.foreach(Frames.freeCheckpoint)
-    }
-    (labeled.select(col("cc_id").as(idCol), col("cc_label").as("cluster_id")),
-      release)
-    }
+    // the final round's cut backs the result until the caller has
+    // copied it out (StreamingClustersSpec's bounded-storage gate)
+    (out, () => Frames.freeCheckpoint(out))
   }
 
   /** Duplicate clusters over a candidate-pair frame: every document

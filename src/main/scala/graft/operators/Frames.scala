@@ -20,13 +20,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * A local cut backs the returned frame with a cached RDD that is NOT
   * registered in the CacheManager, so `Dataset.unpersist` cannot free
   * it; the ContextCleaner frees it only when the driver GCs the last
-  * reference. Fixed-point loops and long-running streaming monitors
-  * that cut lineage every round/batch must not lease storage memory to
-  * GC timing — they free the previous round's blocks explicitly the
-  * moment the next round's frame is materialized. The same call
-  * deletes a superseded reliable cut's checkpoint-dir files, so a long
-  * session with a checkpoint dir does not grow it by one dir per loop
-  * round.
+  * reference. A reliable cut's checkpoint-dir files are not deleted at
+  * all by default (`spark.cleaner.referenceTracking.cleanCheckpoints`
+  * is off). So code that cuts every round or batch must not lease
+  * storage to GC timing: it frees each superseded cut with
+  * [[freeCheckpoint]] the moment its successor is materialized. The
+  * fixpoint loops do this through [[Fixpoint]], which frees every cut
+  * no live state frame reads after each round and every cut the
+  * result does not read at exit; the streaming monitors free their
+  * previous state per batch.
   */
 private[graft] object Frames {
 

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * normalize; hub = Σ over out-edges of the NEW authority, then L1
   * normalize. Each half is one join of the key-partitioned edge copy
   * against the |V|-row score frame plus one keyed sum; the L1 total is
-  * one observed scalar riding the sum's checkpoint job (LoopObs — one
+  * one observed scalar riding the sum's cut job ([[Fixpoint]] — one
   * 8-byte driver read per half-step, not a collect of data rows), then
   * applied as a literal in the normalization. Pass a persisted edge
   * frame — it is consumed 2·iterations times.
@@ -74,7 +74,7 @@ object Hits {
     // 2 longs × |V| — so the "checkpoint forces every column" penalty
     // behind the r11 14.8 s rejection does not apply (that A/B cut the
     // FINAL wide joined frame, not the narrow per-half-step scores),
-    // and the per-cut job latency is bounded by LoopTuning (loop-sized
+    // and the per-cut job latency is bounded by the loop conf (loop-sized
     // shuffles, AQE off, codegen off below the row threshold).
     // Measured q284 (min-of-3, quiet box): 6.7 s lazy → 3.0 s eager,
     // identical integers (oracle-regated at sf0.01 + sf0.1).
@@ -84,7 +84,8 @@ object Hits {
     // the count sizes the loop conf AND materializes the caller's edge
     // cache (knnShared-style frames are persisted upstream)
     val edgeRows = e.count()
-    LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
+    val loop = new Fixpoint(edges.sparkSession)
+    loop.run(edgeRows) {
     // r15 half-step shape (guide §1 profile: 30 jobs / 1103 tasks / 36.7 s
     // summed task time for 8.25 s of CPU at sf0.1 — per-half-step the raw
     // sum subtree executed TWICE because its L1 total hung off a broadcast,
@@ -98,52 +99,45 @@ object Hits {
     //     partitioning), so per-half-step plans exchange only the |V|-row
     //     score frame and scan loop-width partitions;
     //   - each half-step cuts its raw sum ONCE with the L1 total riding
-    //     the cut job as an observed metric (LoopObs), and normalizes
-    //     against the total as a DRIVER LITERAL — no crossJoin(broadcast)
-    //     and no second execution of the sum subtree.
+    //     the cut job as an observed metric, and normalizes against the
+    //     total as a DRIVER LITERAL — no crossJoin(broadcast) and no
+    //     second execution of the sum subtree.
     // Integer algebra is unchanged: raw·1e9 div tot on exact BIGINTs, a
     // NULL/0 total (edge-free graph, Scale div |V| underflow) normalizes
     // to score 0 exactly as the old coalesce(x div NULL-or-0) did.
-    val obsU = org.apache.spark.sql.Observation("hits_universe")
-    val uni = Frames.cut(nodes.select(col(idCol).as("ht_id")).distinct()
-      .observe(obsU, count(lit(1)).as("n")))
-    val nUniverse = LoopObs.count(obsU, uni)
+    val (uni, nUniverse) = loop.observedCut(
+      nodes.select(col(idCol).as("ht_id")).distinct(), count(lit(1)))
     val eSrc = e.repartition(col("ht_src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val eDst = e.repartition(col("ht_dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def normalized(raw: DataFrame, tot: Option[Long], as: String): DataFrame =
+    def normalized(raw: DataFrame, tot: Long, as: String): DataFrame =
       uni.join(raw, Seq("ht_id"), "left")
-        .select(col("ht_id"), (tot match {
-          case Some(t) if t != 0L =>
+        .select(col("ht_id"), (
+          if (tot != 0L)
             expr(s"coalesce(ht_raw, CAST(0 AS BIGINT)) * $Scale" +
-              s" div CAST($t AS BIGINT)")
-          case _ => lit(0L) // zero-mass iteration: every score is 0
-        }).as(as))
+              s" div CAST($tot AS BIGINT)")
+          else lit(0L) // zero-mass iteration: every score is 0
+        ).as(as))
     def halfStep(scores: DataFrame, joinKey: String, eKeyed: DataFrame,
-        outKey: String, scoreCol: String, tag: String): DataFrame = {
-      val obs = org.apache.spark.sql.Observation(tag)
-      val raw = Frames.cut(eKeyed
+        outKey: String, scoreCol: String): DataFrame = {
+      val (raw, tot) = loop.observedCut(eKeyed
         .join(scores.withColumnRenamed("ht_id", joinKey), joinKey)
         .groupBy(col(outKey).as("ht_id"))
-        .agg(sum(scoreCol).as("ht_raw"))
-        .observe(obs, sum(col("ht_raw")).as("n")))
-      val tot = LoopObs.metricOpt(obs) {
-        Option(raw.agg(sum("ht_raw")).first().get(0))
-          .map(_.asInstanceOf[Long])
-      }
-      Frames.cut(normalized(raw, tot, scoreCol))
+        .agg(sum(scoreCol).as("ht_raw")), sum(col("ht_raw")))
+      loop.cut(normalized(raw, tot, scoreCol))
     }
-    var hub = Frames.cut(uni.select(col("ht_id"),
+    val hub0 = loop.cut(uni.select(col("ht_id"),
       lit(if (nUniverse > 0) Scale / nUniverse else 0L).as("ht_h")))
-    var auth: DataFrame = null
-    for (i <- 1 to iterations) {
-      auth = halfStep(hub.withColumnRenamed("ht_h", "ht_s"), "ht_src",
-        eSrc, "ht_dst", "ht_s", s"hits_a_$i")
+    // state: (hub, auth); round 1 replaces the placeholder auth
+    val ((hub, auth), _) = loop.iterate((hub0, hub0), iterations)(
+        s => Seq(s._1, s._2, uni)) { case ((hub, _), _) =>
+      val auth = halfStep(hub.withColumnRenamed("ht_h", "ht_s"), "ht_src",
+        eSrc, "ht_dst", "ht_s")
         .withColumnRenamed("ht_s", "ht_a")
-      hub = halfStep(auth.withColumnRenamed("ht_a", "ht_s"), "ht_dst",
-        eDst, "ht_src", "ht_s", s"hits_h_$i")
-        .withColumnRenamed("ht_s", "ht_h")
+      (halfStep(auth.withColumnRenamed("ht_a", "ht_s"), "ht_dst",
+        eDst, "ht_src", "ht_s")
+        .withColumnRenamed("ht_s", "ht_h"), auth) -> false
     }
     eSrc.unpersist(blocking = false)
     eDst.unpersist(blocking = false)

@@ -25,11 +25,10 @@ import org.apache.spark.sql.functions._
   * (per-key cost ∝ series length — calendar-bounded in the intended
   * uses, never SF-bounded), merges every OTHER violating boundary of
   * each violating run (disjoint by construction, so all merges in a
-  * round are simultaneously valid poolings), and cuts lineage with a
-  * localCheckpoint — the ConnectedComponents/LabelPropagation loop
-  * discipline. ≥ half of each violating run pools per round, and new
-  * violations only surface where a merge lowered a block mean, so
-  * rounds are O(log series) typical, ≤ series worst case; total work
+  * round are simultaneously valid poolings), and cuts lineage every
+  * round ([[Fixpoint]]). ≥ half of each violating run pools per
+  * round, and new violations only surface where a merge lowered a
+  * block mean, so rounds are O(log series) typical, ≤ series worst case; total work
   * is bounded by the ≤ n−1 merges PAVA can ever do.
   */
 object Isotonic {
@@ -50,20 +49,15 @@ object Isotonic {
       col(yCol).cast("long").as("iso_y"))
     val w = Window.partitionBy("iso_k").orderBy("iso_start")
     val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var blocks0 = Frames.cut(pts.select(col("iso_k"),
+    val loop = new Fixpoint(df.sparkSession)
+    val blocks0 = loop.cut(pts.select(col("iso_k"),
       col("iso_x").as("iso_start"), col("iso_y").as("iso_s"),
       lit(1L).as("iso_c")))
-    // loop-sized shuffles + AQE off for the merge rounds (LoopTuning);
-    // the block table only shrinks from |points|
-    LoopTuning.withLoopConf(df.sparkSession, blocks0.count()) {
-    var blocks = blocks0
-    var round = 0
-    var done = false
-    while (!done) {
-      round += 1
-      if (round > maxRounds)
-        throw new IllegalStateException(
-          s"Isotonic.fit did not converge in $maxRounds rounds")
+    // the merge rounds run under the loop conf (Fixpoint); the block
+    // table only shrinks from |points|
+    loop.run(blocks0.count()) {
+    val (blocks, done) = loop.iterate(blocks0, maxRounds)(Seq(_)) {
+      (blocks, _) =>
       // a boundary violates when the left block's mean exceeds the
       // right's: ps/pc > s/c ⇔ ps·c > s·pc — exact cross-multiplied
       // BIGINT, no division
@@ -84,20 +78,16 @@ object Isotonic {
       val wRun = Window.partitionBy("iso_k", "iso_runid")
         .orderBy("iso_rn")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      // the any-merge convergence test rides the checkpoint job as an
-      // observed metric (LoopObs) — 3 jobs/round → 2
-      val obs = org.apache.spark.sql.Observation(s"iso_round_$round")
-      val sel = Frames.cut(marked
+      // the any-merge convergence test rides the cut job as an
+      // observed metric — 2 jobs per round
+      val (sel, merges) = loop.observedCut(marked
         .withColumn("iso_rstart",
           min(when(col("iso_viol"), col("iso_rn"))).over(wRun))
         .withColumn("iso_merge", col("iso_viol") &&
-          (col("iso_rn") - col("iso_rstart")) % 2 === 0)
-        .observe(obs, coalesce(sum(when(col("iso_merge"), 1L)
-          .otherwise(0L)), lit(0L)).as("n")))
-      if (LoopObs.metric(obs) {
-        sel.filter(col("iso_merge")).limit(1).count()
-      } == 0L) done = true
-      else blocks = Frames.cut(sel
+          (col("iso_rn") - col("iso_rstart")) % 2 === 0),
+        sum(when(col("iso_merge"), 1L).otherwise(0L)))
+      if (merges == 0L) (blocks, true)
+      else (loop.cut(sel
         .withColumn("iso_nmerge",
           coalesce(lead("iso_merge", 1).over(w), lit(false)))
         .withColumn("iso_ns", lead("iso_s", 1).over(w))
@@ -107,8 +97,10 @@ object Isotonic {
           when(col("iso_nmerge"), col("iso_s") + col("iso_ns"))
             .otherwise(col("iso_s")).as("iso_s"),
           when(col("iso_nmerge"), col("iso_c") + col("iso_nc"))
-            .otherwise(col("iso_c")).as("iso_c")))
+            .otherwise(col("iso_c")).as("iso_c"))), false)
     }
+    if (!done) throw new IllegalStateException(
+      s"Isotonic.fit did not converge in $maxRounds rounds")
     // expand blocks back to points: equi-join on the key, range filter
     // inside the block span (blocks per key ≤ points per key)
     val spans = blocks

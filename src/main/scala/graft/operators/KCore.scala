@@ -56,31 +56,23 @@ object KCore {
   def coreEdges(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     require(k >= 1, "k must be at least 1")
     val Array(srcCol, dstCol, _*) = edges.columns
-    var cur = Frames.cut(
+    val loop = new Fixpoint(edges.sparkSession)
+    val edges0 = loop.cut(
       edges.select(col(srcCol).as("kc_a"), col(dstCol).as("kc_b")))
-    var n = cur.count()
-    // loop-sized shuffles + AQE off for the peel rounds (LoopTuning,
-    // r14 — this was the one fixpoint operator still running its
-    // |E|-row rounds at session width with AQE barriers); the survivor
-    // count rides each round's checkpoint job as an observed metric
-    // (LoopObs) instead of a second count() action — 2 jobs → 1/round
-    LoopTuning.withLoopConf(edges.sparkSession, n) {
-    var round = 0
-    var converged = false
-    while (!converged && round < maxIter) {
-      round += 1
+    // the |E|-row peel rounds run under the loop conf (Fixpoint); the
+    // survivor count rides each round's cut job as an observed metric
+    // instead of a second count() action — one job per round
+    val n0 = edges0.count()
+    loop.run(n0) {
+    val ((cur, _), converged) = loop.iterate((edges0, n0), maxIter)(
+        s => Seq(s._1)) { case ((cur, n), _) =>
       val good = cur.groupBy("kc_a").agg(count(lit(1)).as("kc_d"))
         .filter(col("kc_d") >= k).select("kc_a")
-      val obs = org.apache.spark.sql.Observation(s"kcore_round_$round")
-      val nxt = Frames.cut(cur
+      val (nxt, m) = loop.observedCut(cur
         .join(good, Seq("kc_a"), "left_semi")
         .join(good.withColumnRenamed("kc_a", "kc_b"), Seq("kc_b"), "left_semi")
-        .select("kc_a", "kc_b")
-        .observe(obs, count(lit(1)).as("n")))
-      val m = LoopObs.count(obs, nxt)
-      converged = m == n
-      cur = nxt
-      n = m
+        .select("kc_a", "kc_b"), count(lit(1)))
+      ((nxt, m), m == n)
     }
     if (!converged) throw new IllegalStateException(
       s"k-core peeling did not converge in $maxIter rounds " +

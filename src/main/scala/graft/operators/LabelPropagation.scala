@@ -44,15 +44,12 @@ object LabelPropagation {
       maxIter: Int = 20): DataFrame = {
     val idCol = nodes.columns.head
     val Array(srcCol, dstCol, _*) = edges.columns
-    // loop-sized shuffles + AQE off for the vote rounds (LoopTuning,
-    // r15 — LPA was the one observe()-based loop still running its
-    // rounds under session width with AQE's per-round re-planning
-    // barriers, ADVICE r14; AQE off is also the configuration whose
-    // observe-on-checkpoint delivery DurableCheckpointParitySpec pins).
-    // 2·|edges| bounds the symmetric edge count and reads off the
+    // the vote rounds run under the loop conf (Fixpoint), sized by
+    // 2·|edges|: it bounds the symmetric edge count and reads off the
     // caller's upstream cache without materializing sym twice.
     val edgeRows = 2L * edges.count()
-    LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
+    val loop = new Fixpoint(edges.sparkSession)
+    loop.run(edgeRows) {
     val sym = edges
       .select(col(srcCol).as("lp_id"), col(dstCol).as("lp_nbr"))
       .union(edges.select(col(dstCol).as("lp_id"), col(srcCol).as("lp_nbr")))
@@ -66,14 +63,14 @@ object LabelPropagation {
       .dropDuplicates(Seq("lp_id", "lp_nbr"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var labeled = Frames.cut(nodes.select(col(idCol).cast("long").as("lp_id"))
+    val init = loop.cut(nodes.select(col(idCol).cast("long").as("lp_id"))
       .distinct()
       .withColumn("lp_label", col("lp_id")))
-    var prev: DataFrame = null // round N−2 labeling, for 2-cycle detection
-    var round = 0
-    var settled = false
-    while (!settled && round < maxIter) {
-      round += 1
+    val damped = least(col("lp_label"), col("lp_prev_label")).as("lp_label")
+    // state: the round N−1 labeling and the round N−2 one, for 2-cycle
+    // detection
+    val ((labeled, _), _) = loop.iterate((init, Option.empty[DataFrame]),
+        maxIter)(s => s._1 +: s._2.toSeq) { case ((labeled, prev), round) =>
       val nbr = labeled.select(col("lp_id").as("lp_nbr"),
         col("lp_label").as("lp_nbr_label"))
       // most frequent neighbour label, ties to the smallest label:
@@ -86,55 +83,39 @@ object LabelPropagation {
         .agg(max_by(col("lp_nbr_label"),
           struct(col("lp_n"), (-col("lp_nbr_label")).as("lp_neg")))
           .as("lp_vote"))
-      // the changed-vs-N−1 count rides the checkpoint job as an
-      // observed metric (LoopObs) — convergence detection is now FREE
-      // every round (r14; it previously ran as a separate aggregate
-      // action every 4th round, so a settled graph spun up to 3 extra
-      // vote rounds). The output law — least(label_N, label_N−1) —
-      // makes when-we-stop cost-only: stable labels repeat, so
-      // stopping the round convergence happens (or any round later)
-      // yields identical communities.
-      val obs = org.apache.spark.sql.Observation(s"lpa_round_$round")
-      val next = Frames.cut(labeled.join(voted, Seq("lp_id"), "left")
-        .select(col("lp_id"),
-          coalesce(col("lp_vote"), col("lp_label")).as("lp_label"),
-          col("lp_label").as("lp_prev_label"))
-        .observe(obs, coalesce(sum(when(
-            col("lp_label") =!= col("lp_prev_label"), 1L).otherwise(0L)),
-          lit(0L)).as("n")))
-      val changed = LoopObs.metric(obs) {
-        next.agg(coalesce(sum(when(
-            col("lp_label") =!= col("lp_prev_label"), 1L).otherwise(0L)),
-          lit(0L))).first().getLong(0)
-      }
-      if (changed == 0L) settled = true
+      // the changed-vs-N−1 count rides the cut job as an observed
+      // metric, so convergence is tested every round at no extra
+      // action. The output law — least(label_N, label_N−1) — makes
+      // when-we-stop cost-only: stable labels repeat, so stopping the
+      // round convergence happens (or any round later) yields
+      // identical communities.
+      val (next, changed) = loop.observedCut(
+        labeled.join(voted, Seq("lp_id"), "left")
+          .select(col("lp_id"),
+            coalesce(col("lp_vote"), col("lp_label")).as("lp_label"),
+            col("lp_label").as("lp_prev_label")),
+        sum(when(col("lp_label") =!= col("lp_prev_label"), 1L).otherwise(0L)))
       // 2-cycle detection (round N equals round N−2 everywhere) still
       // needs the N−2 join, so it keeps the every-4th-round cadence —
       // phase-independent by the same output law.
-      else if (round % 4 == 0 && round < maxIter && prev != null) {
-        val twoAgo = next.join(prev.select(col("lp_id"),
-            col("lp_label").as("lp_label_2ago")), "lp_id")
+      def twoCycle: Boolean = prev.exists { p =>
+        next.join(p.select(col("lp_id"), col("lp_label").as("lp_label_2ago")),
+            "lp_id")
           .agg(coalesce(sum(when(
             col("lp_label") =!= col("lp_label_2ago"), 1L)
             .otherwise(0L)), lit(0L)))
-          .first().getLong(0)
-        if (twoAgo == 0L) {
-          // deterministic break keeps the smaller alternating label
-          labeled = Frames.cut(next.select(col("lp_id"),
-            least(col("lp_label"), col("lp_prev_label")).as("lp_label")))
-          settled = true
-        }
+          .first().getLong(0) == 0L
       }
-      if (!settled) {
-        prev = labeled.select("lp_id", "lp_label")
-        labeled =
-          if (round < maxIter) next.select("lp_id", "lp_label")
-          else // horizon exhausted: same damping as the 2-cycle break,
-            // so the output law is least(label_H, label_{H−1}) in
-            // every stop mode (see scaladoc)
-            next.select(col("lp_id"),
-              least(col("lp_label"), col("lp_prev_label")).as("lp_label"))
-      }
+      if (changed == 0L) ((labeled, prev), true)
+      else if (round % 4 == 0 && round < maxIter && twoCycle)
+        // deterministic break keeps the smaller alternating label
+        ((loop.cut(next.select(col("lp_id"), damped)), None), true)
+      else if (round < maxIter)
+        ((next.select("lp_id", "lp_label"), Some(labeled)), false)
+      else // horizon exhausted: same damping as the 2-cycle break, so
+        // the output law is least(label_H, label_{H−1}) in every stop
+        // mode (see scaladoc)
+        ((next.select(col("lp_id"), damped), Some(labeled)), false)
     }
     sym.unpersist(blocking = false)
     labeled.select(col("lp_id").as(idCol), col("lp_label").as("community_id"))

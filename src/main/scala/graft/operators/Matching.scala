@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Greedy MAXIMAL MATCHING over an undirected weighted edge list —
   * round-synchronous locally-dominant-edge selection (Preis): the
@@ -61,16 +60,17 @@ object Matching {
   def matching(edges: DataFrame, maxRounds: Int = 0): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0 (0 = derive from data)")
     val Array(uCol, vCol, wCol, _*) = edges.columns
-    var alive = Frames.cut(edges.select(
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val loop = new Fixpoint(spark)
+    val alive0 = loop.cut(edges.select(
         least(col(uCol), col(vCol)).cast("long").as("m_u"),
         greatest(col(uCol), col(vCol)).cast("long").as("m_v"),
         col(wCol).cast("long").as("m_w"))
       .filter(col("m_u") =!= col("m_v"))
       .distinct())
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // loop-sized shuffles + AQE off for the dominance rounds (LoopTuning)
-    val edgeRows = alive.count()
+    // the count sizes the dominance rounds' loop conf (Fixpoint)
+    val edgeRows = alive0.count()
     // derived cap: each round saturates ≥ 2 vertices (the global
     // (w,u,v)-minimum alive edge is dominant at both endpoints), so
     // ⌈V/2⌉ + slack bounds the rounds — one cheap distinct count over
@@ -78,47 +78,44 @@ object Matching {
     val cap =
       if (maxRounds > 0) maxRounds
       else {
-        val v = alive.select(col("m_u").as("n"))
-          .union(alive.select(col("m_v").as("n"))).distinct().count()
+        val v = alive0.select(col("m_u").as("n"))
+          .union(alive0.select(col("m_v").as("n"))).distinct().count()
         math.min(v / 2L + 4L, Int.MaxValue.toLong).toInt
       }
-    LoopTuning.withLoopConf(spark, edgeRows) {
-    // the matched-pair accumulator is APPEND-ONLY: keep the per-round
-    // cut frames and union once at the end instead of re-checkpointing
-    // the growing accumulator every round; the liveness test rides the
-    // alive-cut job as an observed metric (LoopObs) — 4 jobs/round → 2
-    // (r14 optimization; chosen rounds are disjoint so the final union
-    // is exact)
-    var accParts = List(spark.emptyDataset[(Long, Long, Long)]
-      .toDF("m_u", "m_v", "m_w"))
-    var round = 0
-    var done = edgeRows == 0L
-    while (!done && round < cap) {
-      round += 1
-      val cand = struct(col("m_w"), col("m_u"), col("m_v"))
-      // Per-endpoint minimum incident edge under (w, u, v).
-      val best = alive.select(col("m_u").as("node"), cand.as("c"))
-        .union(alive.select(col("m_v").as("node"), cand.as("c")))
-        .groupBy("node").agg(min(col("c")).as("b"))
-      // Dominant = best at BOTH endpoints.
-      val chosen = Frames.cut(alive
-        .join(best.select(col("node").as("m_u"), col("b").as("bu")),
-          "m_u")
-        .join(best.select(col("node").as("m_v"), col("b").as("bv")),
-          "m_v")
-        .filter(cand === col("bu") && cand === col("bv"))
-        .select("m_u", "m_v", "m_w"))
-      accParts ::= chosen
-      val sat = chosen.select(col("m_u").as("node"))
-        .union(chosen.select(col("m_v").as("node")))
-      val obs = org.apache.spark.sql.Observation(s"match_round_$round")
-      alive = Frames.cut(alive
-        .join(sat.select(col("node").as("m_u")), Seq("m_u"), "left_anti")
-        .join(sat.select(col("node").as("m_v")), Seq("m_v"), "left_anti")
-        .select("m_u", "m_v", "m_w")
-        .observe(obs, count(lit(1)).as("n")))
-      done = LoopObs.count(obs, alive) == 0L
-    }
+    loop.run(edgeRows) {
+    // state: (alive edges, matched parts). The matched-pair accumulator
+    // is APPEND-ONLY: keep the per-round cut frames and union once at
+    // the end instead of re-cutting the growing accumulator every
+    // round (chosen rounds are disjoint, so the final union is exact);
+    // the liveness test rides the alive-cut job as an observed metric —
+    // 2 jobs per round
+    val init = (alive0, List(spark.emptyDataset[(Long, Long, Long)]
+      .toDF("m_u", "m_v", "m_w")))
+    val ((_, accParts), done) =
+      if (edgeRows == 0L) (init, true)
+      else loop.iterate(init, cap)(s => s._1 :: s._2) {
+        case ((alive, accParts), _) =>
+          val cand = struct(col("m_w"), col("m_u"), col("m_v"))
+          // Per-endpoint minimum incident edge under (w, u, v).
+          val best = alive.select(col("m_u").as("node"), cand.as("c"))
+            .union(alive.select(col("m_v").as("node"), cand.as("c")))
+            .groupBy("node").agg(min(col("c")).as("b"))
+          // Dominant = best at BOTH endpoints.
+          val chosen = loop.cut(alive
+            .join(best.select(col("node").as("m_u"), col("b").as("bu")),
+              "m_u")
+            .join(best.select(col("node").as("m_v"), col("b").as("bv")),
+              "m_v")
+            .filter(cand === col("bu") && cand === col("bv"))
+            .select("m_u", "m_v", "m_w"))
+          val sat = chosen.select(col("m_u").as("node"))
+            .union(chosen.select(col("m_v").as("node")))
+          val (next, n) = loop.observedCut(alive
+            .join(sat.select(col("node").as("m_u")), Seq("m_u"), "left_anti")
+            .join(sat.select(col("node").as("m_v")), Seq("m_v"), "left_anti")
+            .select("m_u", "m_v", "m_w"), count(lit(1)))
+          ((next, chosen :: accParts), n == 0L)
+      }
     // Cap exhausted with edges still alive: every alive edge has two
     // free endpoints, so the matching below is not MAXIMAL — refuse
     // rather than silently returning a partial matching.

@@ -55,24 +55,26 @@ object Mmr {
     // exchange-free off these two checkpointed layouts instead of
     // re-shuffling 4 times per round (at bench SF the rounds are pure
     // fixed cost, and exchanges are most of it)
-    val cand = Frames.cut(candidates.select("q_id", "vec_id", "rel_fp")
+    val loop = new Fixpoint(candidates.sparkSession)
+    val cand = loop.cut(candidates.select("q_id", "vec_id", "rel_fp")
       .repartition(col("q_id")))
-    val pairs = Frames.cut(pairSims.select("q_id", "a", "b", "sim_fp")
+    val pairs = loop.cut(pairSims.select("q_id", "a", "b", "sim_fp")
       .repartition(col("q_id")))
-    // loop-sized width + AQE off for the k per-round checkpoints
-    // (LoopTuning): the q_id layouts above were built OUTSIDE the
-    // loop conf, but ClusteredDistribution on q_id is satisfied at any
-    // width, so the rounds stay exchange-free either way
-    LoopTuning.withLoopConf(candidates.sparkSession, cand.count()) {
+    // the k rounds run under the loop conf (Fixpoint): the q_id layouts
+    // above were built OUTSIDE it, but ClusteredDistribution on q_id is
+    // satisfied at any width, so the rounds stay exchange-free either
+    // way
+    loop.run(cand.count()) {
     // the selection set is APPEND-ONLY: cut each round's pick (one
     // |groups|-row leaf) and keep `selected` as the union of the cut
     // leaves, instead of re-checkpointing the whole growing set every
     // round — per-round writes drop from O(step·groups) to O(groups)
     // rows (the Bfs r14 discipline); same one action per round
-    var parts = List(cand.limit(0)
+    val init = List(cand.limit(0)
       .select(col("q_id"), col("vec_id"), lit(0L).as("step"),
         lit(0L).as("score_fp")))
-    for (step <- 1 to k) {
+    val (parts, _) = loop.iterate(init, k)(cand :: pairs :: _) {
+      (parts, step) =>
       val selected = parts.reduce(_ union _)
       // selected is ≤ step·|groups| rows — broadcast both probes, so a
       // round's only clustering requirements (the keyed max and the
@@ -94,7 +96,7 @@ object Mmr {
         .filter(col("rn") === 1)
         .select(col("q_id"), col("vec_id"), lit(step.toLong).as("step"),
           col("score_fp"))
-      parts ::= Frames.cut(pick)
+      (loop.cut(pick) :: parts, false)
     }
     parts.reduce(_ union _)
     }

@@ -80,9 +80,9 @@ object Mst {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val spark = edges.sparkSession
     import spark.implicits._
-    // loop-sized shuffles + AQE off (LoopTuning): the Boruvka rounds
-    // and pointer jumps are scheduler-latency-bound on gated slices;
-    // the count also materializes the edge cache before the loop
+    // the Boruvka rounds and pointer jumps are scheduler-latency-bound
+    // on gated slices, so they run under the loop conf (Fixpoint); the
+    // count also materializes the edge cache before the loop
     val edgeRows = e.count()
     // derived cap: components at least halve per Borůvka round and
     // V ≤ 2E, so ⌈log₂ 2E⌉ + slack bounds convergence without a
@@ -91,8 +91,9 @@ object Mst {
       if (maxRounds > 0) maxRounds
       else 64 - java.lang.Long.numberOfLeadingZeros(
         math.max(2L, 2L * edgeRows) - 1L) + 4
-    LoopTuning.withLoopConf(spark, edgeRows) {
-    var comp = Frames.cut(
+    val loop = new Fixpoint(spark)
+    loop.run(edgeRows) {
+    val comp0 = loop.cut(
       e.select(col("mst_u").as("node"))
         .union(e.select(col("mst_v").as("node")))
         .distinct()
@@ -101,16 +102,14 @@ object Mst {
     // per-round picks are cut individually and unioned once at the end
     // (each cut job writes only the round's edges, not the growing
     // accumulator); (b) the old separate `ce.isEmpty` probe job is gone
-    // — the pick row count rides the accumulator's checkpoint job as an
-    // observed metric (LoopObs), and pick is empty ⟺ ce is empty
-    // (pick is a groupBy over ce); (c) each double-jump's convergence
-    // test is folded into the jump's checkpoint job the same way.
-    var accParts = List(spark.emptyDataset[(Long, Long, Long)]
-      .toDF("mst_w", "mst_u", "mst_v"))
-    var round = 0
-    var done = false
-    while (!done && round < cap) {
-      round += 1
+    // — the picked-edge count rides the accumulator's cut job as an
+    // observed metric, and it is 0 ⟺ ce is empty (pick is a groupBy
+    // over ce); (c) each double-jump's convergence test is folded into
+    // the jump's cut job the same way.
+    val init = (comp0, List(spark.emptyDataset[(Long, Long, Long)]
+      .toDF("mst_w", "mst_u", "mst_v")))
+    val ((comp, accParts), done) = loop.iterate(init, cap)(
+        s => s._1 :: s._2) { case ((comp, accParts), _) =>
       // Edges whose endpoints live in different components, labeled
       // with both component ids (two node-keyed joins).
       val ce = e
@@ -133,59 +132,48 @@ object Mst {
           col("pick.mst_u").as("mst_u"), col("pick.mst_v").as("mst_v"),
           col("pick.ct").as("ct"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val obs = org.apache.spark.sql.Observation(s"mst_round_$round")
-      val roundEdges = Frames.cut(pick
-        .observe(obs, count(lit(1)).as("n"))
-        .select("mst_w", "mst_u", "mst_v").distinct())
-      if (LoopObs.count(obs, pick) == 0L) {
-        done = true
-        pick.unpersist(blocking = false)
-      } else {
-        accParts ::= roundEdges
-        // Contract: root mutual pairs at the smaller component id,
-        // then pointer-jump the selection forest to depth 1. Each
-        // DOUBLE jump is checkpointed and convergence-checked ONCE
-        // (j² == j¹ ⟺ fixed point — depth is monotone, no
-        // oscillation), halving the per-jump action count; leaving
-        // the jumps lazy instead re-evaluates the whole chain per
-        // action (A/B: 124 s vs 5.6 s for q316 at sf0.1).
-        val sel = pick.select(col("cf").as("c"), col("ct").as("pc"))
-        def jump(p: DataFrame): DataFrame = p.as("x")
-          .join(p.select(col("c").as("par"), col("par").as("gpar")),
-            "par")
-          .select(col("c"), col("gpar").as("par"))
-        var par = Frames.cut(sel.as("a")
-          .join(sel.select(col("c").as("pc"), col("pc").as("ppc")), "pc")
-          .select(col("c"),
-            when(col("ppc") === col("c") && col("c") < col("pc"),
-              col("c")).otherwise(col("pc")).as("par")))
-        var jumping = true
-        var jumpN = 0
-        while (jumping) {
-          jumpN += 1
-          val jObs = org.apache.spark.sql.Observation(
-            s"mst_jump_${round}_$jumpN")
-          val j1 = jump(par)
-          // the convergence compare (j² vs j¹... conservatively vs the
-          // PRE-jump table, as before) rides the checkpoint job
-          val j2 = Frames.cut(jump(j1)
-            .join(par.select(col("c"), col("par").as("jold")), "c")
-            .observe(jObs, coalesce(sum(
-                when(col("par") =!= col("jold"), 1L).otherwise(0L)),
-              lit(0L)).as("n"))
-            .select(col("c"), col("par")))
-          jumping = LoopObs.metric(jObs) {
-            j2.as("n").join(par.withColumnRenamed("par", "old"), "c")
-              .filter(col("par") =!= col("old")).count()
-          } > 0L
-          par = j2
+      val (roundEdges, picked) = loop.observedCut(
+        pick.select("mst_w", "mst_u", "mst_v").distinct(), count(lit(1)))
+      val next =
+        if (picked == 0L) None
+        else {
+          // Contract: root mutual pairs at the smaller component id,
+          // then pointer-jump the selection forest to depth 1. Each
+          // DOUBLE jump is cut and convergence-checked ONCE (j² == j¹
+          // ⟺ fixed point — depth is monotone, no oscillation),
+          // halving the per-jump action count; leaving the jumps lazy
+          // instead re-evaluates the whole chain per action (A/B:
+          // 124 s vs 5.6 s for q316 at sf0.1).
+          val sel = pick.select(col("cf").as("c"), col("ct").as("pc"))
+          def jump(p: DataFrame): DataFrame = p.as("x")
+            .join(p.select(col("c").as("par"), col("par").as("gpar")),
+              "par")
+            .select(col("c"), col("gpar").as("par"))
+          var par = loop.cut(sel.as("a")
+            .join(sel.select(col("c").as("pc"), col("pc").as("ppc")), "pc")
+            .select(col("c"),
+              when(col("ppc") === col("c") && col("c") < col("pc"),
+                col("c")).otherwise(col("pc")).as("par")))
+          var jumping = true
+          while (jumping) {
+            // the convergence compare (conservatively against the
+            // PRE-jump table) rides the cut job
+            val (j2, moved) = loop.observedCut(jump(jump(par))
+              .join(par.select(col("c"), col("par").as("jold")), "c"),
+              sum(when(col("par") =!= col("jold"), 1L).otherwise(0L)))
+            jumping = moved > 0L
+            par = j2.select(col("c"), col("par"))
+          }
+          Some(loop.cut(comp
+            .join(par.select(col("c").as("comp"), col("par")).distinct(),
+              Seq("comp"), "left")
+            .select(col("node"),
+              coalesce(col("par"), col("comp")).as("comp"))))
         }
-        comp = Frames.cut(comp
-          .join(par.select(col("c").as("comp"), col("par")).distinct(),
-            Seq("comp"), "left")
-          .select(col("node"),
-            coalesce(col("par"), col("comp")).as("comp")))
-        pick.unpersist(blocking = false)
+      pick.unpersist(blocking = false)
+      next match {
+        case Some(c) => ((c, roundEdges :: accParts), false)
+        case None => ((comp, accParts), true)
       }
     }
     if (!done) {

@@ -69,19 +69,19 @@ object Sssp {
     val e = edges.select(col(srcCol).as("sp_node"),
         col(dstCol).as("sp_next"), col(wCol).cast("long").as("sp_w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // loop-sized shuffles + AQE off for the relaxation rounds
-    // (LoopTuning); the count also materializes the edge cache
+    // the count sizes the relaxation rounds' loop conf (Fixpoint) and
+    // materializes the edge cache
     val edgeRows = e.count()
-    LoopTuning.withLoopConf(edges.sparkSession, edgeRows) {
-    var dist = Frames.cut(seeds
+    val loop = new Fixpoint(edges.sparkSession)
+    loop.run(edgeRows) {
+    val seed = loop.cut(seeds
       .select(col(seeds.columns.head).as("sp_seed")).distinct()
       .select(col("sp_seed"), col("sp_seed").as("sp_node"),
         lit(0L).as("sp_cost")))
-    var frontier = dist
-    var round = 0
-    var settled = false
-    while (!settled && round < maxRounds) {
-      round += 1
+    // state: (dist, frontier) — the running table and last round's
+    // improvements
+    val ((dist, _), _) = loop.iterate((seed, seed), maxRounds)(
+        s => Seq(s._1, s._2)) { case ((dist, frontier), _) =>
       // Tentative costs through the frontier, pre-combined per key so
       // the comparison join sees one row per (seed, node).
       val tentative = frontier.join(e, "sp_node")
@@ -89,24 +89,18 @@ object Sssp {
           (col("sp_cost") + col("sp_w")).as("sp_cost"))
         .groupBy("sp_seed", "sp_node")
         .agg(min("sp_cost").as("sp_cost"))
-      // convergence test folded into the checkpoint job (LoopObs): the
-      // improvement count is observed during materialization instead of
+      // the improvement count is observed on the cut job instead of
       // re-counted by a second action
-      val obs = org.apache.spark.sql.Observation(s"sssp_round_$round")
-      val improved = Frames.cut(tentative
+      val (improved, n) = loop.observedCut(tentative
         .join(dist.withColumnRenamed("sp_cost", "sp_old"),
           Seq("sp_seed", "sp_node"), "left")
         .filter(col("sp_old").isNull || col("sp_cost") < col("sp_old"))
-        .select("sp_seed", "sp_node", "sp_cost")
-        .observe(obs, count(lit(1)).as("n")))
-      settled = LoopObs.count(obs, improved) == 0L
-      if (!settled) {
-        dist = Frames.cut(dist
+        .select("sp_seed", "sp_node", "sp_cost"), count(lit(1)))
+      if (n == 0L) ((dist, frontier), true)
+      else ((loop.cut(dist
           .join(improved.select("sp_seed", "sp_node"),
             Seq("sp_seed", "sp_node"), "left_anti")
-          .union(improved))
-        frontier = improved
-      }
+          .union(improved)), improved), false)
     }
     e.unpersist(blocking = false)
     dist

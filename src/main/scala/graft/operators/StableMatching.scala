@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -33,9 +33,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale design (100 TB):
   *   - per round: ONE Spark job, constant-size plan. The proposal
-  *     count that certifies termination rides the round's checkpoint
-  *     job as a CollectMetrics observation (`Observation`) instead of
-  *     a separate `isEmpty` action; the new hold table is the job's
+  *     count that certifies termination is observed on the round's
+  *     cut job ([[Fixpoint.observedCut]]; each new hold row carries
+  *     the number of proposals its acceptor received) instead of a
+  *     separate `isEmpty` action; the new hold table is the job's
   *     materialized output. Inside the job: one acceptor-keyed join
   *     deriving the ledger from the previous (checkpointed) holds,
   *     one anti-join against it, one map-side-combining min per
@@ -68,19 +69,13 @@ import org.apache.spark.storage.StorageLevel
   *   - the loop's shuffle width is sized from the market row count
   *     (restored on exit), and AQE is disabled inside the loop: the
   *     round jobs are latency-bound, and AQE's empty-relation
-  *     propagation erases the CollectMetrics node at the termination
-  *     round (pinned by TextDedupSpec's zero-candidate test). The
-  *     observed count is read with a BOUNDED await on the
-  *     observation future, NOT `get`:
-  *     under a caller-configured session with AQE on, an erased node
-  *     leaves the observation promise forever incomplete — `get`
-  *     would hang the loop at the termination round instead of
-  *     reaching the absent-metric fallback (the round-11 ADVICE
-  *     finding).
-  *   - every superseded checkpoint frame (previous holds, the
-  *     pre-compaction prefs) is freed the moment its successor is
-  *     materialized ([[Frames.freeCheckpoint]]) — long loops must not
-  *     lease storage memory to driver-GC timing.
+  *     propagation would erase the CollectMetrics node at the
+  *     termination round (pinned by TextDedupSpec's zero-candidate
+  *     test).
+  *   - every superseded cut (previous holds, the pre-compaction
+  *     prefs) is freed by [[Fixpoint]] the moment its successor is
+  *     materialized — long loops must not lease storage memory to
+  *     driver-GC timing.
   *   - if the round cap is exhausted while free proposers still have
   *     acceptors left to try, the "stable matching" contract cannot be
   *     met and the loop THROWS (the [[ConnectedComponents]]
@@ -160,134 +155,87 @@ object StableMatching {
     val cap =
       if (maxRounds > 0) maxRounds
       else math.min(prefRows + 1L, Int.MaxValue.toLong).toInt
-    LoopTuning.withLoopConf(spark, prefRows) {
-      // held: current (acceptor, proposer) holds with both ranks.
-      var held = spark.emptyDataset[(Long, Long, Long, Long)]
-        .toDF("sm_p", "sm_a", "sm_rp", "sm_ra")
-      // livePf: the working preference frame — starts as the full
-      // market, shrinks at each compaction to the pairs not yet
-      // provably rejected. All downstream joins key on it.
-      var livePf = pf
-      var liveRows = prefRows
-      var pfReleased = false
-      def releasePf(): Unit = if (!pfReleased) {
-        pf.unpersist(blocking = false); pfReleased = true
-      }
+    val loop = new Fixpoint(spark)
+    loop.run(prefRows) {
       // rejected: pairs that can never match. Derived, not
       // accumulated: holds only improve, so the CURRENT hold table
       // subsumes every earlier rejection at its acceptor. Aliased to
       // fresh attribute names so the livePf-vs-livePf self-reference
-      // below never asks DeduplicateRelations to rewrite across the
+      // never asks DeduplicateRelations to rewrite across a
       // CollectMetrics node (it refuses — metric names must stay
       // unique — and fails analysis).
       def rejectedFrom(from: DataFrame, h: DataFrame): DataFrame = from
         .join(h.select(col("sm_a").as("smh_a"), col("sm_ra").as("smh_ra")),
           col("sm_a") === col("smh_a") && col("sm_ra") > col("smh_ra"))
         .select(col("sm_p").as("smr_p"), col("sm_a").as("smr_a"))
-      var rejected = spark.emptyDataset[(Long, Long)]
-        .toDF("smr_p", "smr_a")
-      var round = 0
-      var done = false
-      while (!done && round < cap) {
-        round += 1
-        // Each free proposer's best remaining acceptor. The row count
-        // (the termination certificate) is observed off the same job
-        // that materializes the round's new holds — no separate action.
-        val obs = Observation(s"sm_round_$round")
-        val proposals = livePf
-          .join(rejected,
-            col("sm_p") === col("smr_p") && col("sm_a") === col("smr_a"),
-            "left_anti")
-          .join(held.select("sm_p"), Seq("sm_p"), "left_anti")
-          .groupBy("sm_p")
-          .agg(min(struct(col("sm_rp"), col("sm_a"), col("sm_ra")))
-            .as("pk"))
-          .select(col("sm_p"), col("pk.sm_a").as("sm_a"),
-            col("pk.sm_rp").as("sm_rp"), col("pk.sm_ra").as("sm_ra"))
-          .observe(obs, count(lit(1)).as("sm_n"))
-        // Deferred acceptance: per acceptor, keep the best of (hold ∪
-        // new proposals) by (rank_a, proposer); the rest are covered
-        // by the derived rejection set next round.
-        val contenders = held.union(proposals)
-        val newHeld = Frames.cut(contenders
-          .groupBy("sm_a")
-          .agg(min(struct(col("sm_ra"), col("sm_p"), col("sm_rp")))
-            .as("bk"))
-          .select(col("bk.sm_p").as("sm_p"), col("sm_a"),
-            col("bk.sm_rp").as("sm_rp"), col("bk.sm_ra").as("sm_ra")))
-        // AQE's empty-relation propagation ERASES the CollectMetrics
-        // node when the observed aggregate materializes empty
-        // (TextDedupSpec's zero-candidate test) — AQE is off inside the
-        // loop, but keep the absent-metric fallback so a
-        // caller-configured session can't silently mis-terminate:
-        // absent means "probably empty", confirmed with one isEmpty (at
-        // most once, at termination).
-        // BOUNDED await on the observation future, NOT obs.get: an
-        // erased node never completes the promise, so get would hang
-        // the loop forever at exactly the termination round (round-11
-        // ADVICE finding; getOrEmpty is private[sql], so the bounded
-        // wait is spelled with Await + timeout → -1 fallback). A
-        // spuriously slow listener bus costs one extra isEmpty or one
-        // extra round — never a wrong answer.
-        val observedCount =
-          try {
-            val row = scala.concurrent.Await
-              .result(obs.future, scala.concurrent.duration.Duration(2, "s"))
-            val i = row.schema.fieldIndex("sm_n")
-            row.get(i).asInstanceOf[Number].longValue()
-          } catch {
-            case _: java.util.concurrent.TimeoutException => -1L
-          }
-        val proposalCount =
-          if (observedCount >= 0L) observedCount
-          else if (proposals.isEmpty) 0L
-          else 1L // metric lost but rows exist: run the round normally
-        if (proposalCount == 0L) {
-          done = true
-          // the termination round's fresh hold checkpoint duplicates
-          // the held table it was folded from — drop the copy
-          Frames.freeCheckpoint(newHeld)
-        } else {
-          Frames.freeCheckpoint(held)
-          held = newHeld
-          rejected = rejectedFrom(livePf, newHeld)
+      // the live pairs of free proposers not yet rejected
+      def untried(livePf: DataFrame, rejected: DataFrame,
+          held: DataFrame): DataFrame = livePf
+        .join(rejected,
+          col("sm_p") === col("smr_p") && col("sm_a") === col("smr_a"),
+          "left_anti")
+        .join(held.select("sm_p"), Seq("sm_p"), "left_anti")
+      // state: (held, livePf, its row count, rejected). held holds the
+      // current (proposer, acceptor) pairs with both ranks; livePf is
+      // the working preference frame — the full market at first,
+      // shrunk at each compaction to the pairs not yet provably
+      // rejected. All downstream joins key on it.
+      val init = (spark.emptyDataset[(Long, Long, Long, Long)]
+          .toDF("sm_p", "sm_a", "sm_rp", "sm_ra"), pf, prefRows,
+        spark.emptyDataset[(Long, Long)].toDF("smr_p", "smr_a"))
+      val ((held, livePf, _, rejected), done) = loop.iterate(init, cap)(
+          s => Seq(s._1, s._2, s._4)) {
+        case ((held, livePf, liveRows, rejected), round) =>
+          // Each free proposer's best remaining acceptor.
+          val proposals = untried(livePf, rejected, held)
+            .groupBy("sm_p")
+            .agg(min(struct(col("sm_rp"), col("sm_a"), col("sm_ra")))
+              .as("pk"))
+            .select(col("sm_p"), col("pk.sm_a").as("sm_a"),
+              col("pk.sm_rp").as("sm_rp"), col("pk.sm_ra").as("sm_ra"))
+          // Deferred acceptance: per acceptor, keep the best of (hold ∪
+          // new proposals) by (rank_a, proposer); the rest are covered
+          // by the derived rejection set next round. sm_props counts
+          // the proposals each acceptor received, so their total — the
+          // termination certificate — is observed off the same job
+          // that materializes the round's new holds.
+          val contenders = held.select("sm_p", "sm_a", "sm_rp", "sm_ra")
+            .withColumn("sm_new", lit(0L))
+            .union(proposals.withColumn("sm_new", lit(1L)))
+          val (newHeld, proposed) = loop.observedCut(contenders
+            .groupBy("sm_a")
+            .agg(min(struct(col("sm_ra"), col("sm_p"), col("sm_rp")))
+              .as("bk"), sum(col("sm_new")).as("sm_props"))
+            .select(col("bk.sm_p").as("sm_p"), col("sm_a"),
+              col("bk.sm_rp").as("sm_rp"), col("bk.sm_ra").as("sm_ra"),
+              col("sm_props")), sum(col("sm_props")))
+          if (proposed == 0L) ((held, livePf, liveRows, rejected), true)
           // Live-prefs compaction: rejections are monotone, so pairs
           // rejected once stay rejected — fold them OUT of the working
-          // frame every `compactEvery` rounds and derive all later ledgers
-          // and proposals from the shrunken frame.
-          if (compactEvery > 0 && liveRows > compactMinRows &&
+          // frame every `compactEvery` rounds and derive all later
+          // ledgers and proposals from the shrunken frame.
+          else if (compactEvery > 0 && liveRows > compactMinRows &&
               round % compactEvery == 0) {
-            val shrunk = Frames.cut(livePf.join(rejected,
+            val shrunk = loop.cut(livePf.join(rejectedFrom(livePf, newHeld),
               col("sm_p") === col("smr_p") && col("sm_a") === col("smr_a"),
               "left_anti"))
-            if (livePf ne pf) Frames.freeCheckpoint(livePf) else releasePf()
-            livePf = shrunk
-            liveRows = shrunk.count()
-            rejected = rejectedFrom(livePf, newHeld)
-          }
-        }
+            if (livePf eq pf) pf.unpersist(blocking = false)
+            ((newHeld, shrunk, shrunk.count(), rejectedFrom(shrunk, newHeld)),
+              false)
+          } else
+            ((newHeld, livePf, liveRows, rejectedFrom(livePf, newHeld)), false)
       }
-      if (!done) {
-        // Cap exhausted: if any free proposer still has an untried
-        // acceptor, the matching below would be partial — refuse.
-        val remaining = livePf
-          .join(rejected,
-            col("sm_p") === col("smr_p") && col("sm_a") === col("smr_a"),
-            "left_anti")
-          .join(held.select("sm_p"), Seq("sm_p"), "left_anti")
-          .limit(1).count() > 0L
-        if (remaining) {
-          releasePf()
-          throw new IllegalStateException(
-            s"StableMatching.matching: maxRounds=$cap exhausted " +
-              "with free proposers still holding untried acceptors — the " +
-              "result would not be a stable matching; raise maxRounds " +
-              "(needs >= the longest displacement chain, <= the max " +
-              "preference-list length)")
-        }
-      }
-      if (livePf ne pf) Frames.freeCheckpoint(livePf)
-      releasePf()
+      // Cap exhausted: if any free proposer still has an untried
+      // acceptor, the matching below would be partial — refuse.
+      val partial =
+        !done && untried(livePf, rejected, held).limit(1).count() > 0L
+      pf.unpersist(blocking = false)
+      if (partial) throw new IllegalStateException(
+        s"StableMatching.matching: maxRounds=$cap exhausted " +
+          "with free proposers still holding untried acceptors — the " +
+          "result would not be a stable matching; raise maxRounds " +
+          "(needs >= the longest displacement chain, <= the max " +
+          "preference-list length)")
       held.select(col("sm_p").as("proposer"), col("sm_a").as("acceptor"),
         col("sm_rp").as("rank_p"), col("sm_ra").as("rank_a"))
     }

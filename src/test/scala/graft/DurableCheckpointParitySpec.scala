@@ -20,10 +20,11 @@ import graft.queries.QueryRegistry
   * the one documented exemption (its durability is the streaming state
   * table — see the call-site comment in StreamingClusters.processBatch).
   *
-  * Two cases close the file: a cut, in either mode, delivers the
-  * `observe()` metrics of the frame it materializes (what LoopObs relies
-  * on), and a loop deletes the checkpoint-dir files of the reliable
-  * cuts it supersedes.
+  * Three cases close the file: a cut, in either mode, delivers the
+  * `observe()` metrics of the frame it materializes (what
+  * `Fixpoint.observedCut` relies on), and every loop operator frees the
+  * cuts its result does not read — the checkpoint-dir files of reliable
+  * cuts, the cached blocks of local ones.
   */
 class DurableCheckpointParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -149,12 +150,18 @@ class DurableCheckpointParitySpec extends AnyFunSuite {
   cases.foreach { case (name, op) => test(name)(parity(name)(op)) }
 
   test("a cut delivers its frame's observe() metrics in both modes") {
+    // Fixpoint.observedCut reads its metric off the cut job; the
+    // recomputation it falls back to must not be what answers here
     def observedCount(df: DataFrame): Long = {
       val obs = Observation()
       val cut = Frames.cut(df.observe(obs, count(lit(1)).as("n")))
-      val n = LoopObs.metric(obs)(
-        fail("the observed metric never arrived from the cut job"))
+      val n = Fixpoint.delivered(obs).getOrElse(
+        fail("the observed metric never arrived from the cut job")).getLong(0)
       assert(cut.count() === n)
+      val (driverCut, driverN) =
+        new Fixpoint(spark).observedCut(df, count(lit(1)))
+      assert(driverN === n)
+      assert(driverCut.count() === n)
       n
     }
     def bothCases(): Unit = {
@@ -172,36 +179,101 @@ class DurableCheckpointParitySpec extends AnyFunSuite {
     }
   }
 
+  /** One call of every loop operator, mostly on chain-shaped inputs:
+    * every round cuts and supersedes the previous round's cut. */
+  private lazy val loopCases: Seq[(String, () => DataFrame)] = {
+    val chain = (0L until 11L).map(i => (i, i + 1))
+    val nodes = (0L to 11L).toDF("id")
+    val weighted = chain.map { case (a, b) => (a, b, 10L + a) }
+      .toDF("src", "dst", "w")
+    Seq(
+      // a 200-edge chain: ~8 propagation rounds
+      "ConnectedComponents.labels" -> (() =>
+        ConnectedComponents.labels(
+          sym((0L until 200L).map(i => (i, i + 1))), (0L to 200L).toDF("id"))),
+      // 60 hops: one level per hop, then one empty level at exhaustion
+      "Bfs.distances" -> (() =>
+        Bfs.distances((0L until 60L).map(i => (i, i + 1)).toDF("src", "dst"),
+          Seq(0L).toDF("seed"), maxHops = 100)),
+      "Sssp.distances" -> (() =>
+        Sssp.distances(weighted, Seq(0L).toDF("seed"), 100)),
+      // a tail peeled one node per round onto the triangle 9-10-11
+      "KCore.coreEdges" -> (() =>
+        KCore.coreEdges(sym(chain :+ ((9L, 11L))), k = 2)),
+      "LabelPropagation.communities" -> (() =>
+        LabelPropagation.communities(chain.toDF("src", "dst"), nodes)),
+      "Closure.transitiveClosure" -> (() =>
+        Closure.transitiveClosure(chain.toDF("src", "dst"))),
+      "Closure.dagLayers" -> (() =>
+        Closure.dagLayers(chain.toDF("src", "dst"), nodes)),
+      // ascending weights: one dominant edge per round
+      "Matching.matching" -> (() => Matching.matching(weighted)),
+      "Mst.forest" -> (() => Mst.forest(weighted)),
+      "Hits.scoresFp" -> (() =>
+        Hits.scoresFp(chain.toDF("src", "dst"), nodes, iterations = 3)),
+      // a falling series pools a little more every round
+      "Isotonic.fit" -> (() =>
+        Isotonic.fit((0L until 12L).map(x => ("a", x, 100L - x * x))
+          .toDF("k", "x", "y"), "k", "x", "y")),
+      "Betweenness.dependencies" -> (() =>
+        Betweenness.dependencies(sym(chain), Seq(0L, 5L).toDF("id"), 11)),
+      "StableMatching.matching" -> { () =>
+        val prefs = for (p <- 0L until 4L; a <- 100L until 104L)
+          yield (p, a, (p * 3 + a) % 4 + 1, (a * 5 + p) % 4 + 1)
+        StableMatching.matching(prefs.toDF("p", "a", "rp", "ra"),
+          compactEvery = 1, compactMinRows = 0L)
+      },
+      "Mmr.select" -> { () =>
+        val cand = Seq((1L, 10L, 900L), (1L, 11L, 880L), (1L, 12L, 500L),
+          (2L, 20L, 700L), (2L, 21L, 650L)).toDF("q_id", "vec_id", "rel_fp")
+        val pairs = Seq((1L, 10L, 11L, 870L), (1L, 11L, 10L, 870L),
+            (1L, 10L, 12L, 100L), (1L, 12L, 10L, 100L),
+            (1L, 11L, 12L, 120L), (1L, 12L, 11L, 120L),
+            (2L, 20L, 21L, 300L), (2L, 21L, 20L, 300L))
+          .toDF("q_id", "a", "b", "sim_fp")
+        Mmr.select(cand, pairs, 3)
+      })
+  }
+
+  private def leafRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+
   test("loops delete the reliable cuts they supersede") {
     import scala.jdk.CollectionConverters._
     def rddDirs(dir: java.nio.file.Path): Int =
       java.nio.file.Files.walk(dir).iterator().asScala
         .count(p => java.nio.file.Files.isDirectory(p) &&
           p.getFileName.toString.startsWith("rdd-"))
-    def checkpointedLeaves(df: DataFrame): Int =
-      df.queryExecution.analyzed.collectLeaves().flatMap {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.getCheckpointFile
-        case _ => None
-      }.distinct.size
-    TestSpark.withCheckpointDir { dir =>
-      // a 200-edge chain: every propagation round cuts, and each round
-      // supersedes the previous round's cut
-      val cc = ConnectedComponents.labels(
-        sym((0L until 200L).map(i => (i, i + 1))), (0L to 200L).toDF("id"))
-      assert(cc.count() === 201L)
-      val ccLeaves = checkpointedLeaves(cc)
-      assert(rddDirs(dir) <= ccLeaves,
-        s"ConnectedComponents.labels left ${rddDirs(dir)} rdd dirs for " +
-          s"$ccLeaves checkpointed leaves")
-      // 60 hops: one level per hop, then one empty level at exhaustion
-      val bfs = Bfs.distances((0L until 60L).map(i => (i, i + 1))
-        .toDF("src", "dst"), Seq(0L).toDF("seed"), maxHops = 100)
-      assert(bfs.count() === 61L)
-      val bfsLeaves = checkpointedLeaves(bfs)
-      assert(rddDirs(dir) <= ccLeaves + bfsLeaves,
-        s"Bfs.distances left ${rddDirs(dir) - ccLeaves} rdd dirs for " +
-          s"$bfsLeaves checkpointed leaves")
+    val leaks = loopCases.flatMap { case (name, op) =>
+      TestSpark.withCheckpointDir { dir =>
+        val out = op()
+        out.count()
+        val leaves = leafRdds(out).flatMap(_.getCheckpointFile).distinct.size
+        val dirs = rddDirs(dir)
+        if (dirs <= leaves) None
+        else Some(s"$name left $dirs rdd dirs for $leaves checkpointed " +
+          "leaves of its result")
+      }
     }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
+  test("loops free the local cuts they supersede") {
+    // every RDD a call leaves persisted must be a cut its result reads:
+    // superseded local cuts and the loops' own persists are all freed
+    val sc = spark.sparkContext
+    val leaks = loopCases.flatMap { case (name, op) =>
+      val before = sc.getPersistentRDDs.keySet
+      val out = op()
+      out.count()
+      val left = sc.getPersistentRDDs.keySet -- before --
+        leafRdds(out).map(_.id)
+      if (left.isEmpty) None
+      else Some(s"$name left ${left.size} persisted RDDs its result " +
+        "does not read")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 }

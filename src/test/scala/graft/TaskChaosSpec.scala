@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{ConnectedComponents, Mst}
+import graft.operators.{ConnectedComponents, Mst, Sssp}
 import graft.streaming.StreamingEwma
 import graft.streaming.StreamingEwma.{EwmaReading, ValueEvent}
 
@@ -68,6 +68,25 @@ class TaskChaosSpec extends AnyFunSuite {
     val injected = Mst.forest(chaosEdges)
       .as[(Long, Long, Long)].collect().sorted
     assert(injected === clean, "task retry changed the MST forest")
+  }
+
+  test("Sssp.distances survives first-attempt task failures " +
+      "bit-identically") {
+    // the loop frees each superseded cut once the next state is
+    // materialized: a retried task must never find a cut it reads freed
+    val edges = (0L until 60L).flatMap(i =>
+      Seq((i, (i + 1) % 60L, (i * 7 + 3) % 50L + 1L),
+        (i, (i + 13) % 60L, (i * 11 + 5) % 50L + 1L)))
+      .toDF("src", "dst", "w")
+    val seeds = Seq(0L, 30L).toDF("id")
+    val clean = Sssp.distances(edges, seeds, 20)
+      .as[(Long, Long, Long)].collect().sorted
+    val chaosEdges = edges.as[(Long, Long, Long)].mapPartitions(chaos _)
+      .toDF("src", "dst", "w")
+    val injected = Sssp.distances(chaosEdges, seeds, 20)
+      .as[(Long, Long, Long)].collect().sorted
+    assert(injected === clean, "task retry changed the SSSP distances")
+    assert(clean.length === 120, "fixture sanity: every node is reached")
   }
 
   test("StreamingEwma emits identical readings under task chaos") {
