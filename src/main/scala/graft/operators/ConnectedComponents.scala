@@ -36,11 +36,11 @@ import org.apache.spark.storage.StorageLevel
   *     one extra keyed self-join per round — cheap against halving the
   *     round count, since per-round fixed cost (3 shuffles + 1 action)
   *     dominates at every scale where the loop isn't data-bound.
-  *   - lineage is cut EVERY round at the pre-jump labeling: the jump
-  *     joins that frame with itself, so without a leaf boundary the
+  *   - lineage is cut EVERY round at the new labeling, with the
+  *     changed-row count observed on its job: the jump joins the
+  *     pre-jump labeling with itself, so without a leaf boundary the
   *     logical plan would DOUBLE per round — exponential driver-side
-  *     analysis cost. The new labeling is cut too, with the
-  *     changed-row count observed on its job; [[Fixpoint]] frees both
+  *     analysis cost. One |V|-row cut per round; [[Fixpoint]] frees it
   *     once the next round's labeling is materialized.
   */
 object ConnectedComponents {
@@ -100,14 +100,14 @@ object ConnectedComponents {
           val nbrMin = sym.join(nbrLabels, "cc_nbr")
             .groupBy("cc_id")
             .agg(min(col("cc_nbr_label")).as("cc_nbr_min"))
-          // eager cut: the pointer jump below joins cand with ITSELF,
-          // so without a leaf boundary the logical plan doubles every
-          // round — exponential tree growth that stalls the DRIVER in
-          // plan analysis long before any data moves
-          val cand = loop.cut(labeled.join(nbrMin, Seq("cc_id"), "left")
+          // not cut: the pointer jump below joins cand with ITSELF, so
+          // a round's plan holds two copies of it, but the round's
+          // labeling is cut below, so the plan stays constant-size
+          // across rounds instead of doubling
+          val cand = labeled.join(nbrMin, Seq("cc_id"), "left")
             .select(col("cc_id"), col("cc_label").as("cc_old"),
               least(col("cc_label"), coalesce(col("cc_nbr_min"), col("cc_label")))
-                .as("cc_mid")))
+                .as("cc_mid"))
           // 2. pointer jump: label(v) ← min(cc_mid(v), cc_mid(cc_mid(v))).
           //    Every label IS a node id of the same component, so looking
           //    the label up in the labeling doubles the distance already
@@ -119,7 +119,8 @@ object ConnectedComponents {
             .select(col("cc_id").as("cc_jump_key"), col("cc_mid").as("cc_jump_label"))
           val label =
             least(col("cc_mid"), coalesce(col("cc_jump_label"), col("cc_mid")))
-          // the changed-row count rides the cut job of the new labeling
+          // the round's one cut: the new labeling, with the
+          // changed-row count riding its job
           val (next, changed) = loop.observedCut(cand
             .join(jump.withColumnRenamed("cc_jump_key", "cc_mid"), Seq("cc_mid"), "left")
             .select(col("cc_id"), label.as("cc_label"),

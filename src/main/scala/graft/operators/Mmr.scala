@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -70,7 +70,10 @@ object Mmr {
     // leaves, instead of re-checkpointing the whole growing set every
     // round — per-round writes drop from O(step·groups) to O(groups)
     // rows (the Bfs r14 discipline); same one action per round
-    val init = List(cand.limit(0)
+    // (the empty seed is a local relation with cand's schema, so the
+    // result reads no cut but the picks')
+    val init = List(cand.sparkSession
+      .createDataFrame(java.util.Collections.emptyList[Row](), cand.schema)
       .select(col("q_id"), col("vec_id"), lit(0L).as("step"),
         lit(0L).as("score_fp")))
     val (parts, _) = loop.iterate(init, k)(cand :: pairs :: _) {

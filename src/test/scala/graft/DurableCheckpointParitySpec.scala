@@ -179,51 +179,60 @@ class DurableCheckpointParitySpec extends AnyFunSuite {
     }
   }
 
+  private val MmrCase = "Mmr.select"
+  private val MmrPicks = 3
+
   /** One call of every loop operator, mostly on chain-shaped inputs:
-    * every round cuts and supersedes the previous round's cut. */
-  private lazy val loopCases: Seq[(String, () => DataFrame)] = {
+    * every round cuts and supersedes the previous round's cut. Each
+    * case carries the row count of its result. */
+  private lazy val loopCases: Seq[(String, Long, () => DataFrame)] = {
     val chain = (0L until 11L).map(i => (i, i + 1))
     val nodes = (0L to 11L).toDF("id")
     val weighted = chain.map { case (a, b) => (a, b, 10L + a) }
       .toDF("src", "dst", "w")
     Seq(
-      // a 200-edge chain: ~8 propagation rounds
-      "ConnectedComponents.labels" -> (() =>
+      // a 200-edge chain: ~8 propagation rounds, one component of 201
+      ("ConnectedComponents.labels", 201L, () =>
         ConnectedComponents.labels(
           sym((0L until 200L).map(i => (i, i + 1))), (0L to 200L).toDF("id"))),
       // 60 hops: one level per hop, then one empty level at exhaustion
-      "Bfs.distances" -> (() =>
+      ("Bfs.distances", 61L, () =>
         Bfs.distances((0L until 60L).map(i => (i, i + 1)).toDF("src", "dst"),
           Seq(0L).toDF("seed"), maxHops = 100)),
-      "Sssp.distances" -> (() =>
+      ("Sssp.distances", 12L, () =>
         Sssp.distances(weighted, Seq(0L).toDF("seed"), 100)),
-      // a tail peeled one node per round onto the triangle 9-10-11
-      "KCore.coreEdges" -> (() =>
+      // a tail peeled one node per round onto the triangle 9-10-11,
+      // whose 3 edges are the 2-core (6 rows, symmetric)
+      ("KCore.coreEdges", 6L, () =>
         KCore.coreEdges(sym(chain :+ ((9L, 11L))), k = 2)),
-      "LabelPropagation.communities" -> (() =>
+      ("LabelPropagation.communities", 12L, () =>
         LabelPropagation.communities(chain.toDF("src", "dst"), nodes)),
-      "Closure.transitiveClosure" -> (() =>
+      // every (u, v) with u < v on the 12-node chain
+      ("Closure.transitiveClosure", 66L, () =>
         Closure.transitiveClosure(chain.toDF("src", "dst"))),
-      "Closure.dagLayers" -> (() =>
+      ("Closure.dagLayers", 12L, () =>
         Closure.dagLayers(chain.toDF("src", "dst"), nodes)),
-      // ascending weights: one dominant edge per round
-      "Matching.matching" -> (() => Matching.matching(weighted)),
-      "Mst.forest" -> (() => Mst.forest(weighted)),
-      "Hits.scoresFp" -> (() =>
+      // ascending weights: one dominant edge per round, (10,11) down
+      // to (0,1)
+      ("Matching.matching", 6L, () => Matching.matching(weighted)),
+      ("Mst.forest", 11L, () => Mst.forest(weighted)),
+      ("Hits.scoresFp", 12L, () =>
         Hits.scoresFp(chain.toDF("src", "dst"), nodes, iterations = 3)),
       // a falling series pools a little more every round
-      "Isotonic.fit" -> (() =>
+      ("Isotonic.fit", 12L, () =>
         Isotonic.fit((0L until 12L).map(x => ("a", x, 100L - x * x))
           .toDF("k", "x", "y"), "k", "x", "y")),
-      "Betweenness.dependencies" -> (() =>
+      // nodes 1..10 lie inside a shortest path from seed 0 or seed 5
+      ("Betweenness.dependencies", 10L, () =>
         Betweenness.dependencies(sym(chain), Seq(0L, 5L).toDF("id"), 11)),
-      "StableMatching.matching" -> { () =>
+      ("StableMatching.matching", 4L, { () =>
         val prefs = for (p <- 0L until 4L; a <- 100L until 104L)
           yield (p, a, (p * 3 + a) % 4 + 1, (a * 5 + p) % 4 + 1)
         StableMatching.matching(prefs.toDF("p", "a", "rp", "ra"),
           compactEvery = 1, compactMinRows = 0L)
-      },
-      "Mmr.select" -> { () =>
+      }),
+      // k = 3 picks for group 1, group 2 exhausts after its 2
+      (MmrCase, 5L, { () =>
         val cand = Seq((1L, 10L, 900L), (1L, 11L, 880L), (1L, 12L, 500L),
           (2L, 20L, 700L), (2L, 21L, 650L)).toDF("q_id", "vec_id", "rel_fp")
         val pairs = Seq((1L, 10L, 11L, 870L), (1L, 11L, 10L, 870L),
@@ -231,8 +240,8 @@ class DurableCheckpointParitySpec extends AnyFunSuite {
             (1L, 11L, 12L, 120L), (1L, 12L, 11L, 120L),
             (2L, 20L, 21L, 300L), (2L, 21L, 20L, 300L))
           .toDF("q_id", "a", "b", "sim_fp")
-        Mmr.select(cand, pairs, 3)
-      })
+        Mmr.select(cand, pairs, MmrPicks)
+      }))
   }
 
   private def leafRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
@@ -246,11 +255,14 @@ class DurableCheckpointParitySpec extends AnyFunSuite {
       java.nio.file.Files.walk(dir).iterator().asScala
         .count(p => java.nio.file.Files.isDirectory(p) &&
           p.getFileName.toString.startsWith("rdd-"))
-    val leaks = loopCases.flatMap { case (name, op) =>
+    val leaks = loopCases.flatMap { case (name, rows, op) =>
       TestSpark.withCheckpointDir { dir =>
         val out = op()
-        out.count()
+        assert(out.count() === rows, name)
         val leaves = leafRdds(out).flatMap(_.getCheckpointFile).distinct.size
+        // Mmr's result is the union of its picks' cuts: one leaf per
+        // pick round, and none for the empty seed or the input cuts
+        if (name == MmrCase) assert(leaves === MmrPicks, name)
         val dirs = rddDirs(dir)
         if (dirs <= leaves) None
         else Some(s"$name left $dirs rdd dirs for $leaves checkpointed " +
@@ -264,10 +276,10 @@ class DurableCheckpointParitySpec extends AnyFunSuite {
     // every RDD a call leaves persisted must be a cut its result reads:
     // superseded local cuts and the loops' own persists are all freed
     val sc = spark.sparkContext
-    val leaks = loopCases.flatMap { case (name, op) =>
+    val leaks = loopCases.flatMap { case (name, rows, op) =>
       val before = sc.getPersistentRDDs.keySet
       val out = op()
-      out.count()
+      assert(out.count() === rows, name)
       val left = sc.getPersistentRDDs.keySet -- before --
         leafRdds(out).map(_.id)
       if (left.isEmpty) None
